@@ -17,6 +17,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aos_spark.io.local_frame import literal_frame
+
 RUN_LOG_SCHEMA = (
     "run_id STRING, storm STRING, forecast_time STRING, status STRING, "
     "started_at TIMESTAMP, finished_at TIMESTAMP, runtime_seconds DOUBLE, "
@@ -41,7 +43,7 @@ def _read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
     import os as _os
 
     if not _os.path.exists(path.removeprefix("file://")):
-        return spark.createDataFrame([], schema)
+        return literal_frame(spark, [], schema)
     return spark.read.parquet(path)
 
 
@@ -55,9 +57,8 @@ def log_run_start(
     """S19: append an IN_PROGRESS row; returns the run id."""
     run_id = uuid.uuid4().hex
     row = [(run_id, storm, forecast_time, "IN_PROGRESS", None, None, None, None)]
-    df = (
-        spark.createDataFrame(row, RUN_LOG_SCHEMA)
-        .withColumn("started_at", F.current_timestamp())
+    df = literal_frame(spark, row, RUN_LOG_SCHEMA).withColumn(
+        "started_at", F.current_timestamp()
     )
     df.write.mode("append").parquet(_run_log_path(warehouse))
     return run_id
@@ -73,26 +74,39 @@ def log_run_complete(
     error: str | None = None,
 ) -> None:
     """S19: append the terminal row (append-only log; latest row per run_id
-    wins — resolved at read time, no in-place update needed at scale)."""
-    log = read_run_log(spark, warehouse)
-    started = log.filter(F.col("run_id") == run_id).select(
-        "storm", "forecast_time", "started_at"
-    ).first()
-    row = [
-        (
-            run_id,
-            started["storm"] if started else None,
-            started["forecast_time"] if started else None,
-            "SUCCESS" if success else "FAILURE",
-            started["started_at"] if started else None,
-            None,
-            float(runtime_seconds),
-            error,
-        )
-    ]
-    df = (
-        spark.createDataFrame(row, RUN_LOG_SCHEMA)
-        .withColumn("finished_at", F.current_timestamp())
+    wins — resolved at read time, no in-place update needed at scale).
+
+    The row is built in the JVM: a one-row status frame left-joined to the
+    run's IN_PROGRESS row inside the append job, so the start row's storm,
+    forecast_time and started_at are copied as stored (no driver round
+    trip). An unknown run_id still appends one row, with NULL storm,
+    forecast_time and started_at."""
+    status = literal_frame(
+        spark,
+        [
+            (
+                run_id,
+                "SUCCESS" if success else "FAILURE",
+                float(runtime_seconds),
+                error,
+            )
+        ],
+        "run_id STRING, status STRING, runtime_seconds DOUBLE, error STRING",
+    )
+    started = (
+        read_run_log(spark, warehouse)
+        .filter((F.col("run_id") == run_id) & (F.col("status") == "IN_PROGRESS"))
+        .select("run_id", "storm", "forecast_time", "started_at")
+    )
+    df = status.join(started, "run_id", "left").select(
+        "run_id",
+        "storm",
+        "forecast_time",
+        "status",
+        "started_at",
+        F.current_timestamp().alias("finished_at"),
+        "runtime_seconds",
+        "error",
     )
     df.write.mode("append").parquet(_run_log_path(warehouse))
 
@@ -120,7 +134,8 @@ def signal_pipeline_complete(
 ) -> None:
     """Completion signal row (TC_PIPELINE_COMPLETE_LOG analog,
     main_pipeline.py:528-549) — downstream serving layers poll/stream this."""
-    df = spark.createDataFrame(
+    df = literal_frame(
+        spark,
         [(storm, forecast_time, time.time())],
         "storm STRING, forecast_time STRING, signal_epoch DOUBLE",
     )
@@ -150,11 +165,9 @@ def upsert_country(
     """Registry upsert (country_utils.py CRUD): tiny table, driver-side
     read-modify-write; MERGE on a Delta-capable warehouse."""
     cur = read_countries(spark, warehouse).filter(F.col("country") != country)
-    new = spark.createDataFrame(
-        [(country, active, zoom, initialized)], COUNTRY_SCHEMA
-    )
+    new = literal_frame(spark, [(country, active, zoom, initialized)], COUNTRY_SCHEMA)
     out = cur.unionByName(new).collect()
-    spark.createDataFrame(out, COUNTRY_SCHEMA).coalesce(1).write.mode(
+    literal_frame(spark, out, COUNTRY_SCHEMA).coalesce(1).write.mode(
         "overwrite"
     ).parquet(_registry_path(warehouse))
 

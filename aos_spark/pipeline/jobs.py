@@ -23,6 +23,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aos_spark.io.local_frame import literal_frame
 from aos_spark.io.readers import read_sf_table
 from aos_spark.io.writers import write_view
 from aos_spark.ops import cci, probability, rollup, severity, spatial_assign
@@ -63,8 +64,8 @@ def _facilities(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _zones_df(spark: SparkSession) -> DataFrame:
     from aos_spark.queries import ZONES
 
-    return spark.createDataFrame(
-        ZONES, "zone_id INT, xmin DOUBLE, xmax DOUBLE, ymin DOUBLE, ymax DOUBLE"
+    return literal_frame(
+        spark, ZONES, "zone_id INT, xmin DOUBLE, xmax DOUBLE, ymin DOUBLE, ymax DOUBLE"
     )
 
 
@@ -143,6 +144,14 @@ def _write_admin_layer(spark: SparkSession, warehouse: str, country: str) -> Non
     write_view(out, admin_layer_path(warehouse), partition_cols=["country"])
 
 
+def _with_thresholds(df: DataFrame) -> DataFrame:
+    """One row per input row per wind threshold (an explode of a literal
+    array: no join, and no broadcast job for a 3-row threshold frame)."""
+    return df.withColumn(
+        "wind_threshold", F.explode(F.array(*[F.lit(t) for t in WIND_THRESHOLDS]))
+    )
+
+
 def _member_hits(ev: DataFrame) -> DataFrame:
     """(tile_id, member, wind_threshold) hit triples — the J1 equivalent.
     One scan fans out to all thresholds via an array literal (no per-
@@ -177,8 +186,8 @@ def update(
     A3 admin view → W3/W4 CCI → A5 severity → report JSON → run log.
     """
     t0 = time.time()
-    cand = spark.createDataFrame(
-        [(storm, forecast_time)], "storm STRING, forecast_time STRING"
+    cand = literal_frame(
+        spark, [(storm, forecast_time)], "storm STRING, forecast_time STRING"
     )
     if not rewrite:
         from aos_spark.ops.filters import new_work_antijoin
@@ -206,10 +215,7 @@ def update(
         prob = hits.groupBy("tile_id", "wind_threshold").agg(
             (F.countDistinct("member") / F.lit(float(ENSEMBLE_SIZE))).alias("probability")
         )
-        thresholds_df = spark.createDataFrame(
-            [(t,) for t in WIND_THRESHOLDS], "wind_threshold INT"
-        )
-        tiles_x_th = base.crossJoin(F.broadcast(thresholds_df))
+        tiles_x_th = _with_thresholds(base)
         tile_view = tiles_x_th.join(prob, ["tile_id", "wind_threshold"], "left").fillna(
             {"probability": 0.0}
         )
@@ -308,7 +314,9 @@ def update(
             (F.col("cy") - 50.0).alias("ymin"),
             (F.col("cy") + 50.0).alias("ymax"),
         )
-        env = spatial_assign.bbox_union(boxes, ["member", "wind_threshold"])
+        # one envelope build shared by the facility join and the track view
+        env = spatial_assign.bbox_union(boxes, ["member", "wind_threshold"]).persist()
+        cached.append(env)
         b = F.lit(FACILITY_BUFFER)
         in_env = (
             (F.col("fx") + b >= F.col("xmin"))
@@ -322,8 +330,9 @@ def update(
             .persist()
         )
         cached.append(fac_hits)
+        # cached: the write and the report's two facility passes share it
         fac_view = (
-            fac.crossJoin(F.broadcast(thresholds_df))
+            _with_thresholds(fac)
             .join(
                 fac_hits.groupBy("facility_id", "wind_threshold").agg(
                     (F.countDistinct("member") / F.lit(float(ENSEMBLE_SIZE))).alias(
@@ -337,7 +346,9 @@ def update(
             .select("facility_id", "kind", "wind_threshold", "probability")
             .withColumn("storm", F.lit(storm))
             .withColumn("forecast_compact", F.lit(forecast_time))
+            .persist()
         )
+        cached.append(fac_view)
         write_view(
             fac_view,
             os.path.join(warehouse, "views", "facilities"),

@@ -5,6 +5,18 @@ reports.py:627-703) and the None-vs-0 contract (reports.py:29-40,747-773).
 All heavy computation happens in Spark aggregations; only the final ~small
 dict is collected. Deltas come from the PREVIOUS report JSON (same storm,
 forecast_time − 6 h), mirroring load_json_report(date-6h) — not a recompute.
+
+Each section is one Spark pass, so a report costs seven collects:
+  * A6 totals and A9 max active threshold — one groupBy(wind_threshold);
+  * A8 top tiles — one ordered limit;
+  * A10 landfall — min(ts) per member, then count/min/max (the first row
+    by (ts, event_id) carries the member's min ts, so no window);
+  * admin rows — one filter;
+  * A7 poverty and urban/rural bands — one groupBy(section, band) over
+    the key-threshold tiles, each tile yielding a row per breakdown;
+  * facilities — one groupBy(kind, wind_threshold) sum (it also lists the
+    available thresholds, so the lowest-threshold fallback stays exact)
+    and one top-K window at the chosen threshold.
 """
 
 from __future__ import annotations
@@ -93,7 +105,9 @@ def build_report(
     vulnerability breakdowns (A7/F8, reports.py:393-462), per-facility-type
     top-5 lists and expected-impact counts (reports.py:106-143,705-736),
     deltas vs the previous forecast (J13)."""
-    # A6 — ceil'd expected totals per threshold (NULL-safe)
+    # A6 + A9 — one pass per threshold: ceil'd expected totals (NULL-safe)
+    # and whether the threshold carries any probability mass; the highest
+    # such threshold is the max active threshold
     totals = {
         int(r["wind_threshold"]): r.asDict()
         for r in tile_view.groupBy("wind_threshold")
@@ -104,18 +118,13 @@ def build_report(
             F.sum(F.col("E_built_surface").cast("decimal(18,6)"))
             .cast("double")
             .alias("E_built_surface"),
+            (F.sum("probability") > 0).alias("active"),
         )
         .collect()
     }
-    # A9 — highest threshold with any probability mass
-    max_th_row = (
-        tile_view.groupBy("wind_threshold")
-        .agg(F.sum("probability").alias("p"))
-        .filter(F.col("p") > 0)
-        .agg(F.max("wind_threshold").alias("m"))
-        .first()
+    max_active_threshold = max(
+        (th for th, r in totals.items() if r["active"]), default=None
     )
-    max_active_threshold = _optional(max_th_row["m"]) if max_th_row else None
 
     # A8 — top-K tiles by probability at the key threshold (deterministic
     # tie-break by tile_id)
@@ -127,22 +136,24 @@ def build_report(
         .collect()
     ]
 
-    # A10/W2 — landfall: first event above the key threshold per member
-    from aos_spark.ops.windows import first_match
-
-    firsts = first_match(
-        events.select(
-            F.col("event_type").alias("member"), "ts", "event_id", "value"
-        ),
-        ["member"],
-        ["ts", "event_id"],
-        F.col("value") >= key_threshold,
+    # A10/W2 — landfall: first event above the key threshold per member.
+    # The first row by (ts, event_id) has the member's minimum ts, so a
+    # per-member min() replaces the row_number window; a NULL ts sorts
+    # first, so a member with one keeps NULL as its first ts.
+    ts = F.col("ts")
+    lf = (
+        events.filter(F.col("value") >= key_threshold)
+        .groupBy("event_type")
+        .agg(
+            F.when(F.max(ts.isNull()), None).otherwise(F.min(ts)).alias("ts")
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias("earliest"),
+            F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("latest"),
+        )
+        .first()
     )
-    lf = firsts.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias("earliest"),
-        F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("latest"),
-    ).first()
     landfall = {
         "n_members_making_landfall": int(lf["n"]),
         "landfall_fraction": round(lf["n"] / ensemble_size, 6),
@@ -168,51 +179,64 @@ def build_report(
     # class analog (the domain has no SMOD layer; same de-expected formula,
     # reports.py:416-439). None-vs-0 contract: no banding data at all → None
     # ("N/A"); data present but an empty band → 0 (confirmed zero).
-    from aos_spark.ops.vulnerability import band_sums, poverty_band, urban_rural_class
+    # Both breakdowns come from one pass: each key tile yields one
+    # (section, band) row per breakdown whose banding source is non-NULL.
+    from aos_spark.ops.vulnerability import poverty_band, urban_rural_class
 
     key_tiles = tile_view.filter(
         (F.col("wind_threshold") == key_threshold) & (F.col("probability") > 0)
+    ).withColumn("E_smod_class", F.col("E_built_surface"))
+    sections = F.array(
+        *[
+            F.when(
+                F.col(src).isNotNull(),
+                F.struct(F.lit(name).alias("section"), band.alias("band")),
+            )
+            for name, src, band in [
+                ("poverty", "E_rwi", poverty_band()),
+                ("urban_rural", "E_smod_class", urban_rural_class()),
+            ]
+        ]
     )
+    bands: dict = {"poverty": {}, "urban_rural": {}}
+    for r in (
+        key_tiles.select(
+            "E_population",
+            "E_built_surface",
+            F.inline(F.filter(sections, lambda s: s.isNotNull())),
+        )
+        .groupBy("section", "band")
+        .agg(
+            F.sum("E_population").alias("E_population"),
+            F.sum("E_built_surface").alias("E_built_surface"),
+        )
+        .collect()
+    ):
+        bands[r["section"]][r["band"]] = r
     vulnerability: dict = {}
-    rwi_bands = {
-        r["band"]: r
-        for r in band_sums(
-            key_tiles.filter(F.col("E_rwi").isNotNull()),
-            poverty_band(),
-            "band",
-            ["E_population", "E_built_surface"],
-        ).collect()
-    }
-    for band, label in [("poverty", "poverty"), ("severe_poverty", "severe")]:
-        for metric, mlabel in [("E_population", "pop"), ("E_built_surface", "built_surface")]:
-            vulnerability[f"expected_{mlabel}_{label}"] = (
-                _optional_ceil(rwi_bands[band][metric])
-                if band in rwi_bands
-                else (0 if rwi_bands else None)
-            )
-    ur_bands = {
-        r["band"]: r
-        for r in band_sums(
-            key_tiles.withColumn("E_smod_class", F.col("E_built_surface")).filter(
-                F.col("E_smod_class").isNotNull()
-            ),
-            urban_rural_class(),
-            "band",
-            ["E_population", "E_built_surface"],
-        ).collect()
-    }
-    for band in ("urban", "rural"):
-        for metric, mlabel in [("E_population", "pop"), ("E_built_surface", "built_surface")]:
-            vulnerability[f"expected_{mlabel}_{band}"] = (
-                _optional_ceil(ur_bands[band][metric])
-                if band in ur_bands
-                else (0 if ur_bands else None)
-            )
+    for section, labels in [
+        ("poverty", [("poverty", "poverty"), ("severe_poverty", "severe")]),
+        ("urban_rural", [("urban", "urban"), ("rural", "rural")]),
+    ]:
+        found = bands[section]
+        for band, label in labels:
+            for metric, mlabel in [
+                ("E_population", "pop"),
+                ("E_built_surface", "built_surface"),
+            ]:
+                vulnerability[f"expected_{mlabel}_{label}"] = (
+                    _optional_ceil(found[band][metric])
+                    if band in found
+                    else (0 if found else None)
+                )
 
     # per-facility-type top-5 + expected impacted-facility counts
     # (reports.py:705-736: nlargest(5, probability) at the key threshold,
     # falling back to the lowest available threshold; expected count =
-    # ceil(Σ probability); kind with no facility data at all → None)
+    # ceil(Σ probability); kind with no facility data at all → None).
+    # One small (kind, threshold) sum gives both the available thresholds
+    # and the expected counts; one top-K window at the chosen threshold
+    # gives the lists.
     top_facilities: dict = {}
     expected_facilities: dict = {}
     if fac_view is not None:
@@ -220,27 +244,24 @@ def build_report(
 
         from aos_spark.pipeline.jobs import FACILITY_KINDS
 
-        ths = sorted(
-            r["wind_threshold"]
-            for r in fac_view.select("wind_threshold").distinct().collect()
-        )
+        sums = fac_view.groupBy("kind", "wind_threshold").agg(
+            F.sum("probability").alias("p")
+        ).collect()
+        ths = sorted({r["wind_threshold"] for r in sums})
         key_th = key_threshold if key_threshold in ths else (ths[0] if ths else None)
         if key_th is not None:
-            kf = fac_view.filter(F.col("wind_threshold") == key_th)
+            expected = {
+                r["kind"]: r["p"] for r in sums if r["wind_threshold"] == key_th
+            }
             w = Window.partitionBy("kind").orderBy(
                 F.col("probability").desc(), "facility_id"
             )
             top_rows = (
-                kf.withColumn("__rn", F.row_number().over(w))
+                fac_view.filter(F.col("wind_threshold") == key_th)
+                .withColumn("__rn", F.row_number().over(w))
                 .filter(F.col("__rn") <= TOP_K)
                 .collect()
             )
-            sums = {
-                r["kind"]: r
-                for r in kf.groupBy("kind")
-                .agg(F.sum("probability").alias("p"))
-                .collect()
-            }
             for kind in FACILITY_KINDS:
                 rows = sorted(
                     (r for r in top_rows if r["kind"] == kind),
@@ -254,7 +275,7 @@ def build_report(
                     for r in rows
                 ]
                 expected_facilities[f"expected_{kind}"] = (
-                    _optional_ceil(sums[kind]["p"]) if kind in sums else None
+                    _optional_ceil(expected[kind]) if kind in expected else None
                 )
 
     report = {

@@ -5,10 +5,12 @@ from __future__ import annotations
 
 import json
 import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+from aos_spark.io.readers import read_sf_table
 from aos_spark.pipeline import control, jobs
 from aos_spark.report import assemble
 
@@ -16,6 +18,13 @@ SF_DIR = "/root/testdata/sf0.001"
 STORM = "TESTSTORM"
 FC1 = "20240115000000"
 FC2 = "20240115060000"  # 6 h later → delta tracking vs FC1
+FC3 = "20240115120000"
+# report JSONs of the unfused report assembly (one Spark job chain per
+# section) on this warehouse; the fused passes must reproduce them
+GOLDEN = Path(__file__).resolve().parent / "golden"
+# a fresh update on sf0.001 ran 75 jobs with Python-RDD local frames and
+# the unfused report, and 58 after both were replaced
+UPDATE_JOB_BUDGET = 65
 
 
 @pytest.fixture(scope="module")
@@ -152,6 +161,55 @@ def test_report_contents_and_deltas(spark, warehouse):
     )
 
 
+def _view(spark, warehouse, name, forecast):
+    return spark.read.parquet(os.path.join(warehouse, "views", name)).filter(
+        (F.col("storm") == STORM) & (F.col("forecast_compact") == forecast)
+    )
+
+
+def test_report_json_matches_golden(warehouse):
+    for forecast, name in [(FC1, "report_fc1.json"), (FC2, "report_fc2.json")]:
+        with open(assemble.report_path(warehouse, STORM, forecast)) as f:
+            assert f.read() == (GOLDEN / name).read_text(), name
+
+
+@pytest.mark.parametrize(
+    "name,keep",
+    [
+        # no key-threshold rows: the section falls back to the lowest
+        # threshold (50, whose probabilities differ from 150's here)
+        ("report_fallback_threshold.json", f"wind_threshold != {jobs.KEY_THRESHOLD}"),
+        ("report_empty_facilities.json", "false"),
+    ],
+    ids=["fallback_threshold", "empty_facilities"],
+)
+def test_report_facility_section_edge_cases(spark, warehouse, tmp_path, name, keep):
+    report = assemble.build_report(
+        spark,
+        str(tmp_path),
+        STORM,
+        FC1,
+        _view(spark, warehouse, "tiles", FC1),
+        _view(spark, warehouse, "admin", FC1),
+        read_sf_table(spark, SF_DIR, "events"),
+        fac_view=_view(spark, warehouse, "facilities", FC1).filter(keep),
+    )
+    assert json.dumps(report, indent=2, sort_keys=True) == (GOLDEN / name).read_text()
+    if keep == "false":
+        assert report["top_facilities"] == {}
+        assert report["expected_facilities"] == {}
+
+
+def test_update_job_budget(spark, warehouse):
+    """Fixed cost of one update: JVM-only local frames and the fused
+    report keep a fresh update within the job budget."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    res = jobs.update(spark, SF_DIR, warehouse, STORM, FC3)
+    assert res["status"] == "SUCCESS"
+    assert dag.numTotalJobs() - before <= UPDATE_JOB_BUDGET
+
+
 def test_patch_column_and_admin_reagg(spark, warehouse):
     layer = spark.read.parquet(jobs.base_layer_path(warehouse))
     some_tiles = [r["tile_id"] for r in layer.select("tile_id").limit(3).collect()]
@@ -209,3 +267,52 @@ def test_registry_roundtrip(spark, warehouse):
 def test_compact_time_helpers():
     assert assemble.previous_forecast("20240115060000") == "20240115000000"
     assert assemble.human_time("20251015120000") == "October 15, 2025 12:00 UTC"
+
+
+def test_failed_update_logs_start_fields(spark, warehouse, monkeypatch):
+    """The FAILURE row copies storm, forecast_time and started_at from the
+    run's start row, keeps the error text verbatim (no SQL variable
+    substitution), and is the latest status of that forecast."""
+    msg = "boom ${env:HOME} it's a \\ \"quote\""
+
+    def boom(*args, **kwargs):
+        raise RuntimeError(msg)
+
+    monkeypatch.setattr(jobs, "read_sf_table", boom)
+    with pytest.raises(RuntimeError):
+        jobs.update(spark, SF_DIR, warehouse, "FAILSTORM", FC1)
+
+    log = control.read_run_log(spark, warehouse)
+    (start,) = log.filter(
+        (F.col("storm") == "FAILSTORM") & (F.col("status") == "IN_PROGRESS")
+    ).collect()
+    rows = {r["status"]: r for r in log.filter(F.col("run_id") == start["run_id"]).collect()}
+    assert set(rows) == {"IN_PROGRESS", "FAILURE"}
+    fail = rows["FAILURE"]
+    for c in ("storm", "forecast_time", "started_at"):
+        assert fail[c] == start[c]
+    assert fail["error"] == msg
+    assert fail["finished_at"] >= fail["started_at"]
+
+    latest = control.latest_run_status(spark, warehouse).filter(
+        (F.col("storm") == "FAILSTORM") & (F.col("forecast_time") == FC1)
+    ).collect()
+    assert [r["status"] for r in latest] == ["FAILURE"]
+
+
+def test_log_run_complete_unknown_run_id(spark, tmp_path):
+    """An unknown run_id still appends exactly one terminal row, with NULL
+    storm/forecast_time/started_at, whether or not the log exists."""
+    for wh, started in [(str(tmp_path / "fresh"), False), (str(tmp_path / "used"), True)]:
+        if started:
+            control.log_run_start(spark, wh, "S", FC1)
+        control.log_run_complete(
+            spark, wh, "no-such-run", success=True, runtime_seconds=1.5
+        )
+        log = control.read_run_log(spark, wh)
+        assert log.count() == (2 if started else 1)
+        (row,) = log.filter(F.col("run_id") == "no-such-run").collect()
+        assert row["status"] == "SUCCESS"
+        assert row["runtime_seconds"] == 1.5
+        assert (row["storm"], row["forecast_time"], row["started_at"]) == (None,) * 3
+        assert row["finished_at"] is not None
