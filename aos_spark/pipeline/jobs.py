@@ -61,9 +61,19 @@ def _facilities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _zones_df(spark: SparkSession) -> DataFrame:
-    from aos_spark.queries import ZONES
+# Admin zones as axis-aligned boxes in the tile plane (zone_id, xmin, xmax,
+# ymin, ymax) — a fixed literal dim, shared with the spatial-assignment
+# queries and their oracle VALUES list.
+ZONES: list[tuple[int, float, float, float, float]] = [
+    (1, 0.0, 3000.0, 0.0, 500.0),
+    (2, 2500.0, 6000.0, 0.0, 500.0),  # overlaps zone 1 → tie-break path
+    (3, 0.0, 3000.0, 500.0, 1000.0),
+    (4, 3000.0, 6000.0, 400.0, 1000.0),  # overlaps zone 3
+    (5, 8000.0, 9000.0, 0.0, 300.0),  # island: gaps → overlap/nearest paths
+]
 
+
+def zones_df(spark: SparkSession) -> DataFrame:
     return literal_frame(
         spark, ZONES, "zone_id INT, xmin DOUBLE, xmax DOUBLE, ymin DOUBLE, ymax DOUBLE"
     )
@@ -106,7 +116,7 @@ def initialize(spark: SparkSession, sf_dir: str, warehouse: str, country: str = 
         (F.col("cy") - 50.0).alias("bymin"),
         (F.col("cy") + 50.0).alias("bymax"),
     )
-    assigned = spatial_assign.assign_zones_3step(items, _zones_df(spark)).select(
+    assigned = spatial_assign.assign_zones_3step(items, zones_df(spark)).select(
         F.col("item_id").alias("tile_id"), F.col("zone_id").alias("admin_id")
     )
     layer = base.join(assigned, "tile_id", "left").withColumn("country", F.lit(country))
@@ -131,7 +141,7 @@ def _write_admin_layer(spark: SparkSession, warehouse: str, country: str) -> Non
         avg_cols=["rwi"],
         optional_sum_cols=[],
     )
-    zones = _zones_df(spark).select(F.col("zone_id").alias("admin_id"))
+    zones = zones_df(spark).select(F.col("zone_id").alias("admin_id"))
     out = rollup.rollup_preserving_empty(
         zones, agg, ["admin_id"], zero_fill_cols=["population", "built_surface"]
     )

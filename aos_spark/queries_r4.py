@@ -21,6 +21,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from aos_spark.io.readers import read_sf_table
+from aos_spark.queries_core import (
+    ORACLE_DEDUP_CLUSTERS,
+    ORACLE_QUALITY,
+    _embedding_neardup_oracle,
+)
+from aos_spark.registry import register
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -55,6 +61,7 @@ sig AS (
   FROM feats)
 SELECT doc_id, reject_reason IS NULL AS keep, reject_reason FROM sig
 """
+register("corpus_quality_filter", q_corpus_quality_filter, ORACLE_CORPUS_FILTER)
 
 
 def q_vocab_min_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -72,6 +79,7 @@ WITH toks AS (
 d AS (SELECT DISTINCT doc_id, term FROM toks WHERE term <> '')
 SELECT term, COUNT(*) AS df FROM d GROUP BY term HAVING COUNT(*) >= 5
 """
+register("vocab_min_df", q_vocab_min_df, ORACLE_VOCAB)
 
 
 def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -107,6 +115,7 @@ SELECT a.cid AS cluster_id, COUNT(*) AS n_members, e.dim,
 FROM ee e JOIN assigned a USING (vec_id)
 GROUP BY 1, 3
 """
+register("kmeans_lloyd_step", q_kmeans_step, ORACLE_KMEANS)
 
 
 def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -174,6 +183,7 @@ SELECT CAST(SUM(u1) AS BIGINT) AS users_view,
        CAST(SUM(u3) AS BIGINT) AS users_purchase_after_click
 FROM u
 """
+register("funnel_conversion", q_funnel_conversion, ORACLE_FUNNEL)
 
 
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -208,6 +218,7 @@ SELECT cohort AS cohort_day,
 FROM ev JOIN first USING (user_id)
 GROUP BY 1, 2
 """
+register("cohort_retention", q_cohort_retention, ORACLE_COHORT)
 
 
 def q_hll_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -257,6 +268,9 @@ SELECT o_orderstatus, {m} AS m, v_zero, ROUND(raw, 6) AS raw_estimate,
                   ELSE raw END, 6) AS estimate
 FROM est
 """
+
+
+register("sketch_hll_grouped", q_hll_grouped, _hll_grouped_oracle())
 
 
 def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -310,6 +324,7 @@ opening AS (
   WHERE o.c_mktsegment <> s.c_mktsegment)
 SELECT * FROM kept UNION ALL SELECT * FROM closing UNION ALL SELECT * FROM opening
 """
+register("scd2_dimension_history", q_scd2_history, ORACLE_SCD2)
 
 
 def q_incremental_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -345,6 +360,7 @@ SELECT l_returnflag,
        ROUND(CAST(MAX(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE), 4) AS max_value
 FROM lineitem GROUP BY l_returnflag
 """
+register("incremental_agg_merge", q_incremental_revenue, ORACLE_INCREMENTAL)
 
 
 def q_vocab_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -383,6 +399,7 @@ SELECT doc_id,
 FROM tk JOIN ids USING (term)
 GROUP BY doc_id
 """
+register("vocab_encode_tokens", q_vocab_encode, ORACLE_VOCAB_ENCODE)
 
 
 def q_validation_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -424,6 +441,7 @@ UNION ALL
 SELECT 'referential:o_custkey->c_custkey', COUNT(*)
 FROM orders WHERE o_custkey NOT IN (SELECT c_custkey FROM customer)
 """
+register("validation_suite", q_validation_suite, ORACLE_VALIDATION)
 
 
 def q_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -480,6 +498,7 @@ SELECT event_type, n, COALESCE(n_outliers, 0) AS n_outliers,
        ROUND(mu, 6) AS mean_value, ROUND(sigma, 6) AS stddev_value
 FROM s2 LEFT JOIN fl USING (event_type)
 """
+register("zscore_outliers", q_zscore_outliers, ORACLE_ZSCORE)
 
 
 def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -495,16 +514,15 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _triangle_oracle() -> str:
-    # safe at import time: queries_r4 is imported at the BOTTOM of
-    # aos_spark.queries, after _embedding_neardup_oracle is defined
-    from aos_spark.queries import _embedding_neardup_oracle
-
     return f"""
 WITH e AS (SELECT id_a AS a, id_b AS b FROM ({_embedding_neardup_oracle()}))
 SELECT COUNT(*) AS n_triangles
 FROM e e1 JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
           JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b
 """
+
+
+register("graph_triangle_count", q_triangle_count, _triangle_oracle())
 
 
 def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -543,6 +561,9 @@ SELECT lang, COUNT(*) AS n_sampled,
        CAST(SUM(CAST(w AS DECIMAL(28,2))) AS DOUBLE) AS total_weight
 FROM kept GROUP BY lang
 """
+
+
+register("weighted_sample_stats", q_weighted_sample, _weighted_sample_oracle())
 
 
 def q_dedup_resolution(
@@ -594,10 +615,6 @@ def q_dedup_resolution(
 
 
 def _dedup_resolution_oracle() -> str:
-    # safe at import time: queries_r4 is imported at the bottom of
-    # aos_spark.queries, after both oracle texts are defined
-    from aos_spark.queries import ORACLE_DEDUP_CLUSTERS, ORACLE_QUALITY
-
     return f"""
 WITH clu AS (SELECT * FROM ({ORACLE_DEDUP_CLUSTERS})),
 q AS (SELECT doc_id, quality FROM ({ORACLE_QUALITY})),
@@ -612,6 +629,9 @@ SELECT lang, COUNT(*) AS n_docs,
        CAST(SUM(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped
 FROM ranked GROUP BY lang
 """
+
+
+register("dedup_resolution", q_dedup_resolution, _dedup_resolution_oracle())
 
 
 def q_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -635,6 +655,9 @@ SELECT CAST(CAST('0x' || substring(md5('{salt}' || CAST(doc_id AS VARCHAR)), 1, 
        lang, COUNT(*) AS n_docs
 FROM documents GROUP BY 1, 2
 """
+
+
+register("kfold_assignment", q_kfold, _kfold_oracle())
 
 
 def q6_discount_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -668,6 +691,7 @@ FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
   AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24
 """
+register("q6_discount_revenue", q6_discount_revenue, ORACLE_Q6)
 
 
 def q_json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -698,6 +722,7 @@ SELECT event_type,
 FROM (SELECT event_type, CAST(props->>'k' AS INT) AS k FROM events)
 GROUP BY event_type
 """
+register("json_props_stats", q_json_props_stats, ORACLE_JSON_PROPS)
 
 
 def q_rollup_time_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -730,6 +755,7 @@ FROM (
   FROM orders)
 GROUP BY ROLLUP (o_year, o_month)
 """
+register("rollup_time_hierarchy", q_rollup_time_hierarchy, ORACLE_ROLLUP)
 
 
 def q_bag_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -758,6 +784,7 @@ FROM (
   SELECT l_suppkey FROM lineitem WHERE EXTRACT(year FROM l_shipdate) = 1998)
 GROUP BY l_suppkey
 """
+register("bag_difference_except_all", q_bag_difference, ORACLE_BAG_DIFF)
 
 
 def q_reconcile_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -818,6 +845,7 @@ SELECT COALESCE(a.bucket, p.bucket) AS bucket,
         AND COALESCE(a.checksum, 0) = COALESCE(p.checksum, 0)) AS match
 FROM a FULL OUTER JOIN p ON a.bucket = p.bucket
 """
+register("reconcile_tables", q_reconcile_tables, ORACLE_RECONCILE)
 
 
 def q_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -847,6 +875,7 @@ SELECT prev + 1 AS gap_start, event_id - 1 AS gap_end,
        event_id - prev - 1 AS gap_len
 FROM l WHERE prev IS NOT NULL AND event_id - prev > 1
 """
+register("sequence_gap_detection", q_sequence_gaps, ORACLE_SEQUENCE_GAPS)
 
 
 def q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -886,6 +915,9 @@ FROM (
 """
 
 
+register("sketch_quantile_histogram", q_quantile_sketch, _quantile_sketch_oracle())
+
+
 def q_range_frame_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE-frame window (vs the ROWS frames elsewhere): per customer,
     total order value over the trailing 7 DAYS — a value-based frame, so
@@ -921,6 +953,7 @@ SELECT o_custkey, CAST(o_orderdate AS DATE) AS o_day, o_orderkey,
              AS DOUBLE), 2) AS spend_7d
 FROM orders
 """
+register("range_frame_window_spend", q_range_frame_spend, ORACLE_RANGE_FRAME)
 
 
 def q_cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -965,6 +998,7 @@ feed AS (
 SELECT op, COUNT(*) AS n_rows, CAST(SUM(k) AS BIGINT) AS key_checksum
 FROM feed WHERE op IS NOT NULL GROUP BY op
 """
+register("cdc_snapshot_diff", q_cdc_snapshot_diff, ORACLE_CDC)
 
 
 def q_overlapping_order_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1005,60 +1039,8 @@ FROM o a JOIN o b
  AND a.d0 < b.d1 AND b.d0 < a.d1
 GROUP BY a.o_custkey
 """
+register(
+    "overlapping_order_windows", q_overlapping_order_windows, ORACLE_OVERLAP_WINDOWS
+)
 
 
-R4_QUERIES = {
-    "corpus_quality_filter": q_corpus_quality_filter,
-    "vocab_min_df": q_vocab_min_df,
-    "kmeans_lloyd_step": q_kmeans_step,
-    "funnel_conversion": q_funnel_conversion,
-    "cohort_retention": q_cohort_retention,
-    "sketch_hll_grouped": q_hll_grouped,
-    "scd2_dimension_history": q_scd2_history,
-    "incremental_agg_merge": q_incremental_revenue,
-    "vocab_encode_tokens": q_vocab_encode,
-    "validation_suite": q_validation_suite,
-    "zscore_outliers": q_zscore_outliers,
-    "graph_triangle_count": q_triangle_count,
-    "weighted_sample_stats": q_weighted_sample,
-    "dedup_resolution": q_dedup_resolution,
-    "kfold_assignment": q_kfold,
-    "q6_discount_revenue": q6_discount_revenue,
-    "json_props_stats": q_json_props_stats,
-    "rollup_time_hierarchy": q_rollup_time_hierarchy,
-    "bag_difference_except_all": q_bag_difference,
-    "reconcile_tables": q_reconcile_tables,
-    "sequence_gap_detection": q_sequence_gaps,
-    "sketch_quantile_histogram": q_quantile_sketch,
-    "range_frame_window_spend": q_range_frame_spend,
-    "cdc_snapshot_diff": q_cdc_snapshot_diff,
-    "overlapping_order_windows": q_overlapping_order_windows,
-}
-
-R4_ORACLES = {
-    "corpus_quality_filter": ORACLE_CORPUS_FILTER,
-    "vocab_min_df": ORACLE_VOCAB,
-    "kmeans_lloyd_step": ORACLE_KMEANS,
-    "funnel_conversion": ORACLE_FUNNEL,
-    "cohort_retention": ORACLE_COHORT,
-    "sketch_hll_grouped": _hll_grouped_oracle(),
-    "scd2_dimension_history": ORACLE_SCD2,
-    "incremental_agg_merge": ORACLE_INCREMENTAL,
-    "vocab_encode_tokens": ORACLE_VOCAB_ENCODE,
-    "validation_suite": ORACLE_VALIDATION,
-    "zscore_outliers": ORACLE_ZSCORE,
-    "graph_triangle_count": _triangle_oracle(),
-    "weighted_sample_stats": _weighted_sample_oracle(),
-    "dedup_resolution": _dedup_resolution_oracle(),
-    "kfold_assignment": _kfold_oracle(),
-    "q6_discount_revenue": ORACLE_Q6,
-    "json_props_stats": ORACLE_JSON_PROPS,
-    "rollup_time_hierarchy": ORACLE_ROLLUP,
-    "bag_difference_except_all": ORACLE_BAG_DIFF,
-    "reconcile_tables": ORACLE_RECONCILE,
-    "sequence_gap_detection": ORACLE_SEQUENCE_GAPS,
-    "sketch_quantile_histogram": _quantile_sketch_oracle(),
-    "range_frame_window_spend": ORACLE_RANGE_FRAME,
-    "cdc_snapshot_diff": ORACLE_CDC,
-    "overlapping_order_windows": ORACLE_OVERLAP_WINDOWS,
-}

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aos_spark.io.readers import read_sf_table
+from aos_spark.queries_core import ORACLE_QUALITY
+from aos_spark.registry import register
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -71,6 +73,7 @@ SELECT doc_id,
        CAST(SUM(is_keeper * span_len) AS BIGINT) / CAST(MIN(n_tokens) AS BIGINT) AS retained_frac
 FROM flagged GROUP BY doc_id
 """
+register("span_dedup_retention", q_span_dedup_retention, ORACLE_SPAN_DEDUP)
 
 
 def q_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -102,6 +105,7 @@ FROM orders
 WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
 GROUP BY o_orderpriority
 """
+register("bloom_semijoin_prune", q_bloom_semijoin, ORACLE_BLOOM_SEMIJOIN)
 
 
 def q_bigram_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -129,6 +133,7 @@ SELECT o.doc_id, COUNT(*) AS n_bigrams,
 FROM occ o JOIN counts c USING (g)
 GROUP BY o.doc_id
 """
+register("lm_bigram_rarity", q_bigram_rarity, ORACLE_BIGRAM_RARITY)
 
 
 def q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -152,6 +157,11 @@ def _random_projection_oracle(out_dim: int = 8, dim: int = 64, seed: int = 5) ->
         "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)\n"
         f"SELECT vec_id,\n       {cols}\nFROM e"
     )
+
+
+register(
+    "embedding_random_projection", q_random_projection, _random_projection_oracle()
+)
 
 
 MIXTURE_TARGETS = {"en": 0.5, "es": 0.2, "fr": 0.2, "de": 0.1}
@@ -187,21 +197,7 @@ FROM shares
 """
 
 
-R5_QUERIES = {
-    "span_dedup_retention": q_span_dedup_retention,
-    "bloom_semijoin_prune": q_bloom_semijoin,
-    "lm_bigram_rarity": q_bigram_rarity,
-    "embedding_random_projection": q_random_projection,
-    "domain_mixture_plan": q_mixture_plan,
-}
-
-R5_ORACLES = {
-    "span_dedup_retention": ORACLE_SPAN_DEDUP,
-    "bloom_semijoin_prune": ORACLE_BLOOM_SEMIJOIN,
-    "lm_bigram_rarity": ORACLE_BIGRAM_RARITY,
-    "embedding_random_projection": _random_projection_oracle(),
-    "domain_mixture_plan": _mixture_oracle(MIXTURE_TARGETS),
-}
+register("domain_mixture_plan", q_mixture_plan, _mixture_oracle(MIXTURE_TARGETS))
 
 
 def _scored_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -289,16 +285,13 @@ def q_quality_decile_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _curation_oracles() -> dict[str, str]:
-    from aos_spark.queries import ORACLE_QUALITY
-
-    scored = f"""
+_CURATION_SCORED = f"""
 scored AS (
   SELECT q.doc_id, q.n_tokens, q.quality, d.lang, d.source
   FROM ({ORACLE_QUALITY}) q JOIN documents d USING (doc_id))
 """
-    per_source_cap = f"""
-WITH {scored},
+ORACLE_PER_SOURCE_CAP = f"""
+WITH {_CURATION_SCORED},
 ranked AS (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY source ORDER BY quality DESC, doc_id ASC) AS rn
   FROM scored)
@@ -307,8 +300,9 @@ SELECT source, COUNT(*) AS n_docs,
        CAST(SUM(CASE WHEN rn <= 15 THEN n_tokens ELSE 0 END) AS BIGINT) AS kept_tokens
 FROM ranked GROUP BY source
 """
-    token_budget = f"""
-WITH {scored},
+register("per_source_cap", q_per_source_cap, ORACLE_PER_SOURCE_CAP)
+ORACLE_TOKEN_BUDGET = f"""
+WITH {_CURATION_SCORED},
 cum AS (
   SELECT lang, n_tokens, quality,
          CAST(SUM(n_tokens) OVER (PARTITION BY lang ORDER BY quality DESC, doc_id ASC
@@ -319,8 +313,9 @@ SELECT lang, COUNT(*) AS n_selected,
        MIN(quality) AS quality_cutoff
 FROM cum WHERE running <= 2000 GROUP BY lang
 """
-    deciles = f"""
-WITH {scored},
+register("token_budget_selection", q_token_budget_selection, ORACLE_TOKEN_BUDGET)
+ORACLE_QUALITY_DECILES = f"""
+WITH {_CURATION_SCORED},
 tiled AS (
   SELECT lang, n_tokens, quality,
          CAST(NTILE(10) OVER (PARTITION BY lang ORDER BY quality DESC, doc_id ASC) AS INTEGER) AS decile
@@ -330,24 +325,7 @@ SELECT lang, decile, COUNT(*) AS n_docs,
        MIN(quality) AS min_quality, MAX(quality) AS max_quality
 FROM tiled GROUP BY lang, decile
 """
-    return {
-        "per_source_cap": per_source_cap,
-        "token_budget_selection": token_budget,
-        "quality_decile_shards": deciles,
-    }
-
-
-R5_QUERIES.update(
-    {
-        "per_source_cap": q_per_source_cap,
-        "token_budget_selection": q_token_budget_selection,
-        "quality_decile_shards": q_quality_decile_shards,
-    }
-)
-# NOTE: _curation_oracles() imports aos_spark.queries — on a DIRECT
-# import of this module that re-enters here circularly and queries.py
-# snapshots R5_QUERIES mid-initialization, so EVERY query registration
-# must happen before that call; it lives at the BOTTOM of this file.
+register("quality_decile_shards", q_quality_decile_shards, ORACLE_QUALITY_DECILES)
 
 
 def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -411,6 +389,9 @@ def _pq_encode_oracle() -> str:
     return codes_sql
 
 
+register("embedding_pq_encode", q_pq_encode, _pq_encode_oracle())
+
+
 def _pq_topk_oracle(top_k: int = 10) -> str:
     codes_sql, frag_values, sub = _pq_sql_parts()
     return f"""
@@ -440,18 +421,9 @@ FROM scored QUALIFY rank <= {top_k}
 """
 
 
-R5_QUERIES.update(
-    {
-        "embedding_pq_encode": q_pq_encode,
-        "sim_pq_topk": q_pq_topk,
-    }
-)
-R5_ORACLES.update(
-    {
-        "embedding_pq_encode": _pq_encode_oracle(),
-        "sim_pq_topk": _pq_topk_oracle(),
-    }
-)
+register("sim_pq_topk", q_pq_topk, _pq_topk_oracle())
+
+
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup at the scale-adaptive regime: n_clusters defaults to
     ceil(sqrt(N)) inside the engine (llm/dedup.semantic_dedup), so the
@@ -496,10 +468,4 @@ SELECT a.vec_id, a.centroid_id AS cluster_id,
        d.vec_id IS NULL AS keep
 FROM assign a LEFT JOIN drops d ON a.vec_id = d.vec_id
 """
-
-
-R5_QUERIES.update({"semantic_dedup": q_semantic_dedup})
-R5_ORACLES.update({"semantic_dedup": ORACLE_SEMANTIC_DEDUP})
-# LAST: triggers the circular import of aos_spark.queries (see the NOTE
-# above) — all R5_QUERIES entries must already be registered by now
-R5_ORACLES.update(_curation_oracles())
+register("semantic_dedup", q_semantic_dedup, ORACLE_SEMANTIC_DEDUP)

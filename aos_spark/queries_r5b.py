@@ -30,6 +30,15 @@ from pyspark.sql import functions as F
 
 from aos_spark.io.readers import read_sf_table
 from aos_spark.ops.exact_round import round_ratio6, round_ratio6_micro
+from aos_spark.queries_core import (
+    ORACLE_SIM_BRUTE,
+    ORACLE_SIM_IVF,
+    _SHINGLES_SQL,
+    _langid_oracle,
+    _minhash_oracle,
+)
+from aos_spark.queries_r5 import MIXTURE_TARGETS
+from aos_spark.registry import register
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -56,6 +65,7 @@ SELECT prev_state, next_state, n_transitions,
        n_transitions / CAST(SUM(n_transitions) OVER (PARTITION BY prev_state) AS DOUBLE) AS prob
 FROM c
 """
+register("event_transition_matrix", q_event_transition_matrix, ORACLE_TRANSITION)
 
 
 def q_user_burst_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -87,6 +97,7 @@ SELECT user_id, COUNT(*) AS n_active_hours,
        CAST(SUM(n) AS BIGINT) AS total_events
 FROM f GROUP BY user_id
 """
+register("user_burst_hours", q_user_burst_hours, ORACLE_BURST)
 
 
 def q_term_postings_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -109,6 +120,7 @@ SELECT term, COUNT(*) AS df, CAST(SUM(tf) AS BIGINT) AS tf_total,
                                       x -> CAST(x AS VARCHAR)), ',') AS postings
 FROM per_doc GROUP BY term HAVING COUNT(*) >= 2
 """
+register("term_postings_index", q_term_postings_index, ORACLE_POSTINGS)
 
 
 def q_order_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -191,6 +203,7 @@ SELECT yr, n, sum_x, sum_y, sum_xy, sum_xx, sum_yy,
                     * ((sum_yy - sum_y * sum_y / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1))), 6) END AS corr_xy
 FROM m
 """
+register("order_autocorrelation", q_order_autocorrelation, ORACLE_AUTOCORR)
 
 
 def q_mad_outlier_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -252,21 +265,7 @@ FROM f GROUP BY g
 """
 
 
-R5B_QUERIES = {
-    "event_transition_matrix": q_event_transition_matrix,
-    "user_burst_hours": q_user_burst_hours,
-    "term_postings_index": q_term_postings_index,
-    "order_autocorrelation": q_order_autocorrelation,
-    "mad_outlier_bounds": q_mad_outlier_bounds,
-}
-
-R5B_ORACLES = {
-    "event_transition_matrix": ORACLE_TRANSITION,
-    "user_burst_hours": ORACLE_BURST,
-    "term_postings_index": ORACLE_POSTINGS,
-    "order_autocorrelation": ORACLE_AUTOCORR,
-    "mad_outlier_bounds": _mad_oracle(),
-}
+register("mad_outlier_bounds", q_mad_outlier_bounds, _mad_oracle())
 
 
 def q_session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -318,6 +317,7 @@ SELECT path, n_sessions,
          AS rank_in_group
 FROM top
 """
+register("session_path_topk", q_session_path_topk, ORACLE_SESSION_PATHS)
 
 
 _SKEW_COLS = ["l_suppkey", "l_partkey", "l_orderkey"]
@@ -349,18 +349,7 @@ FROM (SELECT COUNT(*) AS c FROM lineitem GROUP BY {c})""")
     return "\nUNION ALL\n".join(parts)
 
 
-R5B_QUERIES.update(
-    {
-        "session_path_topk": q_session_path_topk,
-        "key_skew_profile": q_key_skew_profile,
-    }
-)
-R5B_ORACLES.update(
-    {
-        "session_path_topk": ORACLE_SESSION_PATHS,
-        "key_skew_profile": _skew_oracle(_SKEW_COLS),
-    }
-)
+register("key_skew_profile", q_key_skew_profile, _skew_oracle(_SKEW_COLS))
 
 
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -380,12 +369,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _incremental_dedup_oracle(
     num_hashes: int = 16, bands: int = 4, threshold: float = 0.3
 ) -> str:
-    # imported lazily: aos_spark.queries is mid-initialization when this
-    # module loads, but _SHINGLES_SQL is bound well before the
-    # queries_r5b import at its tail (same contract as queries_r5's
-    # _curation_oracles note)
     from aos_spark.llm import dedup as D
-    from aos_spark.queries import _SHINGLES_SQL
 
     rows = num_hashes // bands
     prime = D.MINHASH_PRIME
@@ -448,10 +432,7 @@ WHERE s.bucket >= 80
 """
 
 
-R5B_QUERIES.update({"incremental_dedup_status": q_incremental_dedup})
-R5B_ORACLES.update(
-    {"incremental_dedup_status": _incremental_dedup_oracle()}
-)
+register("incremental_dedup_status", q_incremental_dedup, _incremental_dedup_oracle())
 
 
 def q_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -472,7 +453,6 @@ def _lsh_recall_oracle(
     sample_docs: int | None = 1000,
 ) -> str:
     from aos_spark.llm import dedup as D
-    from aos_spark.queries import _SHINGLES_SQL
 
     rows = num_hashes // bands
     prime = D.MINHASH_PRIME
@@ -545,8 +525,7 @@ FROM counts
 """
 
 
-R5B_QUERIES.update({"lsh_recall_eval": q_lsh_recall_eval})
-R5B_ORACLES.update({"lsh_recall_eval": _lsh_recall_oracle()})
+register("lsh_recall_eval", q_lsh_recall_eval, _lsh_recall_oracle())
 
 
 def q_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -590,8 +569,6 @@ def q_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cross_source_oracle() -> str:
-    from aos_spark.queries import _minhash_oracle
-
     return f"""
 WITH pairs AS ({_minhash_oracle(threshold=0.3)}),
 j AS (
@@ -607,8 +584,7 @@ FROM j GROUP BY source_lo, source_hi
 """
 
 
-R5B_QUERIES.update({"cross_source_dup_matrix": q_cross_source_dup_matrix})
-R5B_ORACLES.update({"cross_source_dup_matrix": _cross_source_oracle()})
+register("cross_source_dup_matrix", q_cross_source_dup_matrix, _cross_source_oracle())
 
 
 def q_pagerank_step(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -680,8 +656,7 @@ FROM outdeg o LEFT JOIN ranks r ON o.src = r.node
 """
 
 
-R5B_QUERIES.update({"graph_pagerank_step": q_pagerank_step})
-R5B_ORACLES.update({"graph_pagerank_step": _pagerank_oracle()})
+register("graph_pagerank_step", q_pagerank_step, _pagerank_oracle())
 
 
 def q_mixture_apply_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -691,7 +666,6 @@ def q_mixture_apply_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     toward the targets. Selection is a pushed filter; the only shuffles
     are the plan's own aggregate and the final rollup."""
     from aos_spark.llm import sampling as S
-    from aos_spark.queries_r5 import MIXTURE_TARGETS
 
     d = _t(spark, sf_dir, "documents")
     plan = S.mixture_plan(d, MIXTURE_TARGETS, domain_col="lang")
@@ -744,10 +718,9 @@ FROM agg, ktot
 """
 
 
-from aos_spark.queries_r5 import MIXTURE_TARGETS as _MIX_TARGETS  # noqa: E402
-
-R5B_QUERIES.update({"mixture_apply_stats": q_mixture_apply_stats})
-R5B_ORACLES.update({"mixture_apply_stats": _mixture_apply_oracle(_MIX_TARGETS)})
+register(
+    "mixture_apply_stats", q_mixture_apply_stats, _mixture_apply_oracle(MIXTURE_TARGETS)
+)
 
 
 def q_monthly_growth_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -813,10 +786,7 @@ SELECT nation, month, revenue, prev_revenue,
             END AS mom_growth
 FROM g
 """
-
-
-R5B_QUERIES.update({"monthly_growth_by_nation": q_monthly_growth_by_nation})
-R5B_ORACLES.update({"monthly_growth_by_nation": ORACLE_MONTHLY_GROWTH})
+register("monthly_growth_by_nation", q_monthly_growth_by_nation, ORACLE_MONTHLY_GROWTH)
 
 
 def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -852,8 +822,6 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_recall_oracle() -> str:
-    from aos_spark.queries import ORACLE_SIM_BRUTE, ORACLE_SIM_IVF
-
     return f"""
 WITH truth AS ({ORACLE_SIM_BRUTE}),
 approx AS ({ORACLE_SIM_IVF}),
@@ -868,8 +836,7 @@ FROM pt LEFT JOIN ph ON pt.query_id = ph.query_id
 """
 
 
-R5B_QUERIES.update({"ann_recall_eval": q_ann_recall_eval})
-R5B_ORACLES.update({"ann_recall_eval": _ann_recall_oracle()})
+register("ann_recall_eval", q_ann_recall_eval, _ann_recall_oracle())
 
 
 def q_term_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -899,6 +866,7 @@ FROM pairs p
 JOIN tf ta ON p.term_a = ta.term
 JOIN tf tb ON p.term_b = tb.term, nd
 """
+register("term_cooccurrence_lift", q_term_cooccurrence_lift, ORACLE_COOCCURRENCE)
 
 
 def q_language_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -923,8 +891,6 @@ def q_language_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _language_confusion_oracle() -> str:
-    from aos_spark.queries import _langid_oracle
-
     return f"""
 WITH detected AS ({_langid_oracle()}),
 conf AS (
@@ -936,17 +902,8 @@ FROM conf
 """
 
 
-R5B_QUERIES.update(
-    {
-        "term_cooccurrence_lift": q_term_cooccurrence_lift,
-        "language_confusion_matrix": q_language_confusion,
-    }
-)
-R5B_ORACLES.update(
-    {
-        "term_cooccurrence_lift": ORACLE_COOCCURRENCE,
-        "language_confusion_matrix": _language_confusion_oracle(),
-    }
+register(
+    "language_confusion_matrix", q_language_confusion, _language_confusion_oracle()
 )
 
 
@@ -977,10 +934,7 @@ SELECT a.label AS label_a, b.label AS label_b,
                 * sqrt(list_dot_product(b.cvec, b.cvec))), 6) AS cosine
 FROM cent a JOIN cent b ON a.label <= b.label
 """
-
-
-R5B_QUERIES.update({"label_centroid_similarity": q_label_centroid_similarity})
-R5B_ORACLES.update({"label_centroid_similarity": ORACLE_CENTROID_SIM})
+register("label_centroid_similarity", q_label_centroid_similarity, ORACLE_CENTROID_SIM)
 
 
 def q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1039,10 +993,7 @@ SELECT pair, merge_count,
        CAST(ROW_NUMBER() OVER (ORDER BY merge_count DESC, pair ASC) AS INT) AS rank_in_group
 FROM top
 """
-
-
-R5B_QUERIES.update({"bpe_merge_candidates": q_bpe_merge_candidates})
-R5B_ORACLES.update({"bpe_merge_candidates": ORACLE_BPE})
+register("bpe_merge_candidates", q_bpe_merge_candidates, ORACLE_BPE)
 
 
 def q_trimmed_mean_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1093,6 +1044,7 @@ SELECT o_orderpriority,
          / CAST(COUNT(*) AS DOUBLE) AS trimmed_mean
 FROM kept GROUP BY o_orderpriority
 """
+register("trimmed_mean_prices", q_trimmed_mean_prices, ORACLE_TRIMMED_MEAN)
 
 
 def q_revenue_pareto_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1159,20 +1111,7 @@ SELECT nation,
              / CAST(SUM(rev) AS DOUBLE), 6) AS top_decile_share
 FROM cut GROUP BY nation
 """
-
-
-R5B_QUERIES.update(
-    {
-        "trimmed_mean_prices": q_trimmed_mean_prices,
-        "revenue_pareto_by_nation": q_revenue_pareto_by_nation,
-    }
-)
-R5B_ORACLES.update(
-    {
-        "trimmed_mean_prices": ORACLE_TRIMMED_MEAN,
-        "revenue_pareto_by_nation": ORACLE_PARETO,
-    }
-)
+register("revenue_pareto_by_nation", q_revenue_pareto_by_nation, ORACLE_PARETO)
 
 
 def q_revenue_trend_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1248,7 +1187,6 @@ SELECT nation, n,
                     * ((sum_yy - sum_y * sum_y / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1))), 6) END AS r
 FROM m
 """
+register("revenue_trend_by_nation", q_revenue_trend_by_nation, ORACLE_TREND)
 
 
-R5B_QUERIES.update({"revenue_trend_by_nation": q_revenue_trend_by_nation})
-R5B_ORACLES.update({"revenue_trend_by_nation": ORACLE_TREND})

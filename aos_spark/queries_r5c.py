@@ -28,9 +28,8 @@ from pyspark.sql import functions as F
 
 from aos_spark.io.readers import read_sf_table
 from aos_spark.ops.exact_round import scaled_round
-
-R5C_QUERIES: dict = {}
-R5C_ORACLES: dict = {}
+from aos_spark.queries_core import _embedding_neardup_oracle
+from aos_spark.registry import register
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -89,6 +88,7 @@ SELECT user_id,
        CAST(MAX(n_intervals) AS BIGINT) AS max_island_events
 FROM isl GROUP BY user_id
 """
+register("interval_union_coverage", q_interval_union_coverage, ORACLE_INTERVAL_COVERAGE)
 
 
 def q_gini_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -146,6 +146,7 @@ SELECT nation,
              / (CAST(n AS DOUBLE) * CAST(s AS DOUBLE)), 6) AS gini
 FROM m
 """
+register("gini_revenue_by_nation", q_gini_revenue_by_nation, ORACLE_GINI)
 
 
 def q_simpson_diversity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -194,6 +195,7 @@ SELECT source,
              6) AS simpson_diversity
 FROM agg
 """
+register("simpson_diversity_by_source", q_simpson_diversity_by_source, ORACLE_SIMPSON)
 
 
 def q_assoc_rules_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -240,24 +242,7 @@ JOIN item_n ic ON d.consequent = ic.item
 CROSS JOIN tot t
 WHERE d.pair_n * 100 >= 1 * t.n_baskets
 """
-
-
-R5C_QUERIES.update(
-    {
-        "interval_union_coverage": q_interval_union_coverage,
-        "gini_revenue_by_nation": q_gini_revenue_by_nation,
-        "simpson_diversity_by_source": q_simpson_diversity_by_source,
-        "assoc_rules_brands": q_assoc_rules_brands,
-    }
-)
-R5C_ORACLES.update(
-    {
-        "interval_union_coverage": ORACLE_INTERVAL_COVERAGE,
-        "gini_revenue_by_nation": ORACLE_GINI,
-        "simpson_diversity_by_source": ORACLE_SIMPSON,
-        "assoc_rules_brands": ORACLE_ASSOC,
-    }
-)
+register("assoc_rules_brands", q_assoc_rules_brands, ORACLE_ASSOC)
 
 
 def q_stratified_allocation_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -315,6 +300,9 @@ SELECT lang,
 FROM ranked WHERE rn <= alloc
 GROUP BY lang
 """
+register(
+    "stratified_allocation_sample", q_stratified_allocation_sample, ORACLE_STRAT_ALLOC
+)
 
 
 def q_ks_length_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -353,6 +341,7 @@ SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
        n_chars AS ks_at, ROUND(dd, 6) AS ks_stat
 FROM top WHERE rk = 1
 """
+register("ks_length_drift", q_ks_length_drift, ORACLE_KS_DRIFT)
 
 
 def q_seasonal_dow_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -409,6 +398,7 @@ SELECT strftime(dw.day, '%Y-%m-%d') AS day,
        dw.cnt * b.dow_days * 100 > 105 * b.dow_total AS is_anomaly
 FROM dw JOIN b USING (dow)
 """
+register("seasonal_dow_anomaly", q_seasonal_dow_anomaly, ORACLE_SEASONAL)
 
 
 def q_winsorized_mean_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -468,24 +458,7 @@ SELECT c.l_returnflag,
 FROM clamped c JOIN bounds b USING (l_returnflag)
 GROUP BY c.l_returnflag
 """
-
-
-R5C_QUERIES.update(
-    {
-        "stratified_allocation_sample": q_stratified_allocation_sample,
-        "ks_length_drift": q_ks_length_drift,
-        "seasonal_dow_anomaly": q_seasonal_dow_anomaly,
-        "winsorized_mean_prices": q_winsorized_mean_prices,
-    }
-)
-R5C_ORACLES.update(
-    {
-        "stratified_allocation_sample": ORACLE_STRAT_ALLOC,
-        "ks_length_drift": ORACLE_KS_DRIFT,
-        "seasonal_dow_anomaly": ORACLE_SEASONAL,
-        "winsorized_mean_prices": ORACLE_WINSOR,
-    }
-)
+register("winsorized_mean_prices", q_winsorized_mean_prices, ORACLE_WINSOR)
 
 
 def q_rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -582,6 +555,7 @@ SELECT query_id, doc_id,
 FROM fused
 QUALIFY fused_rank <= 10
 """
+register("rrf_fusion_topk", q_rrf_fusion_topk, ORACLE_RRF)
 
 
 def q_bm25_lite_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -672,6 +646,7 @@ FROM scored
 ORDER BY bm25_lite DESC, doc_id
 LIMIT 20
 """
+register("bm25_lite_scores", q_bm25_lite_scores, ORACLE_BM25)
 
 
 def q_feature_hash_vectorizer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -724,6 +699,7 @@ SELECT doc_id,
 FROM bucketed
 GROUP BY doc_id
 """
+register("feature_hash_vectorizer", q_feature_hash_vectorizer, ORACLE_FEATURE_HASH)
 
 
 def q_welch_ttest_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -820,24 +796,7 @@ SELECT n1, n2,
          2) AS welch_df
 FROM m
 """
-
-
-R5C_QUERIES.update(
-    {
-        "rrf_fusion_topk": q_rrf_fusion_topk,
-        "bm25_lite_scores": q_bm25_lite_scores,
-        "feature_hash_vectorizer": q_feature_hash_vectorizer,
-        "welch_ttest_priorities": q_welch_ttest_priorities,
-    }
-)
-R5C_ORACLES.update(
-    {
-        "rrf_fusion_topk": ORACLE_RRF,
-        "bm25_lite_scores": ORACLE_BM25,
-        "feature_hash_vectorizer": ORACLE_FEATURE_HASH,
-        "welch_ttest_priorities": ORACLE_WELCH,
-    }
-)
+register("welch_ttest_priorities", q_welch_ttest_priorities, ORACLE_WELCH)
 
 
 def q_multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -885,6 +844,7 @@ SELECT CAST(doc_id AS VARCHAR) AS media_id,
          AS zero_crossings
 FROM samp GROUP BY doc_id
 """
+register("multimodal_audio_features", q_multimodal_audio_features, ORACLE_AUDIO)
 
 
 def q_cusum_change_point(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -945,6 +905,7 @@ SELECT CAST(n_days AS BIGINT) AS n_days,
        ROUND(CAST(cusum AS DOUBLE) / CAST(n_days AS DOUBLE), 4) AS peak_deviation_orders
 FROM top WHERE rk = 1
 """
+register("cusum_change_point", q_cusum_change_point, ORACLE_CUSUM)
 
 
 def q_vocab_jaccard_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1007,6 +968,7 @@ FROM inter i
 JOIN vocab va ON i.source_a = va.source
 JOIN vocab vb ON i.source_b = vb.source
 """
+register("vocab_jaccard_matrix", q_vocab_jaccard_matrix, ORACLE_VOCAB_JACCARD)
 
 
 def q_priority_mix_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1074,24 +1036,7 @@ JOIN yt USING (year)
 JOIN pt USING (priority)
 CROSS JOIN nt
 """
-
-
-R5C_QUERIES.update(
-    {
-        "multimodal_audio_features": q_multimodal_audio_features,
-        "cusum_change_point": q_cusum_change_point,
-        "vocab_jaccard_matrix": q_vocab_jaccard_matrix,
-        "priority_mix_residuals": q_priority_mix_residuals,
-    }
-)
-R5C_ORACLES.update(
-    {
-        "multimodal_audio_features": ORACLE_AUDIO,
-        "cusum_change_point": ORACLE_CUSUM,
-        "vocab_jaccard_matrix": ORACLE_VOCAB_JACCARD,
-        "priority_mix_residuals": ORACLE_CHI2,
-    }
-)
+register("priority_mix_residuals", q_priority_mix_residuals, ORACLE_CHI2)
 
 
 def q_multimodal_video_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1139,10 +1084,7 @@ SELECT CAST(doc_id AS VARCHAR) AS media_id,
        CAST(MIN(v) AS BIGINT) AS min_pixel
 FROM px GROUP BY doc_id
 """
-
-
-R5C_QUERIES.update({"multimodal_video_features": q_multimodal_video_features})
-R5C_ORACLES.update({"multimodal_video_features": ORACLE_VIDEO})
+register("multimodal_video_features", q_multimodal_video_features, ORACLE_VIDEO)
 
 
 def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1211,6 +1153,7 @@ SELECT nation, CAST(r_q AS INTEGER) AS r_q, CAST(f_q AS INTEGER) AS f_q,
        CAST(SUM(monetary) AS DOUBLE) AS segment_revenue
 FROM seg GROUP BY 1, 2, 3, 4
 """
+register("rfm_segmentation", q_rfm_segmentation, ORACLE_RFM)
 
 
 def q_graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1227,8 +1170,6 @@ def q_graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _link_prediction_oracle() -> str:
-    from aos_spark.queries import _embedding_neardup_oracle
-
     return f"""
 WITH raw AS (SELECT id_a, id_b FROM ({_embedding_neardup_oracle()})),
 e AS (
@@ -1256,6 +1197,9 @@ JOIN deg dy ON dy.a = c.y
 ORDER BY jaccard DESC, node_a, node_b
 LIMIT 50
 """
+
+
+register("graph_link_prediction", q_graph_link_prediction, _link_prediction_oracle())
 
 
 def q_embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1303,19 +1247,6 @@ SELECT CAST(i AS INTEGER) AS i, CAST(j AS INTEGER) AS j,
        CAST(SUM(q) AS BIGINT) AS m2_micro
 FROM prods GROUP BY 1, 2
 """
+register("embedding_gram_matrix", q_embedding_gram_matrix, ORACLE_GRAM)
 
 
-R5C_QUERIES.update(
-    {
-        "rfm_segmentation": q_rfm_segmentation,
-        "graph_link_prediction": q_graph_link_prediction,
-        "embedding_gram_matrix": q_embedding_gram_matrix,
-    }
-)
-R5C_ORACLES.update(
-    {
-        "rfm_segmentation": ORACLE_RFM,
-        "graph_link_prediction": _link_prediction_oracle(),
-        "embedding_gram_matrix": ORACLE_GRAM,
-    }
-)

@@ -45,9 +45,7 @@ from aos_spark.llm.dedup import (
     shingle_hash,
     shingles_from_tokens,
 )
-
-R5D_QUERIES: dict = {}
-R5D_ORACLES: dict = {}
+from aos_spark.registry import register
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -146,6 +144,7 @@ SELECT source,
        CAST((CAST(SUM(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END) AS HUGEINT) * 1000000 * 2 + CAST(COUNT(*) AS HUGEINT)) // (CAST(COUNT(*) AS HUGEINT) * 2) AS DOUBLE) / 1000000.0 AS novelty_rate
 FROM f GROUP BY source
 """
+register("ngram_novelty_rate", q_ngram_novelty_rate, ORACLE_NGRAM_NOVELTY)
 
 
 # ----------------------------------------------------------- markov_two_step
@@ -190,6 +189,7 @@ SELECT from_type, to_type, n_paths,
        CAST((CAST(n_paths AS HUGEINT) * 1000000 * 2 + CAST(n_from AS HUGEINT)) // (CAST(n_from AS HUGEINT) * 2) AS DOUBLE) / 1000000.0 AS prob
 FROM t
 """
+register("markov_two_step", q_markov_two_step, ORACLE_MARKOV_TWO_STEP)
 
 
 # -------------------------------------------------- source_minhash_similarity
@@ -284,6 +284,11 @@ FROM sig a JOIN sig b ON a.source < b.source
 """
 
 
+register(
+    "source_minhash_similarity", q_source_minhash_similarity, _source_minhash_oracle()
+)
+
+
 # ---------------------------------------------------------- benford_first_digit
 def q_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-significant-digit distribution of order totals (Benford
@@ -321,6 +326,7 @@ SELECT digit, n_orders,
        CAST((CAST(n_orders AS HUGEINT) * 1000000 * 2 + CAST(total AS HUGEINT)) // (CAST(total AS HUGEINT) * 2) AS DOUBLE) / 1000000.0 AS share
 FROM t
 """
+register("benford_first_digit", q_benford_first_digit, ORACLE_BENFORD)
 
 
 # ------------------------------------------------------- ewma_monthly_revenue
@@ -393,6 +399,7 @@ SELECT nation, month AS latest_month,
          AS ewma_revenue
 FROM f WHERE month = mx
 """
+register("ewma_monthly_revenue", q_ewma_monthly_revenue, ORACLE_EWMA_MONTHLY)
 
 
 # ----------------------------------------------------------- type_token_ratio
@@ -435,6 +442,7 @@ SELECT source,
          AS type_token_ratio
 FROM per_doc GROUP BY source
 """
+register("type_token_ratio", q_type_token_ratio, ORACLE_TTR)
 
 
 # --------------------------------------------------- above_nation_avg_customers
@@ -501,27 +509,8 @@ SELECT nation,
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_above
 FROM flagged GROUP BY nation
 """
+register(
+    "above_nation_avg_customers", q_above_nation_avg_customers, ORACLE_ABOVE_NATION_AVG
+)
 
 
-R5D_QUERIES.update(
-    {
-        "ngram_novelty_rate": q_ngram_novelty_rate,
-        "markov_two_step": q_markov_two_step,
-        "source_minhash_similarity": q_source_minhash_similarity,
-        "benford_first_digit": q_benford_first_digit,
-        "ewma_monthly_revenue": q_ewma_monthly_revenue,
-        "type_token_ratio": q_type_token_ratio,
-        "above_nation_avg_customers": q_above_nation_avg_customers,
-    }
-)
-R5D_ORACLES.update(
-    {
-        "ngram_novelty_rate": ORACLE_NGRAM_NOVELTY,
-        "markov_two_step": ORACLE_MARKOV_TWO_STEP,
-        "source_minhash_similarity": _source_minhash_oracle(),
-        "benford_first_digit": ORACLE_BENFORD,
-        "ewma_monthly_revenue": ORACLE_EWMA_MONTHLY,
-        "type_token_ratio": ORACLE_TTR,
-        "above_nation_avg_customers": ORACLE_ABOVE_NATION_AVG,
-    }
-)

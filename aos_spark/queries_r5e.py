@@ -38,9 +38,7 @@ from aos_spark.llm.dedup import (
 )
 from aos_spark.ops import sketches
 from aos_spark.ops.exact_round import round_ratio6
-
-R5E_QUERIES: dict = {}
-R5E_ORACLES: dict = {}
+from aos_spark.registry import register
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -107,6 +105,9 @@ SELECT week, {m} AS m, v_zero, ROUND(raw, 6) AS raw_estimate,
                   ELSE raw END, 6) AS estimate
 FROM est
 """
+
+
+register("sketch_hll_merge_weekly", q_hll_merge_weekly, _hll_weekly_oracle())
 
 
 # ---------------------------------------------------- customer_skyline_frontier
@@ -186,6 +187,7 @@ SELECT p.nation, p.custkey, CAST(p.spend AS DOUBLE) AS total_spend, p.n_orders
 FROM per p JOIN run r ON p.nation = r.nation AND p.spend = r.spend
 WHERE r.run_max IS NULL OR r.run_max <= p.n_orders
 """
+register("customer_skyline_frontier", q_customer_skyline, ORACLE_SKYLINE)
 
 
 # -------------------------------------------------------- containment_near_dup
@@ -247,6 +249,7 @@ SELECT id_a, id_b, n_common,
 FROM inter
 WHERE CAST((CAST(n_common AS HUGEINT) * 1000000 * 2 + CAST(LEAST(n_a, n_b) AS HUGEINT)) // (CAST(LEAST(n_a, n_b) AS HUGEINT) * 2) AS DOUBLE) / 1000000.0 >= 0.5
 """
+register("containment_near_dup", q_containment_near_dup, ORACLE_CONTAINMENT)
 
 
 # ----------------------------------------------------- lsh_band_collision_stats
@@ -324,6 +327,9 @@ FROM buckets GROUP BY band
 """
 
 
+register("lsh_band_collision_stats", q_lsh_band_stats, _lsh_band_stats_oracle())
+
+
 # --------------------------------------------------------- dau_moving_average
 def q_dau_moving_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily active users with a 7-day trailing mean. Exact BIGINT
@@ -368,23 +374,6 @@ FROM dau
 WINDOW w AS (PARTITION BY EXTRACT(year FROM day) ORDER BY day
              ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
 """
+register("dau_moving_average", q_dau_moving_average, ORACLE_DAU_MA)
 
 
-R5E_QUERIES.update(
-    {
-        "sketch_hll_merge_weekly": q_hll_merge_weekly,
-        "customer_skyline_frontier": q_customer_skyline,
-        "containment_near_dup": q_containment_near_dup,
-        "lsh_band_collision_stats": q_lsh_band_stats,
-        "dau_moving_average": q_dau_moving_average,
-    }
-)
-R5E_ORACLES.update(
-    {
-        "sketch_hll_merge_weekly": _hll_weekly_oracle(),
-        "customer_skyline_frontier": ORACLE_SKYLINE,
-        "containment_near_dup": ORACLE_CONTAINMENT,
-        "lsh_band_collision_stats": _lsh_band_stats_oracle(),
-        "dau_moving_average": ORACLE_DAU_MA,
-    }
-)

@@ -28,9 +28,17 @@ from aos_spark.io.readers import read_sf_table
 from aos_spark.llm.setjoin import ppjoin_pairs
 from aos_spark.ops.exact_round import round_ratio6
 from aos_spark.ops.layout import chunk_minmax_census, zorder_key, zorder_key_sql
-
-R6_QUERIES: dict = {}
-R6_ORACLES: dict = {}
+from aos_spark.queries_core import (
+    ORACLE_CMS,
+    ORACLE_PCTL_CONT,
+    ORACLE_SIM_BRUTE,
+    _SHINGLES_SQL,
+    _langid_oracle,
+    q_percentile_cont,
+)
+from aos_spark.queries_r4 import _hll_grouped_oracle
+from aos_spark.queries_r5 import _pq_sql_parts
+from aos_spark.registry import register
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -70,6 +78,7 @@ SELECT id_a, id_b,
 FROM inter
 WHERE CAST(n_common AS DOUBLE) / (n_a + n_b - n_common) >= 0.5
 """
+register("ppjoin_exact_pairs", q_ppjoin_exact_pairs, ORACLE_PPJOIN)
 
 
 # -------------------------------------------------------- zorder_skipping_census
@@ -126,18 +135,7 @@ FROM zo
 """
 
 
-R6_QUERIES.update(
-    {
-        "ppjoin_exact_pairs": q_ppjoin_exact_pairs,
-        "zorder_skipping_census": q_zorder_skipping_census,
-    }
-)
-R6_ORACLES.update(
-    {
-        "ppjoin_exact_pairs": ORACLE_PPJOIN,
-        "zorder_skipping_census": _zorder_census_oracle(),
-    }
-)
+register("zorder_skipping_census", q_zorder_skipping_census, _zorder_census_oracle())
 
 
 # ------------------------------------------------------------ hard_negative_mining
@@ -170,6 +168,7 @@ SELECT query_id, neighbor_id, neighbor_label, ROUND(cos, 6) AS cosine,
        CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS INTEGER) AS rank
 FROM scored QUALIFY rank <= 5
 """
+register("hard_negative_mining", q_hard_negative_mining, ORACLE_HARD_NEG)
 
 
 # ------------------------------------------------------------ language_kappa
@@ -225,8 +224,6 @@ def q_language_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _language_kappa_oracle() -> str:
-    from aos_spark.queries import _langid_oracle
-
     return f"""
 WITH detected AS ({_langid_oracle()}),
 conf AS (SELECT labeled_lang, detected_lang, CAST(COUNT(*) AS BIGINT) AS n
@@ -245,6 +242,9 @@ SELECT n_docs, n_agree,
        END AS kappa
 FROM tot, pe
 """
+
+
+register("language_kappa", q_language_kappa, _language_kappa_oracle())
 
 
 # ------------------------------------------------------------ winnowing_fingerprints
@@ -289,22 +289,7 @@ SELECT doc_id, n_grams, CAST(COUNT(*) AS BIGINT) AS n_selected,
        CAST((CAST(COUNT(*) AS HUGEINT) * 1000000 * 2 + CAST(n_grams AS HUGEINT)) // (CAST(n_grams AS HUGEINT) * 2) AS DOUBLE) / 1000000.0 AS density
 FROM sel GROUP BY doc_id, n_grams
 """
-
-
-R6_QUERIES.update(
-    {
-        "hard_negative_mining": q_hard_negative_mining,
-        "language_kappa": q_language_kappa,
-        "winnowing_fingerprints": q_winnowing_fingerprints,
-    }
-)
-R6_ORACLES.update(
-    {
-        "hard_negative_mining": ORACLE_HARD_NEG,
-        "language_kappa": _language_kappa_oracle(),
-        "winnowing_fingerprints": ORACLE_WINNOW,
-    }
-)
+register("winnowing_fingerprints", q_winnowing_fingerprints, ORACLE_WINNOW)
 
 
 # ------------------------------------------------------------ matryoshka_recall_eval
@@ -351,8 +336,6 @@ def q_matryoshka_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _matryoshka_oracle() -> str:
-    from aos_spark.queries import ORACLE_SIM_BRUTE
-
     return f"""
 WITH truth AS ({ORACLE_SIM_BRUTE}),
 tq AS (SELECT vec_id AS query_id, CAST(embedding[1:{_MRL_DIMS}] AS DOUBLE[]) AS qv
@@ -378,6 +361,9 @@ SELECT pt.query_id, pt.n_truth, COALESCE(ph.n_hits, 0) AS n_hits,
        CAST((CAST(COALESCE(ph.n_hits, 0) AS HUGEINT) * 1000000 * 2 + CAST(pt.n_truth AS HUGEINT)) // (CAST(pt.n_truth AS HUGEINT) * 2) AS DOUBLE) / 1000000.0 AS recall_at_k
 FROM pt LEFT JOIN ph ON pt.query_id = ph.query_id
 """
+
+
+register("matryoshka_recall_eval", q_matryoshka_recall_eval, _matryoshka_oracle())
 
 
 # ------------------------------------------------------------ dedup_threshold_curve
@@ -423,8 +409,6 @@ def q_dedup_threshold_curve(
 
 
 def _threshold_curve_oracle() -> str:
-    from aos_spark.queries import _SHINGLES_SQL
-
     lo = min(_CURVE_PM) / 1000.0
     pm_list = ", ".join(str(t) for t in _CURVE_PM)
     return f"""
@@ -447,18 +431,7 @@ FROM fanned GROUP BY 1
 """
 
 
-R6_QUERIES.update(
-    {
-        "matryoshka_recall_eval": q_matryoshka_recall_eval,
-        "dedup_threshold_curve": q_dedup_threshold_curve,
-    }
-)
-R6_ORACLES.update(
-    {
-        "matryoshka_recall_eval": _matryoshka_oracle(),
-        "dedup_threshold_curve": _threshold_curve_oracle(),
-    }
-)
+register("dedup_threshold_curve", q_dedup_threshold_curve, _threshold_curve_oracle())
 
 
 # ------------------------------------------------------------ split_leakage_check
@@ -507,8 +480,6 @@ def q_split_leakage_check(
 
 
 def _split_leakage_oracle() -> str:
-    from aos_spark.queries import _SHINGLES_SQL
-
     return f"""
 WITH sh AS ({_SHINGLES_SQL}),
 ex AS (SELECT doc_id AS id, len(shingles) AS n_sh, unnest(shingles) AS shingle FROM sh),
@@ -539,6 +510,9 @@ FROM tagged GROUP BY 1, 2
 """
 
 
+register("split_leakage_check", q_split_leakage_check, _split_leakage_oracle())
+
+
 # ------------------------------------------------------------ cms_error_eval
 def q_cms_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-quality measurement for the count-min sketch, the
@@ -566,8 +540,6 @@ def q_cms_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cms_error_oracle() -> str:
-    from aos_spark.queries import ORACLE_CMS
-
     return f"""
 WITH est AS ({ORACLE_CMS}),
 exact AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS exact_count
@@ -578,18 +550,7 @@ FROM est JOIN exact USING (event_type)
 """
 
 
-R6_QUERIES.update(
-    {
-        "split_leakage_check": q_split_leakage_check,
-        "cms_error_eval": q_cms_error_eval,
-    }
-)
-R6_ORACLES.update(
-    {
-        "split_leakage_check": _split_leakage_oracle(),
-        "cms_error_eval": _cms_error_oracle(),
-    }
-)
+register("cms_error_eval", q_cms_error_eval, _cms_error_oracle())
 
 
 # ------------------------------------------------------------ hll_error_eval
@@ -623,8 +584,6 @@ def q_hll_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hll_error_oracle() -> str:
-    from aos_spark.queries_r4 import _hll_grouped_oracle
-
     return f"""
 WITH est AS ({_hll_grouped_oracle()}),
 exact AS (SELECT o_orderstatus,
@@ -637,8 +596,7 @@ FROM est JOIN exact USING (o_orderstatus)
 """
 
 
-R6_QUERIES.update({"hll_error_eval": q_hll_error_eval})
-R6_ORACLES.update({"hll_error_eval": _hll_error_oracle()})
+register("hll_error_eval", q_hll_error_eval, _hll_error_oracle())
 
 
 # ------------------------------------------------------------ quantile_error_eval
@@ -691,7 +649,6 @@ def q_quantile_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     # exact tier: reuse the gate-verified interpolated-percentile query
-    from aos_spark.queries import q_percentile_cont
 
     exact = q_percentile_cont(spark, sf_dir).select(
         "l_returnflag", "p50", "p90"
@@ -708,8 +665,6 @@ def q_quantile_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _quantile_error_oracle() -> str:
-    from aos_spark.queries import ORACLE_PCTL_CONT
-
     return f"""
 WITH exact AS ({ORACLE_PCTL_CONT}),
 sk AS (
@@ -736,8 +691,7 @@ FROM est JOIN exact USING (l_returnflag)
 """
 
 
-R6_QUERIES.update({"quantile_error_eval": q_quantile_error_eval})
-R6_ORACLES.update({"quantile_error_eval": _quantile_error_oracle()})
+register("quantile_error_eval", q_quantile_error_eval, _quantile_error_oracle())
 
 
 # ------------------------------------------------------------ sim_ivfpq_topk
@@ -793,8 +747,6 @@ def q_sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivfpq_oracle(top_k: int = 10, nprobe: int = 2) -> str:
-    from aos_spark.queries_r5 import _pq_sql_parts
-
     codes_sql, frag_values, sub = _pq_sql_parts()
     return f"""
 WITH vecs AS (
@@ -850,8 +802,7 @@ FROM scored QUALIFY rank <= {top_k}
 """
 
 
-R6_QUERIES.update({"sim_ivfpq_topk": q_sim_ivfpq_topk})
-R6_ORACLES.update({"sim_ivfpq_topk": _ivfpq_oracle()})
+register("sim_ivfpq_topk", q_sim_ivfpq_topk, _ivfpq_oracle())
 
 
 # ------------------------------------------------------------ shard_rebalance_churn
@@ -986,8 +937,7 @@ FROM asg_old o JOIN asg_new n USING (doc_id, h)
 """
 
 
-R6_QUERIES.update({"shard_rebalance_churn": q_shard_rebalance_churn})
-R6_ORACLES.update({"shard_rebalance_churn": _shard_rebalance_oracle()})
+register("shard_rebalance_churn", q_shard_rebalance_churn, _shard_rebalance_oracle())
 
 
 # ------------------------------------------------------------ winnow_overlap_sources
@@ -1086,7 +1036,6 @@ SELECT a.source AS source_a, b.source AS source_b,
 FROM prints a JOIN prints b ON a.print = b.print AND a.source < b.source
 GROUP BY 1, 2
 """
+register("winnow_overlap_sources", q_winnow_overlap_sources, ORACLE_WINNOW_OVERLAP)
 
 
-R6_QUERIES.update({"winnow_overlap_sources": q_winnow_overlap_sources})
-R6_ORACLES.update({"winnow_overlap_sources": ORACLE_WINNOW_OVERLAP})

@@ -5,7 +5,7 @@ decorrelation pattern, and aggregation structure that make the original
 interesting, with filter columns swapped for ones the testdata has).
 
 Completes the relational surface beyond the Q1/Q3/Q4/Q5/Q10/Q12/Q17/Q18
-shapes already in aos_spark/queries.py: correlated-min decorrelation
+shapes already in aos_spark/queries_core.py: correlated-min decorrelation
 (Q2), bidirectional pair joins (Q7), conditional market-share (Q8),
 multi-dim profit rollup (Q9), HAVING over a global scalar (Q11),
 zero-preserving outer-join distribution (Q13), conditional-percentage
@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from aos_spark.registry import register
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -82,6 +83,7 @@ FROM (
 ) JOIN supplier ON l_suppkey = s_suppkey
 WHERE l_extendedprice = min_price
 """
+register("q2_min_cost_supplier", q2_min_cost_supplier, ORACLE_Q2)
 
 
 # --- Q7: volume shipping between two nations -------------------------------
@@ -139,6 +141,7 @@ FROM (
 )
 GROUP BY supp_nation, cust_nation, l_year
 """
+register("q7_volume_shipping", q7_volume_shipping, ORACLE_Q7)
 
 
 # --- Q8: market share ------------------------------------------------------
@@ -210,6 +213,7 @@ FROM (
   GROUP BY 1
 )
 """
+register("q8_market_share", q8_market_share, ORACLE_Q8)
 
 
 # --- Q9: profit by nation and year -----------------------------------------
@@ -252,6 +256,7 @@ FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE p_name LIKE '%red%'
 GROUP BY 1, 2
 """
+register("q9_profit_by_nation", q9_profit_by_nation, ORACLE_Q9)
 
 
 # --- Q11: important parts (HAVING over a global scalar) --------------------
@@ -293,6 +298,7 @@ SELECT l_partkey, ROUND(CAST(val AS DOUBLE), 4) AS part_value
 FROM per_part
 WHERE CAST(val AS DOUBLE) > (SELECT CAST(SUM(val) AS DOUBLE) FROM per_part) * 0.0007
 """
+register("q11_important_parts", q11_important_parts, ORACLE_Q11)
 
 
 # --- Q13: customer order-count distribution --------------------------------
@@ -328,6 +334,7 @@ FROM (
 )
 GROUP BY c_count
 """
+register("q13_customer_distribution", q13_customer_distribution, ORACLE_Q13)
 
 
 # --- Q14: promo revenue percentage -----------------------------------------
@@ -369,6 +376,7 @@ FROM (
   WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
 )
 """
+register("q14_promo_revenue", q14_promo_revenue, ORACLE_Q14)
 
 
 # --- Q15: top supplier by revenue ------------------------------------------
@@ -410,6 +418,7 @@ SELECT s_suppkey, s_name, ROUND(CAST(r AS DOUBLE), 4) AS total_revenue
 FROM rev JOIN supplier ON l_suppkey = s_suppkey
 WHERE r = (SELECT MAX(r) FROM rev)
 """
+register("q15_top_supplier", q15_top_supplier, ORACLE_Q15)
 
 
 # --- Q16: supplier count with exclusion anti-join --------------------------
@@ -445,6 +454,7 @@ WHERE p_brand <> 'Brand#1' AND p_size IN (1, 4, 7, 10, 13, 16, 19, 22)
     SELECT s_suppkey FROM supplier WHERE s_name LIKE '%00000001%')
 GROUP BY p_brand, p_type, p_size
 """
+register("q16_supplier_count", q16_supplier_count, ORACLE_Q16)
 
 
 # --- Q19: disjunctive predicate pushdown -----------------------------------
@@ -488,6 +498,7 @@ WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5  AND l_quantity BETWEEN 1
    OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
    OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30)
 """
+register("q19_disjunctive_revenue", q19_disjunctive_revenue, ORACLE_Q19)
 
 
 # --- Q20: chained semi-joins -----------------------------------------------
@@ -528,6 +539,7 @@ WHERE n_name = 'NATION_3'
     GROUP BY l_suppkey, l_partkey
     HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) > 80.0)
 """
+register("q20_promotion_suppliers", q20_promotion_suppliers, ORACLE_Q20)
 
 
 # --- Q21: sole-blocker suppliers (EXISTS + NOT EXISTS) ---------------------
@@ -612,6 +624,7 @@ agg AS (
 SELECT s_name, numwait
 FROM agg JOIN supplier ON l_suppkey = s_suppkey
 """
+register("q21_sole_blocker_suppliers", q21_sole_blocker_suppliers, ORACLE_Q21)
 
 
 # --- Q22: idle rich customers (scalar threshold + anti-join) ---------------
@@ -658,36 +671,6 @@ WHERE c_acctbal > (
     WHERE o_custkey = c_custkey AND o_orderdate >= TIMESTAMP '1999-07-01')
 GROUP BY c_nationkey
 """
+register("q22_idle_customers", q22_idle_customers, ORACLE_Q22)
 
 
-TPCH_QUERIES = {
-    "q2_min_cost_supplier": q2_min_cost_supplier,
-    "q7_volume_shipping": q7_volume_shipping,
-    "q8_market_share": q8_market_share,
-    "q9_profit_by_nation": q9_profit_by_nation,
-    "q11_important_parts": q11_important_parts,
-    "q13_customer_distribution": q13_customer_distribution,
-    "q14_promo_revenue": q14_promo_revenue,
-    "q15_top_supplier": q15_top_supplier,
-    "q16_supplier_count": q16_supplier_count,
-    "q19_disjunctive_revenue": q19_disjunctive_revenue,
-    "q20_promotion_suppliers": q20_promotion_suppliers,
-    "q21_sole_blocker_suppliers": q21_sole_blocker_suppliers,
-    "q22_idle_customers": q22_idle_customers,
-}
-
-TPCH_ORACLES = {
-    "q2_min_cost_supplier": ORACLE_Q2,
-    "q7_volume_shipping": ORACLE_Q7,
-    "q8_market_share": ORACLE_Q8,
-    "q9_profit_by_nation": ORACLE_Q9,
-    "q11_important_parts": ORACLE_Q11,
-    "q13_customer_distribution": ORACLE_Q13,
-    "q14_promo_revenue": ORACLE_Q14,
-    "q15_top_supplier": ORACLE_Q15,
-    "q16_supplier_count": ORACLE_Q16,
-    "q19_disjunctive_revenue": ORACLE_Q19,
-    "q20_promotion_suppliers": ORACLE_Q20,
-    "q21_sole_blocker_suppliers": ORACLE_Q21,
-    "q22_idle_customers": ORACLE_Q22,
-}

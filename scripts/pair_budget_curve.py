@@ -119,10 +119,6 @@ def main() -> None:
         # kept-vs-uncapped Σ C(df,2) verification already recorded in the
         # ngram section (kept 149,965,625 <= 150M at sf3) applies to the
         # candidate stage of every one of them verbatim.
-        # import the registrar first: queries_r4/r5e/r6 build their oracle
-        # strings from aos_spark.queries at module body, so importing a
-        # submodule directly is a circular import
-        import aos_spark.queries  # noqa: F401
         from aos_spark.queries_r4 import q_dedup_resolution
         from aos_spark.queries_r5e import q_containment_near_dup
         from aos_spark.queries_r6 import (

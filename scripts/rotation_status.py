@@ -3,8 +3,8 @@ driver-green CORRECTNESS row, which were sampled but red, and which have
 never been driver-sampled at all.
 
 The driver verifies only the FIRST 50 registry entries per round, so
-iteration order decides what gets external verification (rotation
-history in aos_spark/queries.py). Every round the front-load list had to
+iteration order decides what gets external verification (the
+`_GATE_FRONT` list in aos_spark/queries.py). Every round the front-load list had to
 be recomputed by hand from the CORRECTNESS_r*.json artifacts; this
 script does it mechanically and prints a ready-to-paste front list.
 

@@ -1,11 +1,30 @@
-"""Scale smoke: run core operators on synthetic frames 100-800x the sf0.1
-gate data (spark.range-generated, no testdata writes) and print wall
-times. This is the evidence behind PLANS.md's "survives 100x" claims —
-not a correctness gate (the oracle covers that at sf0.01) but a
-does-the-shape-hold check: linear operators should scale ~linearly, and
-nothing should OOM or collapse onto one task.
+"""Scale smokes: run operators on spark.range-generated frames well past
+the sf0.1 gate volume (no testdata writes) and print wall times. This is
+the evidence behind PLANS.md's "survives 100x" claims — not a correctness
+gate (the oracle covers that at sf0.01) but a does-the-shape-hold check:
+linear operators should scale ~linearly, and nothing should OOM or
+collapse onto one task.
 
-Usage: python scripts/scale_smoke.py [rows_millions]
+Usage: python scripts/scale_smoke.py <suite> [size]
+
+  suite     size unit (default)       operators
+  core      rows, millions (20)       sessionize, as-of join, skewed distinct,
+                                      exact/MinHash/span dedup, incremental
+                                      merge, funnel, range join, cohort,
+                                      bloom semi-join, bigram rarity,
+                                      sequences, postings, key skew
+  stats     rows, millions (20)       merge-intervals, Gini, winsorized mean,
+                                      KS, proportional allocation, basket rules
+  setjoin   docs, thousands (200)     capped containment near-dup with a
+                                      corpus-wide hot shingle, PPJoin, graph
+                                      tier (triangles, capped link prediction)
+  megadoc   doc tokens, millions (3)  PPJoin at the default heap with one
+                                      giant document among 50k ordinary ones
+                                      (the per-doc shingle cap must hold)
+  doubling  docs, millions (1)        PPJoin and star dup_clusters on a
+                                      parquet-materialized corpus
+
+The last stdout line is {"suite", "size", "timings": {name: seconds}}.
 """
 
 from __future__ import annotations
@@ -19,21 +38,25 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F
 
+from aos_spark.cache import release_tracked
 from aos_spark.session import get_spark
 
 
-def timed(name, df, results):
+def timed(name, frame, results):
+    """Run `frame` through a noop write and record its wall time. `frame`
+    is a DataFrame, or a zero-argument callable returning one when building
+    the plan itself runs jobs (ppjoin's coalesce right-sizing runs an eager
+    count) — then the build is timed too."""
     t0 = time.time()
+    df = frame() if callable(frame) else frame
     df.write.format("noop").mode("overwrite").save()
     results[name] = round(time.time() - t0, 2)
     print(f"{name}: {results[name]}s", file=sys.stderr)
+    release_tracked()
 
 
-def main() -> None:
-    m = float(sys.argv[1]) if len(sys.argv) > 1 else 20.0
-    n = int(m * 1_000_000)
-    spark = get_spark("scale-smoke")
-    results: dict[str, float] = {}
+def suite_core(spark, size, results):
+    n = int(size * 1_000_000)
 
     # 1. sessionize: n events, 100k users (~200 events/user)
     ev = spark.range(n).select(
@@ -251,7 +274,232 @@ def main() -> None:
     )
     timed("key_skew_profile_hot", key_distribution_profile(hotk, ["k"]), results)
 
-    print(json.dumps({"rows": n, "timings": results}))
+
+def suite_stats(spark, size, results):
+    n = int(size * 1_000_000)
+
+    # 1. merge_intervals: n intervals over 100k users (~200/user), spans
+    # engineered so ~half the intervals chain into islands.
+    from aos_spark.ops.intervals import merge_intervals
+
+    iv = spark.range(n).select(
+        (F.col("id") % 100_000).alias("user_id"),
+        (F.col("id") * 37 % 5_000_000).alias("s"),
+    ).withColumn("e", F.col("s") + 40)
+    timed("merge_intervals", merge_intervals(iv, ["user_id"], "s", "e"), results)
+
+    # 2. grouped_gini: n decimal values across 25 groups — the window
+    # sorts ~n/25 rows per partition, the worst case the docstring owns.
+    from aos_spark.ops.stats import grouped_gini
+
+    vals = spark.range(n).select(
+        (F.col("id") % 25).alias("g"),
+        F.col("id").alias("rid"),
+        ((F.col("id") * 7919 % 1_000_000) / 100).cast("decimal(14,2)").alias("v"),
+    )
+    timed("grouped_gini", grouped_gini(vals, ["g"], "v", ["rid"]), results)
+
+    # 3. grouped_winsorized_mean on the same frame.
+    from aos_spark.ops.stats import grouped_winsorized_mean
+
+    timed(
+        "winsorized_mean",
+        grouped_winsorized_mean(vals, ["g"], "v", ["rid"], tail_pct=5),
+        results,
+    )
+
+    # 4. ks_two_sample: n rows, values bounded to a 10k-wide histogram —
+    # the corpus reduces before any window runs.
+    from aos_spark.ops.stats import ks_two_sample
+
+    ks = spark.range(n).select(
+        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("g"),
+        (F.col("id") * 31 % 10_000 + F.when(F.col("id") % 2 == 0, 0).otherwise(500)).alias("v"),
+    )
+    timed("ks_two_sample", ks_two_sample(ks, "g", "v", "a", "b"), results)
+
+    # 5. proportional_allocation: n docs, 20 strata, 10% budget — two
+    # stratum-keyed corpus shuffles, allocation math on a 20-row frame.
+    from aos_spark.llm.sampling import proportional_allocation
+
+    docs = spark.range(n).select(
+        F.concat(F.lit("s"), (F.col("id") % 20).cast("string")).alias("lang"),
+        F.col("id").alias("doc_id"),
+    )
+    timed(
+        "proportional_allocation",
+        proportional_allocation(docs, ["lang"], 10, "doc_id"),
+        results,
+    )
+
+    # 6. association_rules: n basket lines, n/10 baskets x 100-item
+    # vocabulary (~10 items/basket -> ~45 pairs/basket fan-out; pair key
+    # space 4950). The self-join is the cost driver — basket-keyed, never
+    # corpus-squared.
+    from aos_spark.ops.assoc import association_rules
+
+    lines = spark.range(n).select(
+        (F.col("id") % (n // 10)).alias("basket"),
+        F.concat(F.lit("i"), (F.col("id") * 613 % 100).cast("string")).alias("item"),
+    )
+    timed(
+        "association_rules",
+        association_rules(lines, "basket", "item", min_support_pct=1),
+        results,
+    )
+
+
+def corpus(spark, n_docs):
+    """Synthetic corpus: every doc shares a boilerplate prefix (the
+    hot-shingle worst case — one 3-gram in ALL docs) plus a mostly-unique
+    tail; ~5% of docs are near-dups of a neighbor."""
+    return spark.range(n_docs).select(
+        F.col("id").alias("doc_id"),
+        F.concat(
+            F.lit("terms of service apply to all content here "),
+            F.concat_ws(
+                " ",
+                *[
+                    F.concat(
+                        F.lit(f"w{j}x"),
+                        (F.col("id") / F.lit(20 if j < 3 else 1)).cast("long"),
+                    )
+                    for j in range(24)
+                ],
+            ),
+        ).alias("text"),
+    )
+
+
+def materialize(spark, df, name):
+    """Write the synthetic corpus to parquet and read it back, so the
+    operator under test sees a STORAGE-shaped input (real corpora are
+    parquet scans, not expression trees). Without this the giant
+    generator expression is re-evaluated interpreted inside downstream
+    stages — a benchmark artifact, not an operator cost."""
+    import tempfile
+
+    path = f"{tempfile.gettempdir()}/aos_scale_smoke_{name}"
+    df.write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+def suite_setjoin(spark, size, results):
+    n_docs = int(size * 1000)
+    docs = corpus(spark, n_docs)
+
+    from aos_spark.llm.dedup import shingle_intersection_counts
+
+    inter = shingle_intersection_counts(docs, "doc_id", "text", 3)
+    cont = inter.withColumn(
+        "containment",
+        F.col("n_common").cast("double") / F.least("n_a", "n_b"),
+    ).filter(F.col("containment") >= 0.5)
+    timed(f"containment_capped_{n_docs}docs_hot_shingle", cont, results)
+
+    from aos_spark.llm.setjoin import ppjoin_pairs
+
+    timed(
+        f"ppjoin_{n_docs}docs",
+        lambda: ppjoin_pairs(docs, "doc_id", "text", 3, 0.5),
+        results,
+    )
+
+    # Graph tier at a size where coalesce must be a no-op: ~n_docs*8
+    # edges over n_docs nodes (well past 100k rows/partition per task).
+    n_edges = n_docs * 8
+    edges = spark.range(n_edges).select(
+        (F.col("id") % n_docs).alias("id_a"),
+        ((F.col("id") * 31 + 7) % n_docs).alias("id_b"),
+    )
+    from aos_spark.ops.graph import common_neighbor_scores, triangle_count
+
+    timed(f"triangle_{n_edges}edges", triangle_count(edges), results)
+    timed(
+        f"linkpred_capped_{n_edges}edges",
+        common_neighbor_scores(edges, topk=50, max_degree=64),
+        results,
+    )
+
+
+def suite_megadoc(spark, size, results):
+    from aos_spark.llm.setjoin import ppjoin_pairs
+
+    # 50k ordinary docs + ONE size-M-token doc (~size M distinct 3-gram
+    # shingles; at the default 3M, 3x the default 1M cap — truncation
+    # must fire).
+    n_small, mega_tokens = 50_000, int(size * 1_000_000)
+    small = corpus(spark, n_small)
+    mega = spark.range(1).select(
+        F.lit(10_000_000).alias("doc_id"),
+        F.concat_ws(
+            " ",
+            F.transform(
+                F.sequence(F.lit(0), F.lit(mega_tokens - 1)),
+                lambda i: F.concat(F.lit("m"), i.cast("string")),
+            ),
+        ).alias("text"),
+    )
+    docs = materialize(spark, small.unionByName(mega), "megadoc")
+    timed(
+        f"ppjoin_megadoc_{mega_tokens}tok_default_heap",
+        lambda: ppjoin_pairs(docs, "doc_id", "text", 3, 0.5),  # default cap
+        results,
+    )
+
+
+def suite_doubling(spark, size, results):
+    from aos_spark.llm.dedup import dup_clusters
+    from aos_spark.llm.setjoin import ppjoin_pairs
+
+    n_docs = int(size * 1_000_000)
+    docs = materialize(spark, corpus(spark, n_docs), "corpus_doubling")
+    timed(
+        f"ppjoin_{n_docs}docs",
+        lambda: ppjoin_pairs(docs, "doc_id", "text", 3, 0.5),
+        results,
+    )
+
+    # dup_clusters over an n_docs-node synthetic pair graph: chains of length
+    # ~8 plus random cross links that glue chains into high-diameter
+    # components — exactly the shape where O(diameter) propagation is the
+    # wrong tool and the O(log n) star algorithm is the scale path.
+    pairs = (
+        spark.range(n_docs)
+        .select(
+            F.col("id").alias("id_a"),
+            F.when((F.col("id") % 8) < 7, F.col("id") + 1)
+            .otherwise((F.col("id") * 37 + 11) % n_docs)
+            .alias("id_b"),
+        )
+        .filter(F.col("id_a") != F.col("id_b"))
+    )
+    timed(
+        f"dup_clusters_{n_docs}nodes_star",
+        lambda: dup_clusters(pairs, algorithm="star"),
+        results,
+    )
+
+
+SUITES = {
+    "core": (suite_core, 20.0),
+    "stats": (suite_stats, 20.0),
+    "setjoin": (suite_setjoin, 200.0),
+    "megadoc": (suite_megadoc, 3.0),
+    "doubling": (suite_doubling, 1.0),
+}
+
+
+def main() -> None:
+    if len(sys.argv) < 2 or sys.argv[1] not in SUITES:
+        raise SystemExit(__doc__)
+    suite = sys.argv[1]
+    run, default = SUITES[suite]
+    size = float(sys.argv[2]) if len(sys.argv) > 2 else default
+    spark = get_spark(f"scale-smoke-{suite}")
+    results: dict[str, float] = {}
+    run(spark, size, results)
+    print(json.dumps({"suite": suite, "size": size, "timings": results}))
 
 
 if __name__ == "__main__":

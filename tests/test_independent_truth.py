@@ -411,7 +411,7 @@ def test_triangle_count_matches_adjacency_sets(spark, sf_dir):
     count over the SAME edge list (the edge generator is verified
     elsewhere; this isolates the counting algorithm)."""
     from aos_spark.llm import dedup as D
-    from aos_spark.queries import _t
+    from aos_spark.queries_core import _t
 
     e = _t(spark, sf_dir, "embeddings")
     pairs = [

@@ -119,19 +119,42 @@ def test_empty_frame_is_jvm_only(spark):
     assert _jobs(spark) == before
 
 
+def _pipeline_and_report_nodes():
+    root = Path(__file__).resolve().parent.parent / "aos_spark"
+    for sub in ("pipeline", "report"):
+        for path in sorted((root / sub).rglob("*.py")):
+            for node in ast.walk(ast.parse(path.read_text())):
+                yield f"{path.relative_to(root)}:{getattr(node, 'lineno', 0)}", node
+
+
 def test_no_create_dataframe_in_pipeline_or_report():
     """The initialize/update/patch path builds its driver-local frames
     with literal_frame; a ``createDataFrame`` call would bring back a
     Python-RDD scan (Python workers on every run)."""
-    root = Path(__file__).resolve().parent.parent / "aos_spark"
+    found = [
+        where
+        for where, node in _pipeline_and_report_nodes()
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "createDataFrame"
+    ]
+    assert found == []
+
+
+def test_pipeline_and_report_do_not_import_query_modules():
+    """Loading the 203-query registry costs a timed pipeline op a fraction
+    of a second; the pipeline and report own their dims (ZONES,
+    FACILITY_KINDS) and never import ``aos_spark.queries*``."""
     found = []
-    for sub in ("pipeline", "report"):
-        for path in sorted((root / sub).rglob("*.py")):
-            for node in ast.walk(ast.parse(path.read_text())):
-                if (
-                    isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Attribute)
-                    and node.func.attr == "createDataFrame"
-                ):
-                    found.append(f"{path.relative_to(root)}:{node.lineno}")
+    for where, node in _pipeline_and_report_nodes():
+        if isinstance(node, ast.Import):
+            mods = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            mods = [node.module or ""]
+            if node.module == "aos_spark":
+                mods += [f"aos_spark.{a.name}" for a in node.names]
+        else:
+            continue
+        if any(m.startswith("aos_spark.queries") for m in mods):
+            found.append(where)
     assert found == []
