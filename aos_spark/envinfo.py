@@ -7,7 +7,7 @@ record pass/fail but nothing about the environment that produced them.
 Every artifact of record now carries this block so a future flake can be
 diffed against the environment of the green runs: engine versions
 (Spark / DuckDB / Python / JVM), the correctness-relevant session flags
-(ANSI, timezone, timestamp type), and the sizing knobs that change
+(ANSI, timezone, timestamp type, case mapping), and the sizing knobs that change
 physical plans (shuffle partitions, parallelism, driver heap).
 """
 
@@ -52,6 +52,7 @@ def env_fingerprint(spark=None) -> dict:
             "spark.sql.ansi.enabled",
             "spark.sql.session.timeZone",
             "spark.sql.timestampType",
+            "spark.sql.icu.caseMappings.enabled",
             "spark.sql.shuffle.partitions",
             "spark.sql.adaptive.enabled",
             "spark.driver.memory",

@@ -13,7 +13,7 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import LongType
@@ -1027,6 +1027,15 @@ def _star_components(
     return edges, rounds
 
 
+def _observed_checkpoint(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
+    """Eagerly local-checkpoint DF and return it with the values of AGGS
+    (name -> aggregate Column) observed on the job that materializes it,
+    so a count needs no action of its own."""
+    obs = Observation()
+    out = df.observe(obs, *(c.alias(name) for name, c in aggs.items())).localCheckpoint()
+    return out, obs.get
+
+
 def dup_clusters(
     pairs: DataFrame,
     a_col: str = "id_a",
@@ -1076,19 +1085,13 @@ def dup_clusters(
                 F.coalesce(F.col("dst"), F.col("id")).alias("cluster_id"),
             )
         )
-    # r16 init (guide §2.4 "remove shuffles outright" + §2.1 fewer jobs):
-    # checkpoint the PAIR frame first and build the doubled edge view from
-    # the checkpointed blocks. The historical shape doubled FIRST and
-    # checkpointed the union — ReuseExchange does NOT fire across the two
-    # aliased branches (verified: 0 ReusedExchange, 7 Exchanges), so the
-    # whole pair pipeline evaluated TWICE inside the init job, through a
-    # repartition("dst") shuffle the small path never used (its label
-    # side broadcasts). Lazy checkpoint + count fuses materialization
-    # into the sizing job: init is now 2 jobs (pairs+count,
-    # labels+count) instead of 4 (2 eager checkpoints + 2 counts), with
-    # the pipeline evaluated once and no small-path shuffle.
-    e = e.localCheckpoint(eager=False)
-    n_pairs = e.count()  # materializes the checkpoint; pipeline runs ONCE
+    # Every count the loop needs is OBSERVED on the job that materializes
+    # the frame (eager localCheckpoint), never a separate action. The pair
+    # frame is checkpointed before doubling: ReuseExchange does not fire
+    # across the two aliased branches of the union, so checkpointing the
+    # doubled view would evaluate the pair pipeline twice.
+    e, e_obs = _observed_checkpoint(e, n=F.count(F.lit(1)))
+    n_pairs = e_obs["n"]
     edges = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     # Smart init: label = min(own id, min neighbor id) — the first
     # propagation step fused into the init aggregation (same single
@@ -1097,12 +1100,13 @@ def dup_clusters(
     # dedup produces, this IS the fixpoint, so the loop ends after one
     # confirming round instead of two — measured 1.14 s -> 0.83 s on the
     # sf0.1 resolution graph.
-    labels = (
+    labels, labels_obs = _observed_checkpoint(
         edges.groupBy(F.col("src").alias("id"))
         .agg(F.min("dst").alias("__mn"))
-        .select("id", F.least("id", "__mn").alias("label"))
-    ).localCheckpoint(eager=False)
-    n_nodes = labels.count()  # materializes the labels checkpoint
+        .select("id", F.least("id", "__mn").alias("label")),
+        n=F.count(F.lit(1)),
+    )
+    n_nodes = labels_obs["n"]
     small = n_nodes <= broadcast_max_nodes
     if small:
         # Right-size the per-round task width from the materialized
@@ -1131,17 +1135,13 @@ def dup_clusters(
             .select(F.col("src").alias("id"), "label")
             .withColumn("__prev", F.lit(None).cast(label_t))
         )
-        updated = (
+        updated, round_obs = _observed_checkpoint(
             nbr.union(labels.withColumn("__prev", F.col("label")))
             .groupBy("id")
-            .agg(F.min("label").alias("label"), F.max("__prev").alias("__prev"))
-        ).localCheckpoint(eager=False)
-        n_changed = (
-            updated.agg(
-                F.sum((F.col("label") != F.col("__prev")).cast("long")).alias("c")
-            ).collect()[0]["c"]
-            or 0
+            .agg(F.min("label").alias("label"), F.max("__prev").alias("__prev")),
+            c=F.sum((F.col("label") != F.col("__prev")).cast("long")),
         )
+        n_changed = round_obs["c"] or 0  # SUM over no rows is NULL
         labels = updated.drop("__prev")
         if small:
             # Re-apply the node-sized width EVERY round (ADVICE r6): the

@@ -216,7 +216,8 @@ def group_rank_value_bounds(
        exact global rank-k value.
 
     ``rank_specs`` maps output column name -> fn(n: Column) -> 1-based
-    rank Column (must land in [1, n] for every group). Returns one row
+    rank Column (must land in [1, n] for every group; a rank outside it,
+    or NULL, raises at execution time). Returns one row
     per group: group_cols, __n (group count), and one column per tag
     with the value at that rank (the value column's own type).
 
@@ -232,7 +233,8 @@ def group_rank_value_bounds(
     n/|buckets| for anything non-degenerate — vs the whole hottest
     group before. Values must be non-NULL (all callers rank NOT NULL
     measures; NULLs would need the window shape's NULLS FIRST
-    convention).
+    convention): a NULL value raises at execution time instead of
+    landing in a NULL bucket.
     """
     from pyspark.sql import Window
 
@@ -263,6 +265,10 @@ def group_rank_value_bounds(
                 ),
             ),
         ).otherwise(F.lit(0).cast("long"))
+
+    bucket = F.when(v.isNull(), F.raise_error(F.lit(
+        f"group_rank_value_bounds: NULL {value_col!r} value; values must be non-NULL"
+    ))).otherwise(bucket)
 
     def with_bucket(frame: DataFrame) -> DataFrame:
         if gstats is not None:
@@ -339,7 +345,14 @@ def group_rank_value_bounds(
     # tag as well, so each copy ranks independently (correct and tiny)
     located = per_group
     for tag, rank_fn in rank_specs.items():
-        loc_col, loc_fields = locate(tag, rank_fn(F.col("__n")))
+        k = rank_fn(F.col("__n"))
+        k = F.when((k >= 1) & (k <= F.col("__n")), k).otherwise(F.raise_error(
+            F.format_string(
+                f"group_rank_value_bounds: rank %s for {tag!r} outside [1, %s]",
+                k, F.col("__n"),
+            )
+        ))
+        loc_col, loc_fields = locate(tag, k)
         located = (
             located.withColumn("__loc", loc_col)
             .withColumn(f"__spec_{tag}", F.struct(*loc_fields))

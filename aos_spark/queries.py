@@ -22,26 +22,29 @@ from aos_spark.registry import build
 
 # The driver's correctness gate samples the FIRST 50 entries, so this list
 # decides what it verifies. Refresh it from `scripts/rotation_status.py`'s
-# suggested order (stalest driver-green evidence first).
+# suggested order (stalest driver-green evidence first). Among equally
+# stale greens, queries rewritten since their last driver row go first
+# (the first six below); newer-evidence rewrites wait for their round.
 _GATE_FRONT = [
-    "split_leakage_check", "cms_error_eval", "hll_error_eval",
-    "quantile_error_eval", "dedup_ngram_jaccard", "dedup_minhash_lsh",
-    "sim_bruteforce_topk", "sim_lsh_topk", "dedup_embedding_cosine",
-    "j2_point_zone_count", "j3_j5_zone_assignment", "j10_lookup_join",
-    "j13_prev_forecast_delta", "a13_cci_admin_rollup", "a14_value_counts",
-    "w2_first_landfall", "s6_distinct_ordered", "dedup_simhash",
-    "multimodal_image_features", "sessionize_events", "sim_ivf_topk",
-    "text_bpe_tokens", "text_rolling_fingerprint", "s17_raster_zonal",
-    "asof_join_events", "range_join_events", "dedup_clusters",
-    "decontamination_pairs", "sample_split_stats", "q4_priority_semijoin",
-    "q18_large_volume_orders", "corpus_language_stats",
-    "sketch_cms_estimate", "text_pii_scrub", "text_repetition_stats",
-    "sketch_hll_distinct", "tfidf_top_terms", "q3_shipping_priority",
-    "q5_regional_revenue", "q17_small_quantity_revenue",
-    "j2_facility_probability", "cube_order_stats", "pivot_status_revenue",
-    "unpivot_metrics", "rolling_customer_spend", "rank_distribution",
-    "histogram_quantity", "tumbling_event_windows", "set_ops_segments",
-    "corpus_length_percentiles",
+    "sim_ivfpq_topk", "winnow_overlap_sources", "percentile_cont_interp",
+    "stats_correlation", "dedup_resolution", "semantic_dedup",
+    "shard_rebalance_churn", "q1_pricing_summary", "pack_context_chunks",
+    "embedding_quantize", "gapfill_hourly_events",
+    "fuzzy_match_levenshtein", "dedup_storage_savings",
+    "skew_salted_distinct", "array_agg_sorted", "profile_columns",
+    "cumulative_distinct_users", "q10_returned_item_customers",
+    "q12_shipmode_priority", "chunk_sliding_window",
+    "decontamination_13gram", "q2_min_cost_supplier", "q7_volume_shipping",
+    "q8_market_share", "q9_profit_by_nation", "q11_important_parts",
+    "q13_customer_distribution", "q14_promo_revenue", "q15_top_supplier",
+    "q16_supplier_count", "q19_disjunctive_revenue",
+    "q20_promotion_suppliers", "q21_sole_blocker_suppliers",
+    "q22_idle_customers", "corpus_quality_filter", "vocab_min_df",
+    "kmeans_lloyd_step", "funnel_conversion", "cohort_retention",
+    "sketch_hll_grouped", "scd2_dimension_history", "incremental_agg_merge",
+    "vocab_encode_tokens", "validation_suite", "zscore_outliers",
+    "graph_triangle_count", "weighted_sample_stats", "kfold_assignment",
+    "q6_discount_revenue", "json_props_stats",
 ]
 
 QUERIES, ORACLES = build(

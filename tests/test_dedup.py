@@ -95,6 +95,40 @@ def test_dup_clusters_string_ids(spark):
     }
 
 
+def test_dup_clusters_job_budget(spark):
+    """The propagate loop reads every count from a metric observed on the
+    job that materializes the frame (eager localCheckpoint), so no count or
+    collect runs on its own. Two 4-cliques converge at the smart init; the
+    5-node chain needs three more rounds plus the zero-change one: 1 job
+    for the pair checkpoint, 2 per groupBy checkpoint (init and 4 rounds)
+    and 1 for the collect."""
+    from aos_spark.llm.dedup import dup_clusters
+
+    def clique(ids):
+        return [(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]]
+
+    raw = clique([1, 2, 3, 4]) + clique([11, 12, 13, 14]) + [(21, 22), (22, 23), (23, 24), (24, 25)]
+    pairs = spark.createDataFrame(raw, "id_a long, id_b long")
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    got = {r["doc_id"]: r["cluster_id"] for r in dup_clusters(pairs).collect()}
+    jobs = dag.numTotalJobs() - before
+    assert got == {**{i: 1 for i in (1, 2, 3, 4)}, **{i: 11 for i in (11, 12, 13, 14)},
+                   **{i: 21 for i in (21, 22, 23, 24, 25)}}
+    assert jobs <= 12, jobs
+
+
+def test_dup_clusters_empty_pairs(spark):
+    """No pairs: the observed change count is a SUM over no rows (NULL),
+    read as 0, so the loop stops after one round with no clusters."""
+    from aos_spark.llm.dedup import dup_clusters
+
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    out = dup_clusters(pairs)
+    assert out.columns == ["doc_id", "cluster_id"]
+    assert out.collect() == []
+
+
 def test_star_components_path_graph_logarithmic_rounds(spark):
     """10k-node path graph (the adversarial chain shape — boilerplate
     chains): the alternating large-star/small-star algorithm must converge

@@ -109,3 +109,24 @@ def test_minmax_mode_single_row_group(spark):
     spark.catalog.clearCache()
     assert out["only"] == Decimal("3.14")
     assert out["__n"] == 1
+
+
+@pytest.mark.parametrize("rank", [lambda n: n + 1, lambda n: n - n])
+def test_rank_outside_one_to_n_raises(spark, frame, rank):
+    out = group_rank_value_bounds(frame, ["g"], "v", {"bad": rank}, bucket_width=4.0)
+    with pytest.raises(Exception, match=r"rank \d+ for 'bad' outside \[1, \d+\]"):
+        out.collect()
+    release_tracked()
+    spark.catalog.clearCache()
+
+
+def test_null_value_raises(spark):
+    df = spark.createDataFrame(
+        [("a", Decimal("1.00")), ("a", None), ("a", Decimal("2.00"))],
+        "g string, v decimal(14,2)",
+    )
+    out = group_rank_value_bounds(df, ["g"], "v", {"lo": lambda n: F.lit(1)}, n_buckets=4)
+    with pytest.raises(Exception, match="NULL 'v' value"):
+        out.collect()
+    release_tracked()
+    spark.catalog.clearCache()
