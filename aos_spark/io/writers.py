@@ -12,10 +12,13 @@ bridge for downstream consumers that expect the reference's file naming.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from aos_spark.fanout import run_all
 
 VIEW_PARTITION_COLS = ["country", "track_id", "forecast_compact", "wind_threshold"]
 
@@ -35,6 +38,25 @@ def write_view(
     if cols:
         writer = writer.partitionBy(*cols)
     writer.save(path)
+
+
+def write_views(views: list[tuple[DataFrame, str, list[str] | None]]) -> None:
+    """Write independent views concurrently: each ``(df, path,
+    partition_cols)`` triple goes to :func:`write_view` on its own driver
+    thread. Returns once every write has returned; then raises the first
+    failure in input order. Materialize a persisted frame that several of
+    the views read before the call: each concurrent reader of a cache
+    that is not yet built submits its own jobs to build it."""
+    if not views:
+        return
+    spark = views[0][0].sparkSession
+    run_all(
+        spark,
+        [
+            functools.partial(write_view, df, path, partition_cols=cols)
+            for df, path, cols in views
+        ],
+    )
 
 
 def write_bucketed(

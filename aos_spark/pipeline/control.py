@@ -33,18 +33,23 @@ def _run_log_path(warehouse: str) -> str:
 
 
 
-def _read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
+def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """Read a control table, mapping ONLY a missing path to the empty
     frame. A bare `except Exception` here converted transient read
     errors (a corrupt footer from a killed writer, a rename race) into
     an empty frame — which upsert_country then OVERWROTE the registry
     with, and which made the F11 idempotency gate reprocess everything
-    (r9 review). Anything other than path-not-found must raise."""
-    import os as _os
+    (r9 review). Anything other than path-not-found must raise.
 
-    if not _os.path.exists(path.removeprefix("file://")):
+    Existence is asked of the Hadoop FileSystem of the path, so any URI
+    the writers accept works (``os.path.exists`` is false for every
+    non-local URI and for ``file:/abs/path``, which read as a missing
+    table). The read uses the table's declared schema, which skips the
+    schema-inference job a bare ``spark.read.parquet`` launches."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
         return literal_frame(spark, [], schema)
-    return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def read_run_log(spark: SparkSession, warehouse: str) -> DataFrame:

@@ -13,6 +13,17 @@ Every view is written with dynamic partition overwrite (the F9
 prefix-delete replacement) partitioned by (storm, forecast_compact
 [, wind_threshold]) so re-runs are idempotent and stale partitions can't
 survive. Idempotency across runs is the F11 anti-join against the run log.
+
+An update writes its seven views in two steps. The tiles view goes
+first, alone: its write materializes the persisted hit set and tile view.
+The other six (admin, cci, severity, facilities, tracks, track_segments)
+then go to one ``write_views`` call, which writes them on concurrent
+driver threads; each submits a few jobs too small to fill the cores, so
+run one after another they left most cores idle. Tiles goes first because
+each concurrent reader of a persisted frame that is not yet materialized
+submits its own jobs to build it: fanning out all seven at once cost
+about five extra cache-building jobs per update. The run log's terminal
+row is written only after every write has returned.
 """
 
 from __future__ import annotations
@@ -25,7 +36,7 @@ from pyspark.sql import functions as F
 
 from aos_spark.io.local_frame import literal_frame
 from aos_spark.io.readers import read_sf_table
-from aos_spark.io.writers import write_view
+from aos_spark.io.writers import write_view, write_views
 from aos_spark.ops import cci, probability, rollup, severity, spatial_assign
 from aos_spark.pipeline import control
 
@@ -243,6 +254,8 @@ def update(
         )
         tile_view = tile_view.persist()
         cached.append(tile_view)
+        # alone and first: this write materializes hits and tile_view, which
+        # most of the concurrently written views below read
         write_view(
             tile_view,
             os.path.join(warehouse, "views", "tiles"),
@@ -268,11 +281,6 @@ def update(
         ).withColumn("storm", F.lit(storm)).withColumn(
             "forecast_compact", F.lit(forecast_time)
         )
-        write_view(
-            admin_view,
-            os.path.join(warehouse, "views", "admin"),
-            partition_cols=["storm", "forecast_compact", "wind_threshold"],
-        )
 
         # W3/W4: CCI from the threshold-long tile view
         long_df = tile_view.select(
@@ -281,11 +289,6 @@ def update(
         cci_view = cci.cci_from_long(long_df, ["tile_id"], "wind_threshold", ["exposure"])
         cci_view = cci_view.withColumn("storm", F.lit(storm)).withColumn(
             "forecast_compact", F.lit(forecast_time)
-        )
-        write_view(
-            cci_view,
-            os.path.join(warehouse, "views", "cci"),
-            partition_cols=["storm", "forecast_compact"],
         )
 
         # A5: severity per member
@@ -299,11 +302,6 @@ def update(
             "total_exposure", F.col("total_exposure").cast("double")
         ).withColumn("storm", F.lit(storm)).withColumn(
             "forecast_compact", F.lit(forecast_time)
-        )
-        write_view(
-            sev,
-            os.path.join(warehouse, "views", "severity"),
-            partition_cols=["storm", "forecast_compact"],
         )
 
         # J2×4 + S11: per-facility probability views (schools / health
@@ -359,11 +357,6 @@ def update(
             .persist()
         )
         cached.append(fac_view)
-        write_view(
-            fac_view,
-            os.path.join(warehouse, "views", "facilities"),
-            partition_cols=["kind", "storm", "forecast_compact", "wind_threshold"],
-        )
 
         # track severity view: per (member, threshold) — facility counts per
         # kind + tile-metric sums under the member's envelope
@@ -395,11 +388,6 @@ def update(
             .withColumn("storm", F.lit(storm))
             .withColumn("forecast_compact", F.lit(forecast_time))
         )
-        write_view(
-            track_view,
-            os.path.join(warehouse, "views", "tracks"),
-            partition_cols=["storm", "forecast_compact", "wind_threshold"],
-        )
 
         # W1: track-segment view — each member's event sequence paired with
         # its successor (consecutive-point polyline segments,
@@ -428,10 +416,23 @@ def update(
         seg = seg.withColumn("storm", F.lit(storm)).withColumn(
             "forecast_compact", F.lit(forecast_time)
         )
-        write_view(
-            seg,
-            os.path.join(warehouse, "views", "track_segments"),
-            partition_cols=["storm", "forecast_compact"],
+
+        # the six views are independent: write them concurrently
+        by_threshold = ["storm", "forecast_compact", "wind_threshold"]
+        by_forecast = ["storm", "forecast_compact"]
+        write_views(
+            [
+                (admin_view, os.path.join(warehouse, "views", "admin"), by_threshold),
+                (cci_view, os.path.join(warehouse, "views", "cci"), by_forecast),
+                (sev, os.path.join(warehouse, "views", "severity"), by_forecast),
+                (
+                    fac_view,
+                    os.path.join(warehouse, "views", "facilities"),
+                    ["kind", *by_threshold],
+                ),
+                (track_view, os.path.join(warehouse, "views", "tracks"), by_threshold),
+                (seg, os.path.join(warehouse, "views", "track_segments"), by_forecast),
+            ]
         )
 
         # report (driver-side JSON, incl. previous-forecast deltas)

@@ -6,7 +6,10 @@ All heavy computation happens in Spark aggregations; only the final ~small
 dict is collected. Deltas come from the PREVIOUS report JSON (same storm,
 forecast_time − 6 h), mirroring load_json_report(date-6h) — not a recompute.
 
-Each section is one Spark pass, so a report costs seven collects:
+Each section is one Spark pass, so a report costs seven collects, run
+concurrently (no section reads another's result): all seven frames are
+built on the calling thread, then each ``collect`` runs on its own driver
+thread (``aos_spark.fanout.run_all``):
   * A6 totals and A9 max active threshold — one groupBy(wind_threshold);
   * A8 top tiles — one ordered limit;
   * A10 landfall — min(ts) per member, then count/min/max (the first row
@@ -16,7 +19,8 @@ Each section is one Spark pass, so a report costs seven collects:
     the key-threshold tiles, each tile yielding a row per breakdown;
   * facilities — one groupBy(kind, wind_threshold) sum (it also lists the
     available thresholds, so the lowest-threshold fallback stays exact)
-    and one top-K window at the chosen threshold.
+    and one top-K window per (kind, wind_threshold); the driver keeps the
+    rows of the threshold the sums choose.
 """
 
 from __future__ import annotations
@@ -28,6 +32,8 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from aos_spark.fanout import run_all
 
 TOP_K = 5  # reports.py:73
 COMPACT_FMT = "%Y%m%d%H%M%S"  # FILE_STRUCTURE.md:308-311
@@ -105,43 +111,37 @@ def build_report(
     vulnerability breakdowns (A7/F8, reports.py:393-462), per-facility-type
     top-5 lists and expected-impact counts (reports.py:106-143,705-736),
     deltas vs the previous forecast (J13)."""
+    # the sections' frames are built here and collected concurrently below
+    # (module docstring)
+    #
     # A6 + A9 — one pass per threshold: ceil'd expected totals (NULL-safe)
     # and whether the threshold carries any probability mass; the highest
     # such threshold is the max active threshold
-    totals = {
-        int(r["wind_threshold"]): r.asDict()
-        for r in tile_view.groupBy("wind_threshold")
-        .agg(
-            F.sum(F.col("E_population").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("E_population"),
-            F.sum(F.col("E_built_surface").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("E_built_surface"),
-            (F.sum("probability") > 0).alias("active"),
-        )
-        .collect()
-    }
-    max_active_threshold = max(
-        (th for th, r in totals.items() if r["active"]), default=None
+    totals_df = tile_view.groupBy("wind_threshold").agg(
+        F.sum(F.col("E_population").cast("decimal(18,6)"))
+        .cast("double")
+        .alias("E_population"),
+        F.sum(F.col("E_built_surface").cast("decimal(18,6)"))
+        .cast("double")
+        .alias("E_built_surface"),
+        (F.sum("probability") > 0).alias("active"),
     )
 
     # A8 — top-K tiles by probability at the key threshold (deterministic
     # tie-break by tile_id)
-    top_tiles = [
-        {"tile_id": int(r["tile_id"]), "probability": r["probability"]}
-        for r in tile_view.filter(F.col("wind_threshold") == key_threshold)
+    top_tiles_df = (
+        tile_view.filter(F.col("wind_threshold") == key_threshold)
         .orderBy(F.col("probability").desc(), F.col("tile_id"))
         .limit(TOP_K)
-        .collect()
-    ]
+    )
 
     # A10/W2 — landfall: first event above the key threshold per member.
     # The first row by (ts, event_id) has the member's minimum ts, so a
     # per-member min() replaces the row_number window; a NULL ts sorts
-    # first, so a member with one keeps NULL as its first ts.
+    # first, so a member with one keeps NULL as its first ts. A global
+    # aggregate: exactly one row.
     ts = F.col("ts")
-    lf = (
+    landfall_df = (
         events.filter(F.col("value") >= key_threshold)
         .groupBy("event_type")
         .agg(
@@ -152,26 +152,11 @@ def build_report(
             F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias("earliest"),
             F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("latest"),
         )
-        .first()
     )
-    landfall = {
-        "n_members_making_landfall": int(lf["n"]),
-        "landfall_fraction": round(lf["n"] / ensemble_size, 6),
-        "earliest": lf["earliest"],
-        "latest": lf["latest"],
-    }
 
     # per-admin rows at the key threshold, keyed BY NAME (deliberate
     # deviation from reports.py:538-544's positional alignment — documented)
-    admin_rows = {
-        int(r["admin_id"]): {
-            "E_population": _optional(r["E_population"]),
-            "E_built_surface": _optional(r["E_built_surface"]),
-            "E_rwi": _optional(r["E_rwi"]),
-        }
-        for r in admin_view.filter(F.col("wind_threshold") == key_threshold).collect()
-        if r["admin_id"] is not None
-    }
+    admin_df = admin_view.filter(F.col("wind_threshold") == key_threshold)
 
     # A7/F8 — vulnerability section at the key threshold. Poverty bands come
     # from actual RWI (E_rwi / probability, reports.py:440-462); the
@@ -198,8 +183,7 @@ def build_report(
             ]
         ]
     )
-    bands: dict = {"poverty": {}, "urban_rural": {}}
-    for r in (
+    bands_df = (
         key_tiles.select(
             "E_population",
             "E_built_surface",
@@ -210,8 +194,64 @@ def build_report(
             F.sum("E_population").alias("E_population"),
             F.sum("E_built_surface").alias("E_built_surface"),
         )
-        .collect()
-    ):
+    )
+
+    # per-facility-type top-5 + expected impacted-facility counts
+    # (reports.py:705-736: nlargest(5, probability) at the key threshold,
+    # falling back to the lowest available threshold; expected count =
+    # ceil(Σ probability); kind with no facility data at all → None).
+    # One small (kind, threshold) sum gives both the available thresholds
+    # and the expected counts. The top-K is taken per (kind, threshold),
+    # so it needs no threshold chosen first; the driver keeps the chosen
+    # threshold's rows (at most kinds × thresholds × TOP_K rows come
+    # back). The row-number filter is planned as a window group limit, so
+    # the shuffle stays bounded by TOP_K rows per group and partition.
+    frames = [totals_df, top_tiles_df, landfall_df, admin_df, bands_df]
+    if fac_view is not None:
+        from pyspark.sql import Window
+
+        sums_df = fac_view.groupBy("kind", "wind_threshold").agg(
+            F.sum("probability").alias("p")
+        )
+        w = Window.partitionBy("kind", "wind_threshold").orderBy(
+            F.col("probability").desc(), "facility_id"
+        )
+        top_fac_df = (
+            fac_view.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") <= TOP_K)
+            .select("kind", "wind_threshold", "facility_id", "probability", "__rn")
+        )
+        frames += [sums_df, top_fac_df]
+
+    collected = run_all(spark, [df.collect for df in frames])
+    totals_rows, top_tile_rows, (lf,), admin_rows_raw, band_rows = collected[:5]
+
+    totals = {int(r["wind_threshold"]): r.asDict() for r in totals_rows}
+    max_active_threshold = max(
+        (th for th, r in totals.items() if r["active"]), default=None
+    )
+    top_tiles = [
+        {"tile_id": int(r["tile_id"]), "probability": r["probability"]}
+        for r in top_tile_rows
+    ]
+    landfall = {
+        "n_members_making_landfall": int(lf["n"]),
+        "landfall_fraction": round(lf["n"] / ensemble_size, 6),
+        "earliest": lf["earliest"],
+        "latest": lf["latest"],
+    }
+    admin_rows = {
+        int(r["admin_id"]): {
+            "E_population": _optional(r["E_population"]),
+            "E_built_surface": _optional(r["E_built_surface"]),
+            "E_rwi": _optional(r["E_rwi"]),
+        }
+        for r in admin_rows_raw
+        if r["admin_id"] is not None
+    }
+
+    bands: dict = {"poverty": {}, "urban_rural": {}}
+    for r in band_rows:
         bands[r["section"]][r["band"]] = r
     vulnerability: dict = {}
     for section, labels in [
@@ -230,41 +270,25 @@ def build_report(
                     else (0 if found else None)
                 )
 
-    # per-facility-type top-5 + expected impacted-facility counts
-    # (reports.py:705-736: nlargest(5, probability) at the key threshold,
-    # falling back to the lowest available threshold; expected count =
-    # ceil(Σ probability); kind with no facility data at all → None).
-    # One small (kind, threshold) sum gives both the available thresholds
-    # and the expected counts; one top-K window at the chosen threshold
-    # gives the lists.
     top_facilities: dict = {}
     expected_facilities: dict = {}
     if fac_view is not None:
-        from pyspark.sql import Window
-
         from aos_spark.pipeline.jobs import FACILITY_KINDS
 
-        sums = fac_view.groupBy("kind", "wind_threshold").agg(
-            F.sum("probability").alias("p")
-        ).collect()
+        sums, top_rows = collected[5:]
         ths = sorted({r["wind_threshold"] for r in sums})
         key_th = key_threshold if key_threshold in ths else (ths[0] if ths else None)
         if key_th is not None:
             expected = {
                 r["kind"]: r["p"] for r in sums if r["wind_threshold"] == key_th
             }
-            w = Window.partitionBy("kind").orderBy(
-                F.col("probability").desc(), "facility_id"
-            )
-            top_rows = (
-                fac_view.filter(F.col("wind_threshold") == key_th)
-                .withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") <= TOP_K)
-                .collect()
-            )
             for kind in FACILITY_KINDS:
                 rows = sorted(
-                    (r for r in top_rows if r["kind"] == kind),
+                    (
+                        r
+                        for r in top_rows
+                        if r["kind"] == kind and r["wind_threshold"] == key_th
+                    ),
                     key=lambda r: r["__rn"],
                 )
                 top_facilities[kind] = [

@@ -41,6 +41,19 @@ def check_case_locale(language: str) -> None:
         )
 
 
+def local_cores(env_cpus: str | None, cpu_count: int | None) -> int:
+    """Cores of the default local master: ``SPARK_GRAFT_CPUS`` when set
+    (``env_cpus``), else the host's ``os.cpu_count()`` (4 when unknown).
+    The one source for the master, the shuffle partition count and the
+    scan split floor, so they cannot disagree."""
+    if env_cpus:
+        n = int(env_cpus)
+        if n < 1:
+            raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {env_cpus!r}")
+        return n
+    return cpu_count or 4
+
+
 def get_spark(
     app_name: str = "aos_spark",
     master: str | None = None,
@@ -49,16 +62,18 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    Local mode sizes shuffle partitions to the core count; on a real
-    cluster leave ``shuffle_partitions`` None and let AQE coalesce from
-    an intentionally-high initial number.
+    Local mode sizes shuffle partitions and the scan split floor to the
+    core count (:func:`local_cores`); on a real cluster leave
+    ``shuffle_partitions`` None and let AQE coalesce from an
+    intentionally-high initial number.
     """
+    cores = local_cores(os.environ.get("SPARK_GRAFT_CPUS"), os.cpu_count())
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
-        master = f"local[{cpus}]"
+        master = f"local[{cores}]"
     is_local = master.startswith("local")
+    parallelism = cores if is_local else 2000
     if shuffle_partitions is None:
-        shuffle_partitions = (os.cpu_count() or 8) if is_local else 2000
+        shuffle_partitions = parallelism
 
     b = (
         SparkSession.builder.master(master)
@@ -73,7 +88,7 @@ def get_spark(
         # split even a single small parquet file across the cluster: the
         # driver test tables are one file each, and a 1-partition scan
         # serializes every downstream codegen stage onto one core
-        .config("spark.sql.files.minPartitionNum", str((os.cpu_count() or 8) if is_local else 2000))
+        .config("spark.sql.files.minPartitionNum", str(parallelism))
         # reference math is NaN-propagating pandas; ANSI would raise instead
         .config("spark.sql.ansi.enabled", "false")
         # AQE coalesces post-shuffle partitions by BYTES, but the LLM-tier
