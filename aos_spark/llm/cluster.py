@@ -63,10 +63,15 @@ def kmeans_fit(
     the two-shuffle step above; localCheckpoint truncates lineage so the
     plan does not grow with iterations (same discipline as
     dup_clusters). Lloyd monotonically lowers inertia (tested), so a
-    fixed small n_iter is the standard trade at corpus scale."""
+    fixed small n_iter is the standard trade at corpus scale. The input
+    is spread (kmeans_lloyd_step's guard) and materialized ONCE per fit,
+    not once per round."""
+    from aos_spark.llm.dedup import ensure_min_partitions
+
+    spread = ensure_min_partitions(df).localCheckpoint()
     cents = None
     for _ in range(n_iter):
-        step = kmeans_lloyd_step(df, k, id_col, vec_col, centroids=cents)
+        step = _lloyd_step(spread, df, k, id_col, vec_col, cents)
         cents = centroids_to_vectors(step, id_col, vec_col).localCheckpoint()
     return cents
 
@@ -92,7 +97,15 @@ def kmeans_lloyd_step(
     # the |corpus|·dim·k distance map side runs at the SCAN's parallelism
     # (no exchange below it) — a single-row-group parquet corpus is 1
     # task however many splits are requested (r16, guide §2.5)
-    ve = explode_vectors(ensure_min_partitions(df), id_col, vec_col)
+    return _lloyd_step(
+        ensure_min_partitions(df), df, k, id_col, vec_col, centroids
+    )
+
+
+def _lloyd_step(spread, df, k, id_col, vec_col, centroids) -> DataFrame:
+    """kmeans_lloyd_step over ``spread``, an already-spread copy of
+    ``df`` (seeding still reads ``df``)."""
+    ve = explode_vectors(spread, id_col, vec_col)
     if centroids is None:
         # the k LOWEST-ID vectors, as documented — not filter(id < k),
         # which silently under-seeds (possibly to zero) when ids are

@@ -571,43 +571,28 @@ def banded_minhash_frame(
     n: int = 3,
 ) -> DataFrame:
     """(id, shingles, band, band_key) — the LSH bucket frame shared by
-    within-corpus pair mining and cross-corpus contamination checks.
-    ``num_hashes`` must divide evenly into ``bands``: the band slices
-    cover rows_per_band·bands signature rows, so a remainder would mean
-    silently computing (and paying for) hashes that never enter any band
-    key, with a different recall curve than requested (r9 review)."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands}); "
-            f"{num_hashes % bands} trailing signature rows would be ignored"
-        )
-    rows_per_band = num_hashes // bands
-    sig = (
-        shingle_frame(df, id_col, text_col, n)
-        .select("id", "shingles", F.transform("shingles", shingle_hash).alias("__hashed"))
-        .select("id", "shingles", minhash_signature(F.col("__hashed"), num_hashes).alias("sig"))
+    within-corpus pair mining and cross-corpus contamination checks:
+    banded_keys_from_shingles over shingle_frame, carrying the shingle
+    arrays (same columns, same plan)."""
+    return banded_keys_from_shingles(
+        shingle_frame(df, id_col, text_col, n), num_hashes, bands,
+        carry_shingles=True,
     )
-    return sig.select(
-        "id",
-        "shingles",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.concat_ws(
-                            "|",
-                            F.transform(
-                                F.slice(F.col("sig"), bi * rows_per_band + 1, rows_per_band),
-                                lambda h: h.cast("string"),
-                            ),
-                        ).alias("band_key"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", "shingles", "bk.band", "bk.band_key")
+
+
+def _band_rows(df: DataFrame, cols: list[str], keys: list[Column]) -> DataFrame:
+    """(cols…, band, band_key), one row per band with band_key =
+    keys[band] — the bucket rows of every banded candidate generator
+    (MinHash signature bands, SimHash bit bands)."""
+    bands = F.array(
+        *[
+            F.struct(F.lit(bi).alias("band"), key.alias("band_key"))
+            for bi, key in enumerate(keys)
+        ]
+    )
+    return df.select(*cols, F.explode(bands).alias("bk")).select(
+        *cols, "bk.band", "bk.band_key"
+    )
 
 
 def banded_keys_from_shingles(
@@ -616,7 +601,11 @@ def banded_keys_from_shingles(
 ) -> DataFrame:
     """(id, band, band_key) — the LIGHT banded-LSH frame: signature band
     keys computed from an existing (id, shingles) frame, WITHOUT carrying
-    the shingle payload. The candidate bucket join only needs to decide
+    the shingle payload. ``num_hashes`` must divide evenly into
+    ``bands``: the band slices cover rows_per_band·bands signature rows,
+    so a remainder would mean silently computing (and paying for) hashes
+    that never enter any band key, with a different recall curve than
+    requested (r9 review). The candidate bucket join only needs to decide
     WHICH ids collide; shuffling the full shingle arrays through it
     (×bands copies per doc, both join sides, plus the pair-dedup
     aggregation) moved orders of magnitude more bytes than the decision
@@ -645,27 +634,17 @@ def banded_keys_from_shingles(
         "id", *payload,
         minhash_signature(F.col("__hashed"), num_hashes).alias("sig"),
     )
-    return sig.select(
-        "id",
-        *payload,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.concat_ws(
-                            "|",
-                            F.transform(
-                                F.slice(F.col("sig"), bi * rows_per_band + 1, rows_per_band),
-                                lambda h: h.cast("string"),
-                            ),
-                        ).alias("band_key"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", *payload, "bk.band", "bk.band_key")
+    keys = [
+        F.concat_ws(
+            "|",
+            F.transform(
+                F.slice(F.col("sig"), bi * rows_per_band + 1, rows_per_band),
+                lambda h: h.cast("string"),
+            ),
+        )
+        for bi in range(bands)
+    ]
+    return _band_rows(sig, ["id", *payload], keys)
 
 
 def _attach_shingles(
@@ -688,6 +667,20 @@ def _attach_shingles(
     return cand.join(sa, "id_a").join(sb, "id_b")
 
 
+def _bucket_self_join(frame: DataFrame, keys) -> DataFrame:
+    """Bucket-mates of one corpus-sized frame: ``x`` ⋈ ``y`` on ``keys``,
+    restricted to x.id < y.id. FORCES a sort-merge join — the frame is
+    corpus-sized and statistics under-estimate it (the planner attempted
+    a 3.6 GiB broadcast at 1M docs — scale_smoke r5). ONE copy for the
+    MinHash, SimHash, embedding-bucket and SemDeDup cluster self-joins;
+    callers select the x./y. columns they verify on."""
+    return (
+        frame.alias("x")
+        .join(frame.alias("y").hint("merge"), keys)
+        .filter(F.col("x.id") < F.col("y.id"))
+    )
+
+
 def _banded_candidates(
     x: DataFrame,
     y: DataFrame | None = None,
@@ -696,26 +689,26 @@ def _banded_candidates(
 ) -> DataFrame:
     """Candidate ID pairs from LIGHT banded-LSH frames (id, band,
     band_key): bucket-mates on (band, band_key), deduped to one row per
-    (id_a, id_b). Self-join mode (``y`` None) restricts to id_a < id_b
-    and FORCES a sort-merge join — the banded frame is corpus-sized and
-    statistics under-estimate it (the planner attempted a 3.6 GiB
-    broadcast at 1M docs — scale_smoke r5); cross-corpus mode broadcasts
-    the (eval-set-sized) ``y`` side when asked. ONE copy of this block
+    (id_a, id_b). Self-join mode (``y`` None) is _bucket_self_join on
+    (band, band_key); cross-corpus mode broadcasts the (eval-set-sized)
+    ``y`` side when asked. ONE copy of this block
     (r9 review): minhash_lsh_pairs, cross_contamination_pairs, and
     lsh_recall_eval carried three drifting hand-rolled variants, so a
     candidate-shape fix had to be remembered in three places. r15: the
     frames no longer carry shingle arrays through this join — see
-    banded_keys_from_shingles."""
-    xa = x.alias("x")
+    banded_keys_from_shingles — except an ``x`` built with
+    carry_shingles=True, whose arrays ride along as sh_a (one row per
+    pair; sh_a is identical on every collision row of a pair, so the
+    kept row's payload is value-deterministic)."""
     if y is None:
-        yb = x.alias("y").hint("merge")
+        cand = _bucket_self_join(x, ["band", "band_key"])
     else:
         ya = y.alias("y")
         yb = F.broadcast(ya) if broadcast_y else ya.hint("merge")
-    cand = xa.join(yb, ["band", "band_key"])
-    if y is None:
-        cand = cand.filter(F.col("x.id") < F.col("y.id"))
+        cand = x.alias("x").join(yb, ["band", "band_key"])
     cols = [F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b")]
+    if "shingles" in x.columns:
+        cols.append(F.col("x.shingles").alias("sh_a"))
     return cand.select(*cols).dropDuplicates(["id_a", "id_b"])
 
 
@@ -799,18 +792,7 @@ def cross_contamination_pairs(
         csh, num_hashes, bands, carry_shingles=True
     )
     hk = banded_keys_from_shingles(hsh, num_hashes, bands)
-    cand = (
-        ck.alias("x")
-        .join(F.broadcast(hk.alias("y")), ["band", "band_key"])
-        .select(
-            F.col("x.id").alias("id_a"),
-            F.col("x.shingles").alias("sh_a"),
-            F.col("y.id").alias("id_b"),
-        )
-        # one row per (id_a, id_b); sh_a is identical on every collision
-        # row of a pair, so the kept row's payload is value-deterministic
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = _banded_candidates(ck, hk, broadcast_y=True)
     sb = F.broadcast(
         hsh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
     )
@@ -877,32 +859,16 @@ def simhash_near_dups(
     hashed = df.select(
         F.col(id_col).alias("id"), simhash64(F.col(text_col)).alias("sh")
     )
-    n_bands = 64 // band_bits
     mask = (1 << band_bits) - 1
-    banded = hashed.select(
-        "id",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.shiftrightunsigned("sh", bi * band_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_key"),
-                    )
-                    for bi in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", "sh", "bk.band", "bk.band_key")
+    keys = [
+        F.shiftrightunsigned("sh", bi * band_bits).bitwiseAND(F.lit(mask))
+        for bi in range(64 // band_bits)
+    ]
+    banded = _band_rows(hashed, ["id", "sh"], keys)
     # persist: without it the Arrow simhash UDF runs once per self-join side
     banded = persist_tracked(banded)
     cand = (
-        banded.alias("x")
-        # merge hint — same corpus-sized-self-join discipline as minhash
-        .join(banded.alias("y").hint("merge"), ["band", "band_key"])
-        .filter(F.col("x.id") < F.col("y.id"))
+        _bucket_self_join(banded, ["band", "band_key"])
         .select(
             F.col("x.id").alias("id_a"),
             F.col("y.id").alias("id_b"),
@@ -944,14 +910,10 @@ def embedding_near_dups(
     # light-compute similarity paths — see llm/similarity ivf_assign —
     # so the cache build stays at scan parallelism here too)
     bucketed = persist_tracked(bucketed)
-    cand = (
-        bucketed.alias("x")
-        # merge hint — same corpus-sized-self-join discipline as minhash
-        .join(bucketed.alias("y").hint("merge"), "bucket")
-        .filter(F.col("x.id") < F.col("y.id"))
-    )
+    # no pair dedup: one bucket key per vector cannot yield a pair twice
     return (
-        cand.withColumn(
+        _bucket_self_join(bucketed, "bucket")
+        .withColumn(
             "cosine", F.round(cosine_from_norms("x.v", "y.v", "x.nv", "y.nv"), 6)
         )
         .filter(F.col("cosine") >= threshold)
@@ -1360,18 +1322,16 @@ def semantic_dedup(
             "vnorm", "centroid_id",
         )
     )
-    a = assigned.alias("a")
-    b = assigned.alias("b")
+    # the higher id (y) of each close within-cluster pair drops
     dropped = (
-        a.join(b.hint("merge"), "centroid_id")
-        .filter(F.col("b.id") < F.col("a.id"))
+        _bucket_self_join(assigned, "centroid_id")
         .filter(
             F.round(
-                cosine_from_norms("a.v", "b.v", "a.vnorm", "b.vnorm"), 6
+                cosine_from_norms("y.v", "x.v", "y.vnorm", "x.vnorm"), 6
             )
             >= threshold
         )
-        .select(F.col("a.id").alias("id"))
+        .select(F.col("y.id").alias("id"))
         .distinct()
     )
     return (
@@ -1468,13 +1428,11 @@ def lsh_recall_eval(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    sample_buckets: int | None = None,
-    n_buckets: int | None = None,
     num_hashes: int = 16,
     bands: int = 4,
     n: int = 3,
     threshold: float = 0.5,
-    sample_docs: int | None = None,
+    sample_docs: int = 1000,
 ) -> DataFrame:
     """Banding-parameter evaluation: on a DETERMINISTIC hash sample of
     the corpus, compare the LSH candidate pairs against ground truth
@@ -1483,58 +1441,23 @@ def lsh_recall_eval(
     full-corpus run.
 
     The ground truth is quadratic-in-the-sample BY DESIGN and therefore
-    confined to the hash sample (``sample_buckets``/``n_buckets`` of
-    docs, md5-deterministic — no RNG, reproducible under any
-    partitioning); for any positive threshold it is computed from exact
-    posting-list intersection counts (no array payload shuffles — r15),
-    falling back to the all-pairs BNLJ only at threshold <= 0. The LSH
-    side reuses the production banded machinery on the same sample. Output is ONE row:
-    n_sample_docs, n_true_pairs, n_candidate_pairs (bucket-mates),
+    confined to the sample: the first ``sample_docs`` docs in
+    md5('lsh_eval'||id) order — a deterministic uniform hash, no RNG,
+    reproducible under any partitioning, compiled to
+    TakeOrderedAndProject (per-partition partial top-k, no full sort, no
+    shuffle of the corpus), so the eval cost is O(sample_docs²) at ANY
+    corpus size (the evaluation needs statistical mass, 10³-10⁴ docs, not
+    the whole corpus; a corpus FRACTION made it 59.8x wall sf0.1→sf1,
+    BENCH_SF1_DIAG r12). For any positive threshold it is computed from
+    exact posting-list intersection counts (no array payload shuffles —
+    r15), falling back to the all-pairs BNLJ only at threshold <= 0. The
+    LSH side reuses the production banded machinery on the same sample.
+    Output is ONE row: n_sample_docs, n_true_pairs, n_candidate_pairs (bucket-mates),
     n_hit_pairs (true pairs the banding surfaced), recall, precision —
     exact integers and single divisions.
-
-    Sampling has two modes. The legacy ``sample_buckets``/``n_buckets``
-    FRACTION keeps the truth stage O((f·N)²) — at 10x data it does 100x
-    work (measured 59.8x wall sf0.1→sf1, BENCH_SF1_DIAG r12), which is
-    exactly the super-linearity this docstring used to warn about.
-    ``sample_docs`` replaces it with an ABSOLUTE cap: the first
-    ``sample_docs`` docs in md5('lsh_eval'||id) order — the same
-    deterministic uniform hash, but compiled to TakeOrderedAndProject
-    (per-partition partial top-k, no full sort, no shuffle of the
-    corpus), so the eval cost is O(sample_docs²) at ANY corpus size.
-    The evaluation needs statistical mass (10³-10⁴ docs), not the whole
-    corpus. The two modes are mutually exclusive: passing sample_docs
-    together with an EXPLICIT sample_buckets/n_buckets raises
-    ValueError rather than silently ignoring the fraction knobs — the
-    fraction knobs are None sentinels resolved to 20/100 inside, so an
-    explicit pass (even of those same values) is distinguishable from
-    not passing them (ADVICE r13: a literal-default check silently
-    stops firing if the defaults ever change).
     """
-    from aos_spark.llm.sampling import hash_bucket
-
-    if sample_docs is not None:
-        if sample_buckets is not None or n_buckets is not None:
-            raise ValueError(
-                "sample_docs (absolute cap) and sample_buckets/n_buckets "
-                "(fraction sampling) are mutually exclusive — the fraction "
-                "knobs are ignored when sample_docs is set; pass one or "
-                "the other"
-            )
-        h = F.md5(F.concat(F.lit("lsh_eval"), F.col(id_col).cast("string")))
-        sample = (
-            df.orderBy(h.asc(), F.col(id_col).asc())
-            .limit(sample_docs)
-        )
-    else:
-        sample = df.filter(
-            hash_bucket(
-                id_col,
-                100 if n_buckets is None else n_buckets,
-                "lsh_eval",
-            )
-            < (20 if sample_buckets is None else sample_buckets)
-        )
+    h = F.md5(F.concat(F.lit("lsh_eval"), F.col(id_col).cast("string")))
+    sample = df.orderBy(h.asc(), F.col(id_col).asc()).limit(sample_docs)
     sh = persist_tracked(shingle_frame(sample, id_col, text_col, n))
     if threshold > 0.0:
         # Ground truth via exact posting-list intersection counts (r15,

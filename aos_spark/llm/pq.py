@@ -28,8 +28,10 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from aos_spark.ops.topk import topk_per_group
 
 
 def pq_codebooks(
@@ -264,11 +266,7 @@ def pq_topk(
             F.round(F.sum("d").cast("double"), 6).alias("approx_dist")
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= top_k)
-        .select(query_id_col, "neighbor_id", "approx_dist", "rank")
-    )
+    return topk_per_group(
+        scored, [query_id_col], "approx_dist", "neighbor_id", top_k,
+        ascending=True, rank_col="rank",
+    ).select(query_id_col, "neighbor_id", "approx_dist", "rank")

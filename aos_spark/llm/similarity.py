@@ -15,8 +15,10 @@ from __future__ import annotations
 import math
 import random
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from aos_spark.ops.topk import topk_per_group
 
 
 def dot_expr(a, b) -> Column:
@@ -46,60 +48,37 @@ def cosine_from_norms(a, b, norm_a, norm_b) -> Column:
     return dot_expr(a, b) / (na * nb)
 
 
-def _broadcast_cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-    label_col: str | None,
-) -> DataFrame:
-    """Shared core of brute_force_topk / hard_negative_topk: broadcast the
-    (small) query frame onto the corpus with a non-equi predicate, score
-    cosine from pre-computed norms, rank per query. One plan, one
-    tie-break convention (cosine desc, neighbor_id asc) — the two public
-    faces differ ONLY in the join predicate (id mismatch vs label
-    mismatch) and whether neighbor_label rides into the output, so a fix
-    to either reaches both (r6 review: they had drifted into copies)."""
-    qcols = [
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        norm_expr(F.col(vec_col)).alias("__qn"),
-    ]
-    ccols = [
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        norm_expr(F.col(vec_col)).alias("__cn"),
-    ]
-    if label_col is not None:
-        qcols.append(F.col(label_col).alias("__ql"))
-        ccols.append(F.col(label_col).alias("__cl"))
-        pred = F.col("__cl") != F.col("__ql")
-    else:
-        pred = F.col("neighbor_id") != F.col("query_id")
-    # NOTE (r16, measured): the |corpus|×|queries| cosine projection runs
-    # at the SCAN's parallelism (1 task on a single-row-group corpus),
-    # but spreading it with ensure_min_partitions was a net LOSS here —
-    # interleaved A/B 0.87× on ann_recall_eval — because the per-row
-    # work (|Q| dots) is light next to the round-robin shuffle + extra
-    # stage it buys. Contrast pq_encode/kmeans_lloyd_step, where the
-    # same guard won 1.2-1.7× (128-row join / 64·k distance map per row).
-    scored = (
-        corpus.select(*ccols)
-        .join(F.broadcast(queries.select(*qcols)), pred)
-        .withColumn("cosine", cosine_from_norms("__qv", "__cv", "__qn", "__cn"))
+_SIDE_IDS = {"q": "query_id", "c": "neighbor_id"}
+
+
+def _side(df: DataFrame, id_col: str, vec_col: str, side: str, *extra) -> DataFrame:
+    """(id, vector, norm) rows for one side of the cosine verify: query
+    side "q" → (query_id, __qv, __qn), corpus side "c" → (neighbor_id,
+    __cv, __cn), plus ``extra`` columns. The norm is computed here, once
+    per vector — never once per candidate pair."""
+    return df.select(
+        F.col(id_col).alias(_SIDE_IDS[side]),
+        F.col(vec_col).alias(f"__{side}v"),
+        norm_expr(F.col(vec_col)).alias(f"__{side}n"),
+        *extra,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+
+
+def _cosine_topk(cands: DataFrame, k: int, *extra) -> DataFrame:
+    """The verify → top-k tail of every cosine ANN operator: candidate
+    rows (query_id, __qv, __qn, neighbor_id, __cv, __cn) from ANY
+    generator — broadcast scan, hyperplane bucket, IVF probe — are scored
+    by exact cosine from the pre-computed norms, ranked by the shared
+    rule (cosine desc, neighbor_id asc, ops/topk.topk_per_group) and
+    rounded to 6 places. ``extra`` output columns sit before cosine."""
+    scored = cands.withColumn(
+        "cosine", cosine_from_norms("__qv", "__cv", "__qn", "__cn")
     )
-    out_cols = ["query_id", "neighbor_id"]
-    if label_col is not None:
-        out_cols.append(F.col("__cl").alias("neighbor_label"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(*out_cols, F.round("cosine", 6).alias("cosine"), "rank")
+    ranked = topk_per_group(
+        scored, ["query_id"], "cosine", "neighbor_id", k, rank_col="rank"
+    )
+    return ranked.select(
+        "query_id", "neighbor_id", *extra, F.round("cosine", 6).alias("cosine"), "rank"
     )
 
 
@@ -113,13 +92,23 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector.
 
-    Plan shape: broadcast(queries) × corpus → cosine → per-query top-k via
-    window. The corpus never shuffles; only (|Q|·k) rows survive to the
-    final exchange. Self-matches (same id) are excluded.
+    Plan shape: broadcast(queries) × corpus with a non-equi id-mismatch
+    predicate (self-matches excluded) → the shared cosine verify → per-
+    query top-k via window. The corpus never shuffles; only (|Q|·k) rows
+    survive to the final exchange.
     """
-    return _broadcast_cosine_topk(
-        corpus, queries, k, id_col, vec_col, query_id_col, label_col=None
+    # NOTE (r16, measured): the |corpus|×|queries| cosine projection runs
+    # at the SCAN's parallelism (1 task on a single-row-group corpus),
+    # but spreading it with ensure_min_partitions was a net LOSS here —
+    # interleaved A/B 0.87× on ann_recall_eval — because the per-row
+    # work (|Q| dots) is light next to the round-robin shuffle + extra
+    # stage it buys. Contrast pq_encode/kmeans_lloyd_step, where the
+    # same guard won 1.2-1.7× (128-row join / 64·k distance map per row).
+    cands = _side(corpus, id_col, vec_col, "c").join(
+        F.broadcast(_side(queries, query_id_col, vec_col, "q")),
+        F.col("neighbor_id") != F.col("query_id"),
     )
+    return _cosine_topk(cands, k)
 
 
 def hard_negative_topk(
@@ -138,13 +127,16 @@ def hard_negative_topk(
     Learning with Hard Negative Samples", ICLR'21 motivates the recipe;
     the mining step itself is this exact filtered top-k).
 
-    Same plan as brute_force_topk (shared _broadcast_cosine_topk core)
-    with the label-mismatch predicate INSIDE the join — same-label rows
-    (including the anchor itself) never materialize. Output adds
-    neighbor_label."""
-    return _broadcast_cosine_topk(
-        corpus, queries, k, id_col, vec_col, query_id_col, label_col=label_col
+    Same plan as brute_force_topk with the label-mismatch predicate
+    INSIDE the broadcast join — same-label rows (including the anchor
+    itself) never materialize. Output adds neighbor_label."""
+    cands = _side(corpus, id_col, vec_col, "c", F.col(label_col).alias("__cl")).join(
+        F.broadcast(
+            _side(queries, query_id_col, vec_col, "q", F.col(label_col).alias("__ql"))
+        ),
+        F.col("__cl") != F.col("__ql"),
     )
+    return _cosine_topk(cands, k, F.col("__cl").alias("neighbor_label"))
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -215,12 +207,8 @@ def ivf_assign(
     # NOTE (r16, measured): spreading this 1-task map side with
     # ensure_min_partitions was a net loss (interleaved A/B 0.81× on
     # sim_ivf_topk) — k cosines per row are light next to the shuffle.
-    scored = corpus.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("v"),
-        norm_expr(F.col(vec_col)).alias("vnorm"),
-    ).crossJoin(F.broadcast(c))
-    sim = cosine_from_norms("v", "cvec", "vnorm", "cnorm")
+    scored = _side(corpus, id_col, vec_col, "c").crossJoin(F.broadcast(c))
+    sim = cosine_from_norms("__cv", "cvec", "__cn", "cnorm")
     # r15 (guide §2.2 partial aggregation): the per-vector argmax was a
     # row_number window over the corpus×k scored frame — a full exchange
     # of k rows per vector plus a partition sort. One MIN(struct) aggregate
@@ -229,20 +217,20 @@ def ivf_assign(
     # and nothing sorts. Ordering parity with the window's
     # (sim DESC, centroid_id ASC): the min key is (-sim, centroid_id),
     # with NaN sims mapped to -inf so they win exactly as NaN-sorts-first
-    # did under DESC; v/vnorm ride as payload fields the comparison never
-    # reaches (the key pair is unique per vid — centroid ids are
-    # distinct).
+    # did under DESC; the vector and its norm ride as payload fields the
+    # comparison never reaches (the key pair is unique per vector —
+    # centroid ids are distinct).
     key = F.when(F.isnan(sim), F.lit(float("-inf"))).otherwise(-sim)
     best = F.min(
         F.struct(
             key.alias("k1"),
             F.col("centroid_id").alias("cid"),
-            F.col("v").alias("v"),
-            F.col("vnorm").alias("vn"),
+            F.col("__cv").alias("v"),
+            F.col("__cn").alias("vn"),
         )
     ).alias("b")
-    return scored.groupBy("vid").agg(best).select(
-        F.col("vid").alias(id_col),
+    return scored.groupBy("neighbor_id").agg(best).select(
+        F.col("neighbor_id").alias(id_col),
         F.col("b.v").alias(vec_col),
         F.col("b.vn").alias("vnorm"),
         F.col("b.cid").alias("centroid_id"),
@@ -267,6 +255,29 @@ def deterministic_centroids(
             F.col(vec_col).alias("cvec"),
         )
     )
+
+
+def ivf_probes(
+    queries: DataFrame,
+    cents: DataFrame,
+    nprobe: int,
+    query_id_col: str = "query_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Each query's ``nprobe`` nearest IVF cells — the coarse candidate
+    stage shared by IVF-flat (ivf_topk) and IVF-PQ: broadcast centroids
+    (centroid_id, cvec) × queries, ranked by cosine desc, centroid_id
+    asc. Rows are (query_id, __qv, __qn, centroid_id); the query vector
+    and its norm ride along for an exact verify step."""
+    qc = _side(queries, query_id_col, vec_col, "q").crossJoin(
+        F.broadcast(cents.withColumn("cnorm", norm_expr(F.col("cvec"))))
+    )
+    qc = qc.withColumn(
+        "__qsim", cosine_from_norms("__qv", "cvec", "__qn", "cnorm")
+    )
+    return topk_per_group(
+        qc, ["query_id"], "__qsim", "centroid_id", nprobe, rank_col="__rn"
+    ).select("query_id", "__qv", "__qn", "centroid_id")
 
 
 def ivf_topk(
@@ -294,40 +305,17 @@ def ivf_topk(
         )
     else:
         cents = deterministic_centroids(corpus, n_centroids, id_col, vec_col)
-    lists = ivf_assign(corpus, cents, id_col, vec_col)
-
-    qc = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        norm_expr(F.col(vec_col)).alias("__qn"),
-    ).crossJoin(F.broadcast(cents.withColumn("cnorm", norm_expr(F.col("cvec")))))
-    qsim = cosine_from_norms("__qv", "cvec", "__qn", "cnorm")
-    wq = Window.partitionBy("query_id").orderBy(F.desc(qsim), F.col("centroid_id"))
-    probes = (
-        qc.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= nprobe)
-        .select("query_id", "__qv", "__qn", "centroid_id")
+    lists = ivf_assign(corpus, cents, id_col, vec_col).select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("__cv"),
+        F.col("vnorm").alias("__cn"),
+        "centroid_id",
     )
-
-    scored = lists.join(F.broadcast(probes), "centroid_id").filter(
-        F.col(id_col) != F.col("query_id")
+    probes = ivf_probes(queries, cents, nprobe, query_id_col, vec_col)
+    cands = lists.join(F.broadcast(probes), "centroid_id").filter(
+        F.col("neighbor_id") != F.col("query_id")
     )
-    scored = scored.withColumn(
-        "cosine", cosine_from_norms("__qv", F.col(vec_col), "__qn", "vnorm")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    return _cosine_topk(cands, k)
 
 
 def lsh_topk(
@@ -350,32 +338,18 @@ def lsh_topk(
     """
     # NOTE (r16): n_planes dots per row are light — the 1-task-scan
     # spread guard was a net loss on this family (see ivf_assign note)
-    cb = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        norm_expr(F.col(vec_col)).alias("__cn"),
+    cb = _side(
+        corpus, id_col, vec_col, "c",
         hyperplane_bucket(vec_col, n_planes, seed, dim).alias("bucket"),
     )
-    qb = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        norm_expr(F.col(vec_col)).alias("__qn"),
+    qb = _side(
+        queries, query_id_col, vec_col, "q",
         hyperplane_bucket(vec_col, n_planes, seed, dim).alias("bucket"),
     )
-    scored = cb.join(F.broadcast(qb), "bucket").filter(
+    cands = cb.join(F.broadcast(qb), "bucket").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    scored = scored.withColumn(
-        "cosine", cosine_from_norms("__qv", "__cv", "__qn", "__cn")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _cosine_topk(cands, k)
 
 
 def projection_signs(dim: int, out_dim: int, seed: int = 5) -> list[list[int]]:
@@ -450,8 +424,6 @@ def rrf_fuse(
     Plan: full outer join keyed by (query_id, doc_id) — both inputs are
     already top-N-per-query frames (|Q|·N rows), so this is dim-sized —
     then one query-keyed rank window for the fused top-k."""
-    from pyspark.sql import Window
-
     sa = a.select(
         "query_id",
         "doc_id",
@@ -472,18 +444,8 @@ def rrf_fuse(
         .withColumn("lex_micros", F.coalesce("lex_micros", F.lit(0)))
         .withColumn("rrf_micros", F.col("sem_micros") + F.col("lex_micros"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rrf_micros").desc(), F.col("doc_id").asc()
-    )
-    return (
-        fused.withColumn("fused_rank", F.row_number().over(w))
-        .filter(F.col("fused_rank") <= topk)
-        .select(
-            "query_id",
-            "doc_id",
-            "rrf_micros",
-            "sem_micros",
-            "lex_micros",
-            "fused_rank",
-        )
+    return topk_per_group(
+        fused, ["query_id"], "rrf_micros", "doc_id", topk, rank_col="fused_rank"
+    ).select(
+        "query_id", "doc_id", "rrf_micros", "sem_micros", "lex_micros", "fused_rank"
     )

@@ -21,15 +21,19 @@ def topk_per_group(
     order_col: str,
     tiebreak_col: str,
     k: int = TOP_K_FACILITIES,
+    ascending: bool = False,
+    rank_col: str = "rank_in_group",
 ) -> DataFrame:
-    """Top-k rows per group by order_col desc, deterministic tie-break.
-    row_number caps output at exactly k — matching pandas nlargest."""
-    w = Window.partitionBy(*group_cols).orderBy(
-        F.col(order_col).desc(), F.col(tiebreak_col).asc()
-    )
+    """Top-k rows per group by order_col (desc, or asc when
+    ``ascending``), tie-break tiebreak_col asc; the 1-based rank lands in
+    ``rank_col``. row_number caps output at exactly k — matching pandas
+    nlargest/nsmallest. The one rank rule of the ANN tier: every
+    similarity/PQ operator ranks its verified candidates here."""
+    order = F.col(order_col).asc() if ascending else F.col(order_col).desc()
+    w = Window.partitionBy(*group_cols).orderBy(order, F.col(tiebreak_col).asc())
     return (
-        df.withColumn("rank_in_group", F.row_number().over(w))
-        .filter(F.col("rank_in_group") <= k)
+        df.withColumn(rank_col, F.row_number().over(w))
+        .filter(F.col(rank_col) <= k)
     )
 
 

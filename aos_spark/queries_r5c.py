@@ -474,6 +474,7 @@ def q_rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus tokens, aggregates on (query_id, doc_id); fusion runs on two
     |Q|·50-row frames."""
     from aos_spark.llm.similarity import brute_force_topk, rrf_fuse
+    from aos_spark.ops.topk import topk_per_group
 
     emb = _t(spark, sf_dir, "embeddings")
     docs = _t(spark, sf_dir, "documents")
@@ -497,16 +498,9 @@ def q_rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "doc_id")
         .agg(F.count(F.lit(1)).alias("overlap"))
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("overlap").desc(), F.col("doc_id").asc()
-    )
-    lex = (
-        overlap.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 50)
-        .select("query_id", "doc_id", "rank")
-    )
+    lex = topk_per_group(
+        overlap, ["query_id"], "overlap", "doc_id", 50, rank_col="rank"
+    ).select("query_id", "doc_id", "rank")
     return rrf_fuse(sem, lex, k0=60, topk=10)
 
 

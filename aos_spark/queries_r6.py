@@ -706,14 +706,11 @@ def q_sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation — at 100 TB the (query, vector) state materializes only
     for the ~nprobe/n_centroids fraction that survives the coarse
     stage."""
-    from pyspark.sql import Window
-
     from aos_spark.llm import pq as PQ
     from aos_spark.llm.similarity import (
-        cosine_from_norms,
         deterministic_centroids,
         ivf_assign,
-        norm_expr,
+        ivf_probes,
     )
 
     e = _t(spark, sf_dir, "embeddings")
@@ -722,22 +719,7 @@ def q_sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cents = deterministic_centroids(e, 8)
     lists = ivf_assign(e, cents).select("vec_id", "centroid_id")
-    qc = queries.select(
-        "query_id",
-        F.col("embedding").alias("__qv"),
-        norm_expr(F.col("embedding")).alias("__qn"),
-    ).crossJoin(
-        F.broadcast(cents.withColumn("cnorm", norm_expr(F.col("cvec"))))
-    )
-    qsim = cosine_from_norms("__qv", "cvec", "__qn", "cnorm")
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc(qsim), F.col("centroid_id")
-    )
-    probes = (
-        qc.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= 2)
-        .select("query_id", "centroid_id")
-    )
+    probes = ivf_probes(queries, cents, 2).select("query_id", "centroid_id")
     candidates = (
         probes.join(lists, "centroid_id")
         .filter(F.col("vec_id") != F.col("query_id"))

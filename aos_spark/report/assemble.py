@@ -78,20 +78,37 @@ def report_path(warehouse: str, storm: str, forecast_time: str) -> str:
     )
 
 
+def _hadoop_file(path: str):
+    """(Hadoop Path, its FileSystem) in the active session's JVM — so a
+    report lands in and is read from any warehouse URI the writers
+    accept (``file:/abs``, object stores), not a local relative path
+    (the ``control._read_or_empty`` idiom)."""
+    spark = SparkSession.active()
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath, jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
 def save_report(warehouse: str, storm: str, forecast_time: str, report: dict) -> str:
     path = report_path(warehouse, storm, forecast_time)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "w") as f:
-        json.dump(report, f, indent=2, sort_keys=True)
+    jpath, fs = _hadoop_file(path)
+    out = fs.create(jpath, True)  # creates missing parent dirs
+    try:
+        out.write(json.dumps(report, indent=2, sort_keys=True).encode())
+    finally:
+        out.close()
     return path
 
 
 def load_report(warehouse: str, storm: str, forecast_time: str) -> dict | None:
     path = report_path(warehouse, storm, forecast_time)
-    if not os.path.exists(path):
+    jpath, fs = _hadoop_file(path)
+    if not fs.exists(jpath):
         return None
-    with open(path) as f:
-        return json.load(f)
+    stream = fs.open(jpath)
+    try:
+        return json.loads(bytes(stream.readAllBytes()))
+    finally:
+        stream.close()
 
 
 def build_report(

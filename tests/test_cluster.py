@@ -91,18 +91,34 @@ def test_iterating_reduces_inertia(spark):
     assert i2 <= i1 + 1e-9
 
 
-def test_kmeans_fit_centroid_shape_and_determinism(spark):
-    rows = [(i, [float((i * 7) % 11), float((i * 5) % 13)]) for i in range(60)]
-    df = _vecs(spark, rows)
+def test_kmeans_fit_centroid_shape_and_determinism(spark, monkeypatch):
+    """Also: the fit decides the under-partitioned-input spread ONCE (a
+    per-round ensure_min_partitions re-ran a plan-to-RDD conversion and
+    the round-robin shuffle), and its centroids equal the per-round loop
+    of the public step exactly."""
+    from aos_spark.llm import dedup
     from aos_spark.llm.cluster import kmeans_fit
 
+    rows = [(i, [float((i * 7) % 11), float((i * 5) % 13)]) for i in range(60)]
+    df = _vecs(spark, rows)
+    calls = []
+    real = dedup.ensure_min_partitions
+    monkeypatch.setattr(
+        dedup, "ensure_min_partitions", lambda f, *a: calls.append(f) or real(f, *a)
+    )
     c1 = kmeans_fit(df, k=3, n_iter=3)
+    assert len(calls) == 1
+    monkeypatch.undo()
     assert c1.count() <= 3
     assert set(c1.columns) == {"vec_id", "embedding"}
     c2 = kmeans_fit(df, k=3, n_iter=3)
     k1 = sorted((r["vec_id"], tuple(r["embedding"])) for r in c1.collect())
     k2 = sorted((r["vec_id"], tuple(r["embedding"])) for r in c2.collect())
     assert k1 == k2  # fully deterministic fit
+    loop = None
+    for _ in range(3):
+        loop = C.centroids_to_vectors(C.kmeans_lloyd_step(df, k=3, centroids=loop))
+    assert k1 == sorted((r["vec_id"], tuple(r["embedding"])) for r in loop.collect())
 
 
 def test_ivf_with_trained_centroids_recall(spark):

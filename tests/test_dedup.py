@@ -305,8 +305,8 @@ def test_lsh_recall_eval_invariants_and_identical_docs(spark):
     rows += [(100 + i, f"unique{i} filler{i} words{i} about{i} nothing{i} shared{i} at{i} all{i}")
              for i in range(6)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    # sample everything (100/100 buckets) so the eval set is the corpus
-    r = lsh_recall_eval(df, sample_buckets=100, threshold=0.3).collect()[0]
+    # a cap >= the corpus size samples everything: the eval set is the corpus
+    r = lsh_recall_eval(df, sample_docs=10, threshold=0.3).collect()[0]
     assert r["n_sample_docs"] == 10
     assert r["n_true_pairs"] == 6  # C(4,2) identical twins
     assert r["n_hit_pairs"] == r["n_true_pairs"]  # identical sigs always collide
@@ -320,8 +320,8 @@ def test_lsh_recall_eval_absolute_cap(spark):
     an ABSOLUTE doc count (TakeOrdered over the md5 hash), independent
     of corpus size — the property that killed the 59.8x sf0.1->sf1
     ratio. Checks: (a) the cap binds exactly; (b) a cap >= corpus
-    equals the full-corpus fraction sample; (c) the sampled id set is
-    the md5-order prefix, so it is deterministic and engine-portable."""
+    samples the whole corpus; (c) the sampled id set is the md5-order
+    prefix, so it is deterministic and engine-portable."""
     import hashlib
 
     from aos_spark.llm.dedup import lsh_recall_eval
@@ -332,11 +332,9 @@ def test_lsh_recall_eval_absolute_cap(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     capped = lsh_recall_eval(df, threshold=0.3, sample_docs=15).collect()[0]
     assert capped["n_sample_docs"] == 15
-    full_cap = lsh_recall_eval(df, threshold=0.3, sample_docs=40).collect()[0]
-    full_frac = lsh_recall_eval(
-        df, threshold=0.3, sample_buckets=100
-    ).collect()[0]
-    assert full_cap == full_frac  # both = whole corpus
+    for cap in (40, 41):  # = and > the corpus size
+        full = lsh_recall_eval(df, threshold=0.3, sample_docs=cap).collect()[0]
+        assert full["n_sample_docs"] == 40
     # the capped sample is the md5-order prefix
     prefix = sorted(
         range(40),
@@ -350,23 +348,6 @@ def test_lsh_recall_eval_absolute_cap(spark):
         for r in df.orderBy(h.asc(), F.col("doc_id").asc()).limit(15).collect()
     ]
     assert sorted(got) == sorted(prefix)
-
-
-def test_lsh_recall_eval_rejects_conflicting_sampling_knobs(spark):
-    """r13 ADVICE: sample_docs (absolute cap) silently ignored explicit
-    sample_buckets/n_buckets — a caller mixing the two modes got no
-    signal the fraction knobs were dead. Now it raises."""
-    import pytest
-
-    from aos_spark.llm.dedup import lsh_recall_eval
-
-    df = spark.createDataFrame([(1, "a b c")], ["doc_id", "text"])
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        lsh_recall_eval(df, sample_docs=10, sample_buckets=50)
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        lsh_recall_eval(df, sample_docs=10, n_buckets=10)
-    # defaults alongside sample_docs stay valid (the registry's call shape)
-    lsh_recall_eval(df, sample_docs=10)
 
 
 def test_hyperplane_bucket_dim_mismatch_fails_loud(spark):

@@ -158,3 +158,21 @@ def test_pipeline_and_report_do_not_import_query_modules():
         if any(m.startswith("aos_spark.queries") for m in mods):
             found.append(where)
     assert found == []
+
+
+def test_ann_modules_rank_only_through_topk_per_group():
+    """llm/similarity.py and llm/pq.py hand-roll no rank window: every
+    ANN operator ranks through ops/topk.topk_per_group."""
+    root = Path(__file__).resolve().parent.parent / "aos_spark" / "llm"
+    found = []
+    for name in ("similarity.py", "pq.py"):
+        for node in ast.walk(ast.parse((root / name).read_text())):
+            ident = (
+                node.id if isinstance(node, ast.Name)
+                else node.attr if isinstance(node, ast.Attribute)
+                else node.name if isinstance(node, ast.alias)
+                else None
+            )
+            if ident in ("Window", "row_number"):
+                found.append(f"{name}:{node.lineno}")
+    assert found == []

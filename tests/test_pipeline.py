@@ -316,3 +316,26 @@ def test_log_run_complete_unknown_run_id(spark, tmp_path):
         assert row["runtime_seconds"] == 1.5
         assert (row["storm"], row["forecast_time"], row["started_at"]) == (None,) * 3
         assert row["finished_at"] is not None
+
+
+def test_reports_live_under_a_file_uri_warehouse(spark, tmp_path, monkeypatch):
+    """Reports are written and read through the warehouse URI's Hadoop
+    FileSystem: two chained updates on a ``file:`` warehouse, with the
+    working directory changed between them, leave both reports under the
+    warehouse (byte-identical to the golden files), create nothing in
+    either working directory, and the second sees the first (deltas)."""
+    wh = tmp_path / "wh"
+    uri = "file:" + str(wh)
+    cwds = [tmp_path / "cwd1", tmp_path / "cwd2"]
+    for d in cwds:
+        d.mkdir()
+    monkeypatch.chdir(cwds[0])
+    jobs.initialize(spark, SF_DIR, uri, country="AA")
+    assert jobs.update(spark, SF_DIR, uri, STORM, FC1)["status"] == "SUCCESS"
+    monkeypatch.chdir(cwds[1])
+    assert jobs.update(spark, SF_DIR, uri, STORM, FC2)["status"] == "SUCCESS"
+    for forecast, name in [(FC1, "report_fc1.json"), (FC2, "report_fc2.json")]:
+        path = wh / "reports" / f"{STORM}_{forecast}.json"
+        assert path.read_text() == (GOLDEN / name).read_text(), name
+    assert [list(d.iterdir()) for d in cwds] == [[], []]
+    assert assemble.load_report(uri, STORM, FC2)["has_previous"] is True
