@@ -22,8 +22,39 @@ from aos_spark.cache import persist_tracked
 from aos_spark.ops.exact_round import round_ratio6
 
 
+# The tokenization rule of every text, dedup and packing operator:
+# lower-case, split on runs of the excluded characters, drop the empty
+# edge tokens. WORD_SPLIT keeps apostrophes inside words (the mixture
+# and bigram-rarity token counts).
+TOKEN_SPLIT = "[^a-z0-9]+"
+WORD_SPLIT = "[^a-z0-9']+"
+
+
+def _lowered(text_col: str) -> Column:
+    # U+0130 (İ) lower-cases to "i" + U+0307 in both Spark case mappings
+    # (ICU and JVM) but to "i" in DuckDB's, so "İstanbul" would split into
+    # "i", "stanbul"; mapping it to "i" first keeps one token "istanbul".
+    return F.lower(F.translate(F.col(text_col), "\u0130", "i"))
+
+
+def tokens(text_col: str = "text", split: str = TOKEN_SPLIT) -> Column:
+    """The token array of ``text_col``; NULL text gives NULL, text with no
+    token gives [].
+
+    ONE regex pass — split on the excluded-character runs directly and
+    drop the empty edge tokens — instead of regexp_replace + trim + a
+    second split on whitespace (~3× less regex CPU per row, measured at
+    sf0.1; at corpus scale tokenize dominates the shingle pipeline). The
+    token lists equal the two-pass form's with its empty strings dropped.
+    That form gives [""] for a text with no token; where a DuckDB oracle
+    keeps it, the consumer yields the same rows for [""] and [] (n-grams
+    with n ≥ 2, dropped empty terms)."""
+    return F.array_remove(F.split(_lowered(text_col), split), "")
+
+
 def normalized_text(text_col: str = "text") -> Column:
-    return F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"[^a-z0-9]+", " "))
+    """The tokens of ``text_col`` joined by single spaces."""
+    return F.trim(F.regexp_replace(_lowered(text_col), TOKEN_SPLIT, " "))
 
 
 def exact_dedup(
@@ -74,7 +105,16 @@ def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFr
     """Round-robin repartition ONLY when the input is under-partitioned
     (e.g. a single small parquet file, which cannot split below one row
     group). At warehouse scale inputs already carry enough partitions and
-    this is a no-op — no gratuitous shuffle."""
+    this is a no-op — no gratuitous shuffle.
+
+    At a tokenize entry the guard moves the regex tokenize + explode map
+    work, which runs BEFORE the first exchange, off the single task a
+    one-row-group corpus scans as. It is applied only where the
+    interleaved A/B won (postings_index 1.11×, bigram_rarity 1.26×,
+    winnow_fingerprints 1.37× — heavy explode fan-out) and left out where
+    it measured a net loss (tfidf, cooccurrence, vocab-encode: 0.79–0.85×
+    — light tokenize, persisted frames, where the round-robin shuffle and
+    extra stage outweigh the spread)."""
     if min_parts is None:
         min_parts = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < min_parts:
@@ -85,21 +125,11 @@ def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFr
 def shingle_frame(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> DataFrame:
-    """(id, shingles) with the tokenization materialized in its own
-    projection so the shingle lambda references a column, not an expression
-    tree (see shingles_from_tokens).
-
-    Tokenization is ONE regex pass — split on the non-alnum runs directly
-    and drop empty edge tokens — instead of regexp_replace + trim + second
-    split (~3× less regex CPU per row, measured at sf0.1; at corpus scale
-    tokenize dominates the shingle pipeline). Token lists are provably
-    identical to the two-pass form, so the SQL oracles keep the two-pass
-    spelling and still hash-match."""
+    """(id, shingles) with the tokenization (see tokens) materialized in
+    its own projection so the shingle lambda references a column, not an
+    expression tree (see shingles_from_tokens)."""
     toks = ensure_min_partitions(df).select(
-        F.col(id_col).alias("id"),
-        F.array_remove(
-            F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), ""
-        ).alias("__tokens"),
+        F.col(id_col).alias("id"), tokens(text_col).alias("__tokens")
     )
     return toks.select("id", shingles_from_tokens(F.col("__tokens"), n).alias("shingles"))
 
@@ -803,9 +833,9 @@ def cross_contamination_pairs(
 def simhash64(texts: pd.Series) -> pd.Series:
     """64-bit SimHash over word tokens (vectorized Arrow UDF; bit-majority
     accumulation in numpy). Token hash = first 8 bytes of md5 — stable
-    across runs/platforms. Tokenization is the same ASCII [^a-z0-9]
-    normalization as normalized_text, so external engines (and the DuckDB
-    oracle) can reproduce the signature exactly."""
+    across runs/platforms. Tokenization is the same rule as tokens(), so
+    external engines (and the DuckDB oracle) can reproduce the signature
+    exactly."""
     import hashlib
     import re
 
@@ -830,11 +860,12 @@ def simhash64(texts: pd.Series) -> pd.Series:
     for row_i, t in enumerate(texts):
         if not t:
             continue
-        tokens = [w for w in re.sub(r"[^a-z0-9]+", " ", t.lower()).split() if w]
-        if not tokens:
+        lowered = t.replace("\u0130", "i").lower()
+        toks = [w for w in re.split(TOKEN_SPLIT, lowered) if w]
+        if not toks:
             continue
         acc = np.zeros(64, dtype=np.int64)
-        for tok in tokens:
+        for tok in toks:
             acc += tok_signs(tok)
         sh = 0
         for bit_i in range(64):
@@ -1143,9 +1174,7 @@ def exact_ngram_contamination(
     def grams(df: DataFrame, out_id: str) -> DataFrame:
         toks = ensure_min_partitions(df).select(
             F.col(id_col).alias(out_id),
-            F.array_remove(
-                F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), ""
-            ).alias("__tokens"),
+            tokens(text_col).alias("__tokens"),
         ).filter(F.size("__tokens") >= n)
         # explode_OUTER: plain explode lets InferFiltersFromGenerate push a
         # size(...)>0 filter through the __tokens projection, inlining the
@@ -1190,10 +1219,7 @@ def span_dedup_retention(
     from pyspark.sql import Window
 
     toks = ensure_min_partitions(df).select(
-        F.col(id_col),
-        F.array_remove(F.split(normalized_text(text_col), r"\s+"), "").alias(
-            "__tokens"
-        ),
+        F.col(id_col), tokens(text_col).alias("__tokens")
     )
     spans = (
         toks.filter(F.size("__tokens") > 0)

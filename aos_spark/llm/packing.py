@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from aos_spark.llm.dedup import tokens
 from aos_spark.llm.sampling import hash_bucket
 from aos_spark.llm.text import bpe_ish_token_count
 
@@ -107,10 +108,7 @@ def sliding_window_chunks(
     reproducible in any engine.
     """
     toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.array_remove(
-            F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), ""
-        ).alias("__tokens"),
+        F.col(id_col).alias("doc_id"), tokens(text_col).alias("__tokens")
     ).withColumn("n_tokens", F.size("__tokens"))
     # last start s.t. start < n and (start==0 or start+window covers new):
     # starts = 0, stride, 2·stride, …, ≤ max(0, n − window) rounded UP to

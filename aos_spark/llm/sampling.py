@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from aos_spark.llm.dedup import WORD_SPLIT, tokens
+
 DEFAULT_SPLITS: tuple[tuple[str, int], ...] = (("train", 80), ("val", 10), ("test", 10))
 
 
@@ -150,9 +152,7 @@ def mixture_plan(
     Scale shape: one partial-aggregated groupBy over the corpus (tokens
     counted JVM-side), then arithmetic against a broadcast 1-row total —
     no window, no second scan, no Python."""
-    n_tokens = F.size(
-        F.array_remove(F.split(F.lower(F.col(text_col)), r"[^a-z0-9']+"), "")
-    )
+    n_tokens = F.size(tokens(text_col, WORD_SPLIT))
     per_domain = (
         df.select(F.col(domain_col).alias("domain"), n_tokens.alias("__t"))
         .groupBy("domain")

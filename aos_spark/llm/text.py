@@ -12,24 +12,14 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from aos_spark.cache import persist_tracked
+from aos_spark.llm.dedup import (
+    WORD_SPLIT,
+    ensure_min_partitions,
+    normalized_text,
+    shingle_hash,
+    tokens,
+)
 from aos_spark.ops.exact_round import round_ratio6, scaled_round6
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """ensure_min_partitions at the tokenize entry (r16, guide §2.5):
-    a single-row-group parquet corpus scans as ONE task no matter how
-    many splits are requested, and the regex tokenize + explode map work
-    below runs BEFORE the first exchange — i.e. serialized on one core.
-    The guard is a no-op on properly partitioned inputs (same fix
-    shingle_frame has carried since the dedup tier). Applied ONLY where
-    the interleaved A/B won (postings_index 1.11×, bigram_rarity 1.26×,
-    winnow_fingerprints 1.37× — heavy explode fan-out); measured a net
-    LOSS and reverted at tfidf/cooccurrence/vocab-encode (0.79-0.85× —
-    light tokenize, persisted frames), where the round-robin shuffle +
-    extra stage outweigh the spread."""
-    from aos_spark.llm.dedup import ensure_min_partitions
-
-    return ensure_min_partitions(df)
 
 # Marker-word lists for the n-gram/stopword language heuristic. Deliberately
 # tiny and deterministic: language ID at corpus scale is a scoring pass, and
@@ -41,8 +31,6 @@ LANG_MARKERS: dict[str, list[str]] = {
     "fr": ["le", "la", "et", "les", "des"],
     "de": ["der", "die", "und", "das", "ist"],
 }
-
-_WORD_RE = r"[^a-z0-9']+"
 
 
 def token_count(text_col: str = "text") -> Column:
@@ -172,17 +160,16 @@ def build_vocab(
     text_col: str = "text",
     min_df: int = 2,
 ) -> DataFrame:
-    """Corpus vocabulary: every term (one-regex tokenization, same token
-    stream as the shingle/tf-idf tier) with its document frequency, kept
+    """Corpus vocabulary: every term (``tokens``, the same token stream
+    as the shingle/tf-idf tier) with its document frequency, kept
     when df ≥ ``min_df``. Explode → per-doc distinct → one partial-agg'd
     count shuffle; the result is Zipf-bounded (vocabulary-sized), tiny
     next to the corpus, and is exactly the frame the tf-idf join
     broadcasts."""
     # (r16: spread guard measured 0.84× on vocab_encode_tokens — reverted)
     terms = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+")).alias("term"),
-    ).filter(F.col("term") != "")
+        F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("term")
+    )
     return (
         terms.distinct()
         .groupBy("term")
@@ -219,10 +206,8 @@ def encode_tokens(
     )
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.posexplode(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+")).alias(
-            "pos", "term"
-        ),
-    ).filter(F.col("term") != "")
+        F.posexplode(tokens(text_col)).alias("pos", "term"),
+    )
     return (
         toks.join(F.broadcast(vocab_ids), "term")
         .groupBy("id")
@@ -285,8 +270,7 @@ def fingerprint(text_col: str = "text", width: int = 16) -> Column:
     """Deterministic document fingerprint: normalize (lowercase, collapse
     whitespace/punct) then hash — robust to formatting-only edits. Uses md5
     so an external system (and the DuckDB oracle) can reproduce it."""
-    normalized = F.regexp_replace(F.lower(F.col(text_col)), r"[^a-z0-9]+", " ")
-    return F.substring(F.md5(F.trim(normalized)), 1, width)
+    return F.substring(F.md5(normalized_text(text_col)), 1, width)
 
 
 # PII patterns, RE2-safe by construction (no lookaround, no backrefs, ASCII
@@ -364,13 +348,8 @@ def winnow_fingerprints(
 
     Returns (id, n_grams, n_selected, density) per doc with >= 1 gram;
     density = n_selected / n_grams, one final double division."""
-    from aos_spark.llm.dedup import shingle_hash
-
-    toks = _spread(df).select(
-        F.col(id_col).alias("id"),
-        F.array_remove(
-            F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), ""
-        ).alias("__tokens"),
+    toks = ensure_min_partitions(df).select(
+        F.col(id_col).alias("id"), tokens(text_col).alias("__tokens")
     )
     grams = toks.select(
         "id", gram_occurrences(F.col("__tokens"), k).alias("grams")
@@ -457,18 +436,10 @@ def repetition_stats(
             top_c,
         )
 
-    # one regex pass; CollapseProject keeps the expensive tokenize alias
-    # un-inlined because it is referenced by both gram sizes (Catalyst
-    # only duplicates cheap expressions), so the split still runs once
-    # per row. Gram sizes are ≥ 2, so the empty-doc edge ([] here vs [""]
-    # in the two-pass form) yields zero grams either way and the oracles
-    # keep the two-pass spelling.
-    toks = df.select(
-        F.col(id_col),
-        F.array_remove(
-            F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), ""
-        ).alias("__tokens"),
-    )
+    # CollapseProject keeps the expensive tokenize alias un-inlined
+    # because it is referenced by both gram sizes (Catalyst only
+    # duplicates cheap expressions), so the split still runs once per row.
+    toks = df.select(F.col(id_col), tokens(text_col).alias("__tokens"))
     # gram arrays aliased in their own projection layer: each is
     # referenced by 3 statistics below, and higher-order functions fall
     # outside whole-stage codegen's subexpression elimination — an
@@ -512,17 +483,11 @@ def top_terms_tfidf(
     back BROADCAST (the df table is vocabulary-sized, Zipf-bounded, tiny
     next to the corpus) → per-doc top-k window (PARTITIONED by doc — never
     a global window). Ties break by term ascending for determinism."""
-    # one regex pass (split on non-alnum runs; empty edge tokens are removed
-    # by the filter below) — same token list as regexp_replace+trim+split at
-    # a third of the regex CPU; oracles keep the two-pass spelling
     # (r16: the 1-task-scan spread guard measured 0.79× here — light
-    # tokenize + persisted frame; kept only where it wins, see _spread)
+    # tokenize + persisted frame; see ensure_min_partitions)
     terms = df.select(
-        F.col(id_col).alias("id"),
-        F.explode_outer(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+")).alias(
-            "term"
-        ),
-    ).filter(F.col("term").isNotNull() & (F.col("term") != ""))
+        F.col(id_col).alias("id"), F.explode_outer(tokens(text_col)).alias("term")
+    ).filter(F.col("term").isNotNull())
     terms = persist_tracked(terms)  # feeds tf AND df aggregates
     # n_docs as a 1-row agg broadcast-cross-joined in, NOT a driver-side
     # .count(): the whole query stays one lazy plan instead of paying an
@@ -592,11 +557,8 @@ def bigram_rarity(
     join formulation trades local wall-clock for the shape that survives
     zipfian text at 100 TB.
     """
-    toks = _spread(df).select(
-        id_col,
-        F.array_remove(F.split(F.lower(F.col(text_col)), _WORD_RE), "").alias(
-            "__tokens"
-        ),
+    toks = ensure_min_partitions(df).select(
+        id_col, tokens(text_col, WORD_SPLIT).alias("__tokens")
     )
     # explode_OUTER: plain explode lets InferFiltersFromGenerate push a
     # size(...)>0 filter through the __tokens projection, re-running the
@@ -656,9 +618,8 @@ def compression_ratio(
 
         return texts.map(one)
 
-    # real class objects (not strings) so pandas_udf's hint inference works
-    # without a module-level pandas import — this module stays importable
-    # pandas-free for its pure-Catalyst operators
+    # real class objects, not the strings the module's postponed
+    # annotations leave, so pandas_udf's hint inference works
     _kernel.__annotations__ = {"texts": pd.Series, "return": pd.Series}
     _ratio = pandas_udf(_kernel, DoubleType())
 
@@ -676,8 +637,8 @@ def postings_index(
 ) -> DataFrame:
     """Inverted-index build: per term, document frequency, total term
     frequency, and a CAPPED, sorted posting list — the search-/
-    dedup-serving sibling of tf-idf (same `[^a-z0-9]+` tokenizer as the
-    shingle pipelines).
+    dedup-serving sibling of tf-idf (same ``tokens`` rule as the shingle
+    pipelines).
 
     Scale discipline: a hot term's postings are capped with a TWO-LEVEL
     top-K — per-(term, salt) row_number windows keep each bucket's
@@ -702,13 +663,8 @@ def postings_index(
 
     from aos_spark.cache import persist_tracked
 
-    occ = _spread(df).select(
-        id_col,
-        F.explode(
-            F.array_remove(
-                F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), ""
-            )
-        ).alias("term"),
+    occ = ensure_min_partitions(df).select(
+        id_col, F.explode(tokens(text_col)).alias("term")
     )
     per_doc = persist_tracked(
         occ.groupBy("term", id_col).agg(F.count(F.lit(1)).alias("tf"))
@@ -764,17 +720,12 @@ def cooccurrence_lift(
     """
     from aos_spark.cache import persist_tracked
 
-    # (r16: spread guard measured 0.85× here — reverted, see _spread)
+    # (r16: spread guard measured 0.85× here — reverted, see
+    # ensure_min_partitions)
     td = persist_tracked(
         df.select(
             F.col(id_col).alias("doc"),
-            F.explode(
-                F.array_distinct(
-                    F.array_remove(
-                        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), ""
-                    )
-                )
-            ).alias("term"),
+            F.explode(F.array_distinct(tokens(text_col))).alias("term"),
         )
     )
     tf = td.groupBy("term").agg(F.count(F.lit(1)).alias("dfreq"))

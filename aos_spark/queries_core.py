@@ -1362,10 +1362,7 @@ def q_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing but formatting)."""
     d = _t(spark, sf_dir, "documents")
     toks = D.ensure_min_partitions(d).select(
-        "doc_id",
-        F.array_remove(F.split(F.lower("text"), "[^a-z0-9]+"), "").alias(
-            "__tokens"
-        ),
+        "doc_id", D.tokens().alias("__tokens")
     )
     hashed = toks.select(
         "doc_id", F.transform("__tokens", D.shingle_hash).alias("__hashed")

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aos_spark.io.readers import read_sf_table
+from aos_spark.llm.dedup import WORD_SPLIT, tokens
 from aos_spark.ops.exact_round import round_ratio6, round_ratio6_micro
 from aos_spark.queries_core import (
     ORACLE_SIM_BRUTE,
@@ -449,8 +450,7 @@ def _lsh_recall_oracle(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.3,
-    sample_buckets: int | None = None,
-    sample_docs: int | None = 1000,
+    sample_docs: int = 1000,
 ) -> str:
     from aos_spark.llm import dedup as D
 
@@ -470,20 +470,13 @@ def _lsh_recall_oracle(
         " + CAST((len(x.shingles) + len(y.shingles) - len(list_filter(x.shingles, s -> list_contains(y.shingles, s)))) AS HUGEINT))"
         " // (CAST((len(x.shingles) + len(y.shingles) - len(list_filter(x.shingles, s -> list_contains(y.shingles, s)))) AS HUGEINT) * 2) AS DOUBLE) / 1000000.0"
     )
-    if sample_docs is not None:
-        # absolute deterministic cap — mirrors the engine's
-        # TakeOrdered(md5('lsh_eval'||id), id, sample_docs) sample
-        sample_sql = f"""
+    # absolute deterministic cap — mirrors the engine's
+    # TakeOrdered(md5('lsh_eval'||id), id, sample_docs) sample
+    return f"""
+WITH sample_ids AS (
   SELECT doc_id FROM documents
   ORDER BY md5('lsh_eval' || CAST(doc_id AS VARCHAR)), doc_id
-  LIMIT {sample_docs}"""
-    else:
-        sample_sql = f"""
-  SELECT doc_id FROM documents
-  WHERE CAST('0x' || substring(md5('lsh_eval' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-        % 100 < {sample_buckets}"""
-    return f"""
-WITH sample_ids AS ({sample_sql}
+  LIMIT {sample_docs}
 ),
 sh AS (
   SELECT * FROM ({_SHINGLES_SQL}) s WHERE s.doc_id IN (SELECT doc_id FROM sample_ids)
@@ -670,9 +663,7 @@ def q_mixture_apply_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     plan = S.mixture_plan(d, MIXTURE_TARGETS, domain_col="lang")
     kept = S.apply_mixture(d, plan, domain_col="lang")
-    n_tokens = F.size(
-        F.array_remove(F.split(F.lower(F.col("text")), r"[^a-z0-9']+"), "")
-    )
+    n_tokens = F.size(tokens(split=WORD_SPLIT))
     per = kept.groupBy(F.col("lang").alias("domain")).agg(
         F.count(F.lit(1)).alias("n_kept"),
         F.sum(n_tokens).cast("long").alias("kept_tokens"),
@@ -950,13 +941,7 @@ def q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     words = (
-        d.select(
-            F.explode(
-                F.array_remove(
-                    F.split(F.lower(F.col("text")), "[^a-z0-9]+"), ""
-                )
-            ).alias("word")
-        )
+        d.select(F.explode(tokens()).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
         .filter(F.length("word") >= 2)

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aos_spark.io.readers import read_sf_table
+from aos_spark.llm.dedup import tokens
 from aos_spark.ops.exact_round import scaled_round
 from aos_spark.queries_core import _embedding_neardup_oracle
 from aos_spark.registry import register
@@ -484,11 +485,8 @@ def q_rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tok = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(F.split(F.lower("text"), "[^a-z0-9]+"))
-        ).alias("term"),
-    ).filter(F.col("term") != "")
+        "doc_id", F.explode(F.array_distinct(tokens())).alias("term")
+    )
     qtok = tok.filter(F.col("doc_id") < 5).select(
         F.col("doc_id").alias("query_id"), "term"
     )
@@ -563,10 +561,9 @@ def q_bm25_lite_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection (only query terms survive to the shuffle), one doc-keyed
     conditional rollup, a 1-row df/N broadcast, TakeOrdered top-20."""
     docs = _t(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower("text"), "[^a-z0-9]+")).alias("term"),
-    ).filter(F.col("term").isin("hash", "join", "table"))
+    tok = docs.select("doc_id", F.explode(tokens()).alias("term")).filter(
+        F.col("term").isin("hash", "join", "table")
+    )
     tf = tok.groupBy("doc_id").agg(
         F.sum(F.when(F.col("term") == "hash", 1).otherwise(0)).alias("tf_hash"),
         F.sum(F.when(F.col("term") == "join", 1).otherwise(0)).alias("tf_join"),
@@ -654,10 +651,7 @@ def q_feature_hash_vectorizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aos_spark.llm.sampling import hash_bucket
 
     docs = _t(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower("text"), "[^a-z0-9]+")).alias("term"),
-    ).filter(F.col("term") != "")
+    tok = docs.select("doc_id", F.explode(tokens()).alias("term"))
     bucketed = tok.withColumn("bucket", hash_bucket("term", 256, "fh")).groupBy(
         "doc_id", "bucket"
     ).agg(F.count(F.lit(1)).alias("cnt"))
@@ -910,11 +904,7 @@ def q_vocab_jaccard_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     division of exact BIGINTs."""
     d = _t(spark, sf_dir, "documents")
     st = (
-        d.select(
-            "source",
-            F.explode(F.split(F.lower("text"), "[^a-z0-9]+")).alias("term"),
-        )
-        .filter(F.col("term") != "")
+        d.select("source", F.explode(tokens()).alias("term"))
         .distinct()
         .persist()
     )

@@ -44,17 +44,13 @@ from aos_spark.llm.dedup import (
     minhash_params,
     shingle_hash,
     shingles_from_tokens,
+    tokens,
 )
 from aos_spark.registry import register
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_sf_table(spark, sf_dir, name)
-
-
-def _tokens(text_col: str = "text"):
-    """One-pass tokenization, identical to llm/dedup.shingle_frame."""
-    return F.array_remove(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), "")
 
 
 # DuckDB spelling of the same token list, exact for empty/edge tokens
@@ -88,7 +84,7 @@ def q_ngram_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     toks = ensure_min_partitions(d).select(
-        "doc_id", "source", _tokens().alias("__tokens")
+        "doc_id", "source", tokens().alias("__tokens")
     )
     grams = persist_tracked(
         toks.select(
@@ -204,7 +200,7 @@ def q_source_minhash_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     params = minhash_params(16)
     toks = ensure_min_partitions(d).select(
-        "source", _tokens().alias("__tokens")
+        "source", tokens().alias("__tokens")
     )
     sh = toks.select(
         "source", shingles_from_tokens(F.col("__tokens"), 3).alias("shingles")
@@ -409,7 +405,7 @@ def q_type_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     repetitive sources). Token and distinct counts are per-row map-side
     expressions; one small source rollup; one division."""
     d = _t(spark, sf_dir, "documents")
-    toks = d.select("source", _tokens().alias("t"))
+    toks = d.select("source", tokens().alias("t"))
     per_doc = toks.select(
         "source",
         F.size("t").alias("n_tok"),

@@ -936,7 +936,7 @@ def q_winnow_overlap_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     → print-keyed self-join on the far-smaller fingerprint frame."""
     from pyspark.sql import Window
 
-    from aos_spark.llm.dedup import ensure_min_partitions, shingle_hash
+    from aos_spark.llm.dedup import ensure_min_partitions, shingle_hash, tokens
     from aos_spark.llm.text import gram_occurrences
 
     d = _t(spark, sf_dir, "documents")
@@ -945,11 +945,7 @@ def q_winnow_overlap_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread them first (r16, guide §2.5; the same pattern measured
     # 1.37× on winnowing_fingerprints)
     toks = ensure_min_partitions(d).select(
-        "doc_id",
-        "source",
-        F.array_remove(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"), ""
-        ).alias("__tokens"),
+        "doc_id", "source", tokens().alias("__tokens")
     )
     grams = toks.select(
         "doc_id", "source", gram_occurrences(F.col("__tokens"), 4).alias("grams")

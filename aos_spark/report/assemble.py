@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aos_spark.fanout import run_all
+from aos_spark.ops.topk import topk_per_group
 
 TOP_K = 5  # reports.py:73
 COMPACT_FMT = "%Y%m%d%H%M%S"  # FILE_STRUCTURE.md:308-311
@@ -225,19 +226,13 @@ def build_report(
     # the shuffle stays bounded by TOP_K rows per group and partition.
     frames = [totals_df, top_tiles_df, landfall_df, admin_df, bands_df]
     if fac_view is not None:
-        from pyspark.sql import Window
-
         sums_df = fac_view.groupBy("kind", "wind_threshold").agg(
             F.sum("probability").alias("p")
         )
-        w = Window.partitionBy("kind", "wind_threshold").orderBy(
-            F.col("probability").desc(), "facility_id"
-        )
-        top_fac_df = (
-            fac_view.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= TOP_K)
-            .select("kind", "wind_threshold", "facility_id", "probability", "__rn")
-        )
+        top_fac_df = topk_per_group(
+            fac_view, ["kind", "wind_threshold"], "probability", "facility_id",
+            k=TOP_K, rank_col="__rn",
+        ).select("kind", "wind_threshold", "facility_id", "probability", "__rn")
         frames += [sums_df, top_fac_df]
 
     collected = run_all(spark, [df.collect for df in frames])

@@ -14,8 +14,8 @@ ICU-backed ``lower()`` in a JVM runs ICU's class initialization, about
 tokenizer's first stage; per-row cost is the same either way (ASCII
 strings take a fast path in both). The two mappings differ only on 67
 code points each way, all Unicode 14-16 additions, none of which maps
-into ``[a-z0-9]``, so every ``[^a-z0-9]`` tokenizer emits the same tokens
-under both. The JVM mapping follows the default locale, and Java applies
+into ``[a-z0-9]``, so the one tokenizer, ``llm/dedup.tokens``, emits the
+same tokens under both. The JVM mapping follows the default locale, and Java applies
 locale-specific rules only for Turkish, Azerbaijani and Lithuanian
 (dotted/dotless i), so ``get_spark`` refuses a driver JVM whose default
 locale is one of those (:func:`check_case_locale`).

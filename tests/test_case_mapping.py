@@ -1,14 +1,17 @@
 """Case mapping: the engine session uses the JVM's case mapping, not ICU's
 (`aos_spark/session.py` docstring). The two differ on 67 code points for
-`lower`, all Unicode 14-16 additions; none maps into [a-z0-9], so the
-`[^a-z0-9]` tokenizers give the same tokens under either mapping. The JVM
-mapping follows the default locale, hence the tr/az/lt guard."""
+`lower`, all Unicode 14-16 additions; none maps into [a-z0-9], so the one
+tokenizer, `llm/dedup.tokens`, gives the same tokens under either mapping.
+The JVM mapping follows the default locale, hence the tr/az/lt guard. The
+tokens also match the DuckDB oracles' spellings of the rule."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
+from pyspark.sql import functions as F
 
-from aos_spark.llm.dedup import shingle_frame
+from aos_spark.llm.dedup import WORD_SPLIT, normalized_text, shingle_frame, tokens
 from aos_spark.session import check_case_locale
 
 ICU = "spark.sql.icu.caseMappings.enabled"
@@ -57,3 +60,46 @@ def test_shingle_tokens_equal_under_both_case_mappings(spark):
         if n == 1:  # the Kelvin sign lowers to an ASCII k in both mappings
             assert "kelvin" in off[0][1] and "kz" in off[0][1]
     assert spark.conf.get(ICU) == "false"
+
+
+EDGE_TEXTS = [
+    "İstanbul DİYARBAKIR",
+    "  --Hello, World!-- ",
+    "...",
+    "",
+    None,
+    "42 is 6x7; 0.5",
+    "don't 'quote' it's",
+    "a",
+    "Mixed\tWHITE\nspace",
+]
+
+
+def _duck(sql_expr: str) -> list:
+    rows = ", ".join(
+        "(%d, %s)" % (i, "NULL" if t is None else "'" + t.replace("'", "''") + "'")
+        for i, t in enumerate(EDGE_TEXTS)
+    )
+    return [r[0] for r in duckdb.sql(
+        f"SELECT {sql_expr} FROM (VALUES {rows}) v(i, t) ORDER BY i"
+    ).fetchall()]
+
+
+def test_tokens_match_the_duckdb_oracle_spellings(spark):
+    df = spark.createDataFrame(list(enumerate(EDGE_TEXTS)), "i int, t string")
+    got = df.orderBy("i").select(
+        tokens("t").alias("a"),
+        tokens("t", WORD_SPLIT).alias("w"),
+        F.array_remove(F.split(normalized_text("t"), r"\s+"), "").alias("n"),
+    ).collect()
+    assert [r["a"] for r in got] == _duck(
+        "list_filter(string_split_regex(lower(t), '[^a-z0-9]+'), x -> x <> '')"
+    )
+    assert [r["w"] for r in got] == _duck(
+        "list_filter(string_split_regex(lower(t), '[^a-z0-9'']+'), x -> x <> '')"
+    )
+    assert [r["a"] for r in got] == [r["n"] for r in got] == _duck(
+        "list_filter(string_split_regex(trim(regexp_replace(lower(t), "
+        "'[^a-z0-9]+', ' ', 'g')), '\\s+'), x -> x <> '')"
+    )
+    assert got[0]["a"] == ["istanbul", "diyarbakir"]

@@ -176,3 +176,31 @@ def test_ann_modules_rank_only_through_topk_per_group():
             if ident in ("Window", "row_number"):
                 found.append(f"{name}:{node.lineno}")
     assert found == []
+
+
+def test_token_regex_lives_only_in_llm_dedup():
+    """Outside llm/dedup.py no F.split / F.regexp_replace call spells the
+    token rule's pattern: every tokenizer goes through llm/dedup.tokens
+    (or normalized_text). Oracle SQL strings are not call arguments."""
+    root = Path(__file__).resolve().parent.parent / "aos_spark"
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "llm" / "dedup.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("split", "regexp_replace")
+                and isinstance(node.func.value, ast.Name)
+                and node.func.value.id == "F"
+            ):
+                continue
+            if any(
+                isinstance(a, ast.Constant)
+                and isinstance(a.value, str)
+                and "a-z0-9" in a.value
+                for a in node.args
+            ):
+                found.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert found == []
