@@ -639,7 +639,6 @@ def grouped_winsorized_mean(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    order_cols: list[str],
     tail_pct: int = 5,
     bucket_width: float | None = None,
 ) -> DataFrame:
@@ -653,14 +652,13 @@ def grouped_winsorized_mean(
     Plan (r16, guide §2.5): the bounds come from the two-pass
     range-partitioned exact-rank selection (group_rank_value_bounds) —
     no group-partitioned sort anywhere, so no one-task-per-group
-    straggler; rank-k VALUES are tiebreak-insensitive, so ``order_cols``
-    (kept for API stability) no longer influence the plan. The clamped
-    sum is assembled ALGEBRAICALLY from the helper's exact decimal
-    prefix stats — Σclamped = Σv + n_{v<p_lo}·p_lo − Σ_{v<p_lo}v
-    − (Σ_{v>p_hi}v − n_{v>p_hi}·p_hi) — every term an exact decimal, so
-    the value equals the row-wise clamped sum identically and NO third
-    pass over the fact is needed: the whole operator is the histogram
-    scan plus the boundary-bucket fetch scan.
+    straggler; rank-k VALUES are tiebreak-insensitive, so no tiebreak
+    columns are needed. The clamped sum is assembled ALGEBRAICALLY from
+    the helper's exact decimal prefix stats — Σclamped = Σv +
+    n_{v<p_lo}·p_lo − Σ_{v<p_lo}v − (Σ_{v>p_hi}v − n_{v>p_hi}·p_hi) —
+    every term an exact decimal, so the value equals the row-wise clamped
+    sum identically and NO third pass over the fact is needed: the whole
+    operator is the histogram scan plus the boundary-bucket fetch scan.
 
     ``bucket_width`` is the helper's domain-informed bucket size (monotone
     for any data — it only tunes bucket counts, never correctness)."""

@@ -411,14 +411,11 @@ def q_winsorized_mean_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.col("l_extendedprice").cast("decimal(14,2)").alias("price"),
-        "l_orderkey",
-        "l_linenumber",
     )
     return grouped_winsorized_mean(
         li,
         ["l_returnflag"],
         "price",
-        ["l_orderkey", "l_linenumber"],
         tail_pct=5,
         # l_extendedprice spans ~[900, 105k] at any TPC-H SF (domain-
         # fixed): 64-unit buckets keep the rank histogram ~1.6k

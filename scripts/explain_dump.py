@@ -2,49 +2,39 @@
 
 Usage:
     python scripts/explain_dump.py <tag> <query> [<query> ...]
-    python scripts/explain_dump.py <tag> --top N      # N slowest from BENCH_r14.json
+    python scripts/explain_dump.py <tag> --top N      # N warm-slowest in BENCH_LOCAL.json
 
 Writes plans/<round>/<query>_<tag>.txt — the evidence files the
 optimization round's judge checks plan claims against (e.g.
-"2 Exchange -> 1"). Round dir via $AOS_PLANS_ROUND (default r16).
+"2 Exchange -> 1"). Round dir via $AOS_PLANS_ROUND (default r16); data
+from $SPARK_GRAFT_SF_DIR, as in bench.py.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+from ab import BENCH_LOCAL, ROOT, sf_dir, tail
 
 from aos_spark.cache import release_tracked
 from aos_spark.queries import QUERIES
 from aos_spark.session import get_spark
 
-import os
-
-SF_DIR = "/root/testdata/sf0.1"
-OUT = (
-    Path(__file__).resolve().parent.parent
-    / "plans"
-    / os.environ.get("AOS_PLANS_ROUND", "r16")
-)
+OUT = ROOT / "plans" / os.environ.get("AOS_PLANS_ROUND", "r16")
 
 
 def main() -> None:
     tag = sys.argv[1]
     if sys.argv[2] == "--top":
-        n = int(sys.argv[3])
-        bench = json.loads(
-            (Path(__file__).resolve().parent.parent / "BENCH_r14.json").read_text()
-        )["parsed"]["queries"]
-        names = sorted(bench, key=bench.get, reverse=True)[:n]
+        names = tail(json.loads(BENCH_LOCAL.read_text()), int(sys.argv[3]))
     else:
         names = sys.argv[2:]
     OUT.mkdir(parents=True, exist_ok=True)
     spark = get_spark("explain-dump")
     for name in names:
-        df = QUERIES[name](spark, SF_DIR)
+        df = QUERIES[name](spark, sf_dir())
         txt = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )

@@ -304,7 +304,7 @@ def suite_stats(spark, size, results):
 
     timed(
         "winsorized_mean",
-        grouped_winsorized_mean(vals, ["g"], "v", ["rid"], tail_pct=5),
+        grouped_winsorized_mean(vals, ["g"], "v", tail_pct=5),
         results,
     )
 

@@ -1,6 +1,6 @@
 """Artifact/documentation agreement for BENCH_LOCAL.json (VERDICT r7
 "Next round" #3): PLANS.md describes an "isolated" key of fresh-JVM tail
-numbers (scripts/bench_tail.py) alongside the sweep's "queries" /
+numbers (`scripts/ab.py run --tail N`) alongside the sweep's "queries" /
 "queries_cold"; r7's refresh dropped it, leaving the artifact and its
 docs disagreeing. bench.py now carries the key across sweep refreshes —
 this locks the contract so a future refresh can't silently shed it."""

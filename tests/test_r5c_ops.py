@@ -179,7 +179,7 @@ def test_winsorized_mean_clamps_tails(spark):
     df = spark.createDataFrame(
         [("g", i, float(i)) for i in range(1, 21)], ["g", "id", "v"]
     ).withColumn("v", F.col("v").cast("decimal(14,2)"))
-    row = grouped_winsorized_mean(df, ["g"], "v", ["id"], tail_pct=5).collect()[0]
+    row = grouped_winsorized_mean(df, ["g"], "v", tail_pct=5).collect()[0]
     assert row["lo_bound"] == 1.0 and row["hi_bound"] == 20.0
     assert abs(row["winsorized_mean"] - 10.5) < 1e-9
 
@@ -194,7 +194,7 @@ def test_winsorized_mean_suppresses_outliers(spark):
     df = spark.createDataFrame(rows, ["g", "id", "v"]).withColumn(
         "v", F.col("v").cast("decimal(14,2)")
     )
-    row = grouped_winsorized_mean(df, ["g"], "v", ["id"], tail_pct=20).collect()[0]
+    row = grouped_winsorized_mean(df, ["g"], "v", tail_pct=20).collect()[0]
     assert row["lo_bound"] == 2.0 and row["hi_bound"] == 9.0
     # clamped values: 2,2,3,4,5,6,7,8,9,9 -> mean 5.5
     assert abs(row["winsorized_mean"] - 5.5) < 1e-9
