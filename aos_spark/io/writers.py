@@ -14,6 +14,9 @@ from __future__ import annotations
 
 import functools
 import os
+import threading
+from collections.abc import Sequence
+from concurrent.futures import Future
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -40,23 +43,57 @@ def write_view(
     writer.save(path)
 
 
-def write_views(views: list[tuple[DataFrame, str, list[str] | None]]) -> None:
+def materialize(df: DataFrame) -> None:
+    """Build the cache of a persisted frame: one job over the cached
+    relation's column buffers, after the jobs of the frame's own
+    exchanges. A later query over the frame finds the cache loaded and
+    submits no cache-building job of its own; ``count()`` would add an
+    aggregate exchange and a result job on top."""
+    cache = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    cached = cache.lookupCachedData(df._jdf)
+    if cached.isEmpty():
+        raise ValueError("materialize: the frame is not persisted")
+    cached.get().cachedRepresentation().cacheBuilder().cachedColumnBuffers().count()
+
+
+def write_views(views: Sequence[tuple]) -> None:
     """Write independent views concurrently: each ``(df, path,
-    partition_cols)`` triple goes to :func:`write_view` on its own driver
-    thread. Returns once every write has returned; then raises the first
-    failure in input order. Materialize a persisted frame that several of
-    the views read before the call: each concurrent reader of a cache
-    that is not yet built submits its own jobs to build it."""
+    partition_cols[, reads])`` goes to :func:`write_view` on its own
+    driver thread. ``reads`` lists the persisted frames the view reads,
+    ancestors first; the thread makes sure each one is built before it
+    writes. The first thread that needs a frame builds it
+    (:func:`materialize`), and a thread that needs it meanwhile waits for
+    that build: a query over a cache that is not yet built submits its
+    own cache-building job, so concurrent readers would each build it.
+    A failed build fails every view that reads the frame. Returns once
+    every write has returned; then raises the first failure in input
+    order."""
     if not views:
         return
+    builds: dict[int, Future] = {}
+    lock = threading.Lock()
+
+    def built(frame: DataFrame) -> None:
+        with lock:
+            build = builds.get(id(frame))
+            mine = build is None
+            if mine:
+                build = builds[id(frame)] = Future()
+        if mine:
+            try:
+                materialize(frame)
+                build.set_result(None)
+            except BaseException as e:
+                build.set_exception(e)
+        build.result()
+
+    def write(df, path, cols, reads=()) -> None:
+        for frame in reads:
+            built(frame)
+        write_view(df, path, partition_cols=cols)
+
     spark = views[0][0].sparkSession
-    run_all(
-        spark,
-        [
-            functools.partial(write_view, df, path, partition_cols=cols)
-            for df, path, cols in views
-        ],
-    )
+    run_all(spark, [functools.partial(write, *v) for v in views])
 
 
 def write_bucketed(

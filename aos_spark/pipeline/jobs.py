@@ -14,16 +14,14 @@ prefix-delete replacement) partitioned by (storm, forecast_compact
 [, wind_threshold]) so re-runs are idempotent and stale partitions can't
 survive. Idempotency across runs is the F11 anti-join against the run log.
 
-An update writes its seven views in two steps. The tiles view goes
-first, alone: its write materializes the persisted hit set and tile view.
-The other six (admin, cci, severity, facilities, tracks, track_segments)
-then go to one ``write_views`` call, which writes them on concurrent
-driver threads; each submits a few jobs too small to fill the cores, so
-run one after another they left most cores idle. Tiles goes first because
-each concurrent reader of a persisted frame that is not yet materialized
-submits its own jobs to build it: fanning out all seven at once cost
-about five extra cache-building jobs per update. The run log's terminal
-row is written only after every write has returned.
+An update writes its seven views in one ``write_views`` call, on
+concurrent driver threads: each submits a few jobs too small to fill the
+cores, so run one after another they left most cores idle. Each view
+names the persisted frames it reads (hit set, tile view, admin view,
+envelopes, facility probe, facility view, member aggregate); the first
+writer that needs a frame builds it and the others wait for that build,
+so no frame is built twice. The run log's terminal row is written only
+after every write has returned.
 """
 
 from __future__ import annotations
@@ -231,10 +229,11 @@ def update(
         hits = _member_hits(ev).persist()
         cached.append(hits)
 
-        # A1: probability per (tile, threshold) — count members / 8, tiles
+        # A1: probability per (tile, threshold) — members / 8 (hits is
+        # distinct on (tile, member, threshold), so a plain count), tiles
         # with no hits at a threshold get probability 0 via the left join
         prob = hits.groupBy("tile_id", "wind_threshold").agg(
-            (F.countDistinct("member") / F.lit(float(ENSEMBLE_SIZE))).alias("probability")
+            (F.count("member") / F.lit(float(ENSEMBLE_SIZE))).alias("probability")
         )
         tiles_x_th = _with_thresholds(base)
         tile_view = tiles_x_th.join(prob, ["tile_id", "wind_threshold"], "left").fillna(
@@ -254,15 +253,9 @@ def update(
         )
         tile_view = tile_view.persist()
         cached.append(tile_view)
-        # alone and first: this write materializes hits and tile_view, which
-        # most of the concurrently written views below read
-        write_view(
-            tile_view,
-            os.path.join(warehouse, "views", "tiles"),
-            partition_cols=["storm", "forecast_compact", "wind_threshold"],
-        )
 
-        # A3: admin rollup of expected impacts (null contract: E_rwi optional)
+        # A3: admin rollup of expected impacts (null contract: E_rwi optional);
+        # cached: the write and the report's admin section share it
         dec = tile_view
         for c in BASE_SUM_COLS:
             dec = dec.withColumn(f"E_{c}", F.col(f"E_{c}").cast("decimal(18,6)"))
@@ -273,14 +266,18 @@ def update(
             avg_cols=[],
             optional_sum_cols=["E_rwi"],
         )
-        admin_view = admin_view.select(
-            "admin_id",
-            "wind_threshold",
-            *[F.col(f"E_{c}").cast("double").alias(f"E_{c}") for c in BASE_SUM_COLS],
-            "E_rwi",
-        ).withColumn("storm", F.lit(storm)).withColumn(
-            "forecast_compact", F.lit(forecast_time)
+        admin_view = (
+            admin_view.select(
+                "admin_id",
+                "wind_threshold",
+                *[F.col(f"E_{c}").cast("double").alias(f"E_{c}") for c in BASE_SUM_COLS],
+                "E_rwi",
+            )
+            .withColumn("storm", F.lit(storm))
+            .withColumn("forecast_compact", F.lit(forecast_time))
+            .persist()
         )
+        cached.append(admin_view)
 
         # W3/W4: CCI from the threshold-long tile view
         long_df = tile_view.select(
@@ -291,15 +288,23 @@ def update(
             "forecast_compact", F.lit(forecast_time)
         )
 
-        # A5: severity per member
-        sev_in = hits.join(base, "tile_id").select(
-            F.col("member"),
+        # A5 + track sums: one (member, threshold) aggregate of the hit
+        # tiles' base metrics feeds the severity view and the track view
+        member_agg = severity.member_severity(
+            hits.join(base, "tile_id").select(
+                "member",
+                "wind_threshold",
+                *[F.col(c).cast("decimal(18,2)").alias(c) for c in BASE_SUM_COLS],
+            ),
+            "member",
+            "wind_threshold",
+            BASE_SUM_COLS,
+        ).persist()
+        cached.append(member_agg)
+        sev = member_agg.select(
+            "member",
             F.col("wind_threshold").alias("threshold"),
-            F.col("population").cast("decimal(18,2)").alias("exposure"),
-        )
-        sev = severity.member_severity(sev_in, "member", "threshold", ["exposure"])
-        sev = sev.withColumn(
-            "total_exposure", F.col("total_exposure").cast("double")
+            F.col("total_population").cast("double").alias("total_exposure"),
         ).withColumn("storm", F.lit(storm)).withColumn(
             "forecast_compact", F.lit(forecast_time)
         )
@@ -310,9 +315,12 @@ def update(
         # facilities kept at 0.0 (create_*_view_from_envelopes,
         # impact_analysis.py:1620-1717, saved at :2809-2840). A member's
         # "envelope" in the events domain is the bbox union (A12) of its hit
-        # tiles; facility hit = buffered point-in-bbox. The envelope dim is
-        # members × thresholds ≤ 24 rows → broadcast; facilities never
-        # shuffle.
+        # tiles; facility hit = buffered point-in-bbox. The envelopes are
+        # members × thresholds ≤ 24 rows: they are broadcast as one list,
+        # and each facility keeps the (member, threshold) of every envelope
+        # it falls in (the SURVEY §J2 probe). That is a narrow projection:
+        # the facility view needs no exchange, and the track counts below
+        # shuffle only each task's partial (member, threshold) counts.
         fac = _facilities(spark, sf_dir)
         boxes = _tile_points(hits, "tile_id").select(
             "member",
@@ -322,36 +330,55 @@ def update(
             (F.col("cy") - 50.0).alias("ymin"),
             (F.col("cy") + 50.0).alias("ymax"),
         )
-        # one envelope build shared by the facility join and the track view
+        # one envelope build shared by the facility probe and the track view
         env = spatial_assign.bbox_union(boxes, ["member", "wind_threshold"]).persist()
         cached.append(env)
-        b = F.lit(FACILITY_BUFFER)
-        in_env = (
-            (F.col("fx") + b >= F.col("xmin"))
-            & (F.col("fx") - b <= F.col("xmax"))
-            & (F.col("fy") + b >= F.col("ymin"))
-            & (F.col("fy") - b <= F.col("ymax"))
+        # a NULL member is no ensemble member: it counts toward no probability
+        env_list = env.filter(F.col("member").isNotNull()).agg(
+            F.collect_list(
+                F.struct("member", "wind_threshold", "xmin", "xmax", "ymin", "ymax")
+            ).alias("envs")
         )
-        fac_hits = (
-            fac.join(F.broadcast(env), in_env)
-            .select("facility_id", "kind", "member", "wind_threshold")
+        b = F.lit(FACILITY_BUFFER)
+
+        def in_env(e):
+            return (
+                (F.col("fx") + b >= e["xmin"])
+                & (F.col("fx") - b <= e["xmax"])
+                & (F.col("fy") + b >= e["ymin"])
+                & (F.col("fy") - b <= e["ymax"])
+            )
+
+        probe = (
+            fac.crossJoin(F.broadcast(env_list))
+            .select(
+                "facility_id",
+                "kind",
+                F.transform(
+                    F.filter("envs", in_env),
+                    lambda e: F.struct(
+                        e["member"].alias("member"),
+                        e["wind_threshold"].alias("wind_threshold"),
+                    ),
+                ).alias("hit_members"),
+            )
             .persist()
         )
-        cached.append(fac_hits)
-        # cached: the write and the report's two facility passes share it
+        cached.append(probe)
+        # envelopes are distinct per (member, threshold), so a facility's
+        # hits at a threshold count its hit members; cached: the write and
+        # the report's two facility passes share it
+        at_threshold = F.filter(
+            "hit_members", lambda h: h["wind_threshold"] == F.col("wind_threshold")
+        )
         fac_view = (
-            _with_thresholds(fac)
-            .join(
-                fac_hits.groupBy("facility_id", "wind_threshold").agg(
-                    (F.countDistinct("member") / F.lit(float(ENSEMBLE_SIZE))).alias(
-                        "probability"
-                    )
-                ),
-                ["facility_id", "wind_threshold"],
-                "left",
+            _with_thresholds(probe)
+            .select(
+                "facility_id",
+                "kind",
+                "wind_threshold",
+                (F.size(at_threshold) / F.lit(float(ENSEMBLE_SIZE))).alias("probability"),
             )
-            .fillna({"probability": 0.0})
-            .select("facility_id", "kind", "wind_threshold", "probability")
             .withColumn("storm", F.lit(storm))
             .withColumn("forecast_compact", F.lit(forecast_time))
             .persist()
@@ -362,23 +389,22 @@ def update(
         # kind + tile-metric sums under the member's envelope
         # (create_tracks_view_from_envelopes, impact_analysis.py:2038-2091).
         kind_counts = (
-            fac_hits.groupBy("member", "wind_threshold")
-            .pivot("kind", FACILITY_KINDS)
-            .agg(F.count(F.lit(1)))
-        )
-        for k in FACILITY_KINDS:
-            kind_counts = kind_counts.withColumnRenamed(k, f"severity_{k}")
-        tile_sums = (
-            hits.join(base, "tile_id")
+            probe.select("kind", F.inline("hit_members"))
             .groupBy("member", "wind_threshold")
             .agg(
-                F.sum(F.col("population").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("severity_population"),
-                F.sum(F.col("built_surface").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("severity_built_surface"),
+                *[
+                    F.count(F.when(F.col("kind") == k, 1)).alias(f"severity_{k}")
+                    for k in FACILITY_KINDS
+                ]
             )
+        )
+        tile_sums = member_agg.select(
+            "member",
+            "wind_threshold",
+            *[
+                F.col(f"total_{c}").cast("double").alias(f"severity_{c}")
+                for c in BASE_SUM_COLS
+            ],
         )
         track_view = (
             env.select("member", "wind_threshold")
@@ -417,21 +443,27 @@ def update(
             "forecast_compact", F.lit(forecast_time)
         )
 
-        # the six views are independent: write them concurrently
+        # the seven views are independent: write them concurrently, each
+        # listing the cached frames it reads, ancestors first
         by_threshold = ["storm", "forecast_compact", "wind_threshold"]
         by_forecast = ["storm", "forecast_compact"]
+        views = os.path.join(warehouse, "views")
+        tiles_in = [hits, tile_view]
+        fac_in = [hits, env, probe]
         write_views(
             [
-                (admin_view, os.path.join(warehouse, "views", "admin"), by_threshold),
-                (cci_view, os.path.join(warehouse, "views", "cci"), by_forecast),
-                (sev, os.path.join(warehouse, "views", "severity"), by_forecast),
+                (tile_view, os.path.join(views, "tiles"), by_threshold, tiles_in),
+                (admin_view, os.path.join(views, "admin"), by_threshold, [*tiles_in, admin_view]),
+                (cci_view, os.path.join(views, "cci"), by_forecast, tiles_in),
+                (sev, os.path.join(views, "severity"), by_forecast, [hits, member_agg]),
                 (
                     fac_view,
-                    os.path.join(warehouse, "views", "facilities"),
+                    os.path.join(views, "facilities"),
                     ["kind", *by_threshold],
+                    [*fac_in, fac_view],
                 ),
-                (track_view, os.path.join(warehouse, "views", "tracks"), by_threshold),
-                (seg, os.path.join(warehouse, "views", "track_segments"), by_forecast),
+                (track_view, os.path.join(views, "tracks"), by_threshold, [*fac_in, member_agg]),
+                (seg, os.path.join(views, "track_segments"), by_forecast, []),
             ]
         )
 

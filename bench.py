@@ -146,15 +146,16 @@ def main() -> None:
         out = here / "BENCH_LOCAL.json"
     else:
         out = here / "BENCH_SWEEP.json"
-    # Carry the fresh-JVM tail numbers (scripts/bench_tail.py's "isolated"
-    # key) across refreshes of the COMMITTED artifact so it never loses
-    # its noise-free figures; bench_tail overwrites them when re-run.
+    # Carry the fresh-JVM tail numbers (the "isolated" key that
+    # `scripts/ab.py run --tail N` writes) across refreshes of the
+    # COMMITTED artifact so it never loses its noise-free figures;
+    # `ab.py run --tail N` overwrites them when re-run.
     # Diagnostic sweeps (the BENCH_SWEEP.json default) don't carry a tail
     # — they are throwaway measurements, and a stale isolated block in
     # them is exactly the contradiction r11 shipped.
     # Pruned to queries still in the sweep (a removed/renamed query's
     # stale number must not outlive its code — ADVICE r8), and the
-    # carried block keeps bench_tail's generation stamp in
+    # carried block keeps the tail run's generation stamp in
     # "isolated_meta" with carried_forward=True so a reader can see the
     # tail predates this sweep. tests/test_bench_artifact.py locks
     # artifact/docs agreement.

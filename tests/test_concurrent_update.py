@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 import threading
 import time
 from pathlib import Path
@@ -97,6 +98,63 @@ def test_write_views_raises_first_failure_after_every_write_returned(
     assert _fanout_threads() == []
 
 
+def test_write_views_builds_a_frame_two_views_read_once(spark, tmp_path, monkeypatch):
+    real = writers.materialize
+    builds = []
+
+    def slow_build(df):
+        builds.append(df)
+        time.sleep(0.5)  # the other writer asks for the frame meanwhile
+        real(df)
+
+    monkeypatch.setattr(writers, "materialize", slow_build)
+    shared = spark.range(40).withColumn("p", F.col("id") % 2).persist()
+    try:
+        paths = [str(tmp_path / n) for n in ("low", "high")]
+        dag = spark.sparkContext._jsc.sc().dagScheduler()
+        before = dag.numTotalJobs()
+        writers.write_views(
+            [
+                (shared.filter("id < 20"), paths[0], ["p"], [shared]),
+                (shared.filter("id >= 20"), paths[1], ["p"], [shared]),
+            ]
+        )
+        # one build job, then one job per write: neither write built the
+        # cache again
+        assert dag.numTotalJobs() - before == 3
+        assert builds == [shared]
+        for p in paths:
+            assert spark.read.parquet(p).count() == 20
+    finally:
+        shared.unpersist()
+    assert _fanout_threads() == []
+
+
+def test_write_views_builds_each_frame_once_under_contention(spark, monkeypatch):
+    frames = [spark.range(1) for _ in range(3)]
+    builds: list[int] = []
+    writes: list[str] = []
+
+    def build(df):
+        builds.append(id(df))
+        time.sleep(0.01)
+
+    monkeypatch.setattr(writers, "materialize", build)
+    monkeypatch.setattr(
+        writers, "write_view", lambda df, path, partition_cols=None: writes.append(path)
+    )
+    views = [(frames[0], f"v{i}", None, frames[i % 3 :] + frames[: i % 3]) for i in range(16)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        writers.write_views(views)
+    finally:
+        sys.setswitchinterval(interval)
+    assert sorted(builds) == sorted(id(f) for f in frames)
+    assert sorted(writes) == sorted(f"v{i}" for i in range(16))
+    assert _fanout_threads() == []
+
+
 def test_failed_update_logs_failure_after_all_writes_and_releases_caches(
     spark, warehouse, monkeypatch
 ):
@@ -134,8 +192,10 @@ def test_failed_update_logs_failure_after_all_writes_and_releases_caches(
     with pytest.raises(RuntimeError, match="severity view write failed"):
         jobs.update(spark, SF_DIR, warehouse, STORM, fc)
 
-    # the five other fanned-out writes all returned before the FAILURE row
-    assert set(returned) == {"admin", "cci", "facilities", "tracks", "track_segments"}
+    # the six other fanned-out writes all returned before the FAILURE row
+    assert set(returned) == {
+        "tiles", "admin", "cci", "facilities", "tracks", "track_segments"
+    }
     assert len(logged) == 1 and logged[0][1] is False
     assert max(returned.values()) <= logged[0][0]
     row = (
@@ -150,6 +210,50 @@ def test_failed_update_logs_failure_after_all_writes_and_releases_caches(
     none = StorageLevel(False, False, False, False, 1)
     assert all(df.storageLevel == none for df in persisted)
     assert _fanout_threads() == []
+
+
+def _plan_nodes(plan):
+    """Every node of a physical plan, through adaptive wrappers (their
+    initial plan) and into the plans of cached relations."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(plan.initialPlan())
+        return
+    yield plan
+    if name == "InMemoryTableScanExec":
+        yield from _plan_nodes(plan.relation().cachedPlan())
+        return
+    for i in range(plan.children().size()):
+        yield from _plan_nodes(plan.children().apply(i))
+
+
+def test_facility_view_never_shuffles_facilities(spark, warehouse, monkeypatch):
+    """Facilities probe the broadcast envelope list: the facility side of
+    the facilities write has no exchange (SURVEY §J2)."""
+    real_write = writers.write_view
+    plans = {}
+
+    def capture(df, path, partition_cols=None, fmt="parquet"):
+        plans[os.path.basename(path)] = df._jdf.queryExecution().executedPlan()
+        real_write(df, path, partition_cols=partition_cols, fmt=fmt)
+
+    monkeypatch.setattr(writers, "write_view", capture)
+    assert jobs.update(spark, SF_DIR, warehouse, STORM, "20240117000000")["status"] == "SUCCESS"
+    nodes = list(_plan_nodes(plans["facilities"]))
+
+    def reads_facilities(plan):
+        return any(
+            n.getClass().getSimpleName() == "FileSourceScanExec"
+            and "customer.parquet" in n.toString()
+            for n in _plan_nodes(plan)
+        )
+
+    (probe,) = [n for n in nodes if n.getClass().getSimpleName() == "BroadcastNestedLoopJoinExec"]
+    assert probe.buildSide().toString() == "BuildRight"
+    assert reads_facilities(probe.left())
+    exchanges = [n for n in nodes if n.getClass().getSimpleName() == "ShuffleExchangeExec"]
+    assert exchanges  # the envelope side shuffles
+    assert not any(reads_facilities(x) for x in exchanges)
 
 
 def _view(spark, warehouse, name):
