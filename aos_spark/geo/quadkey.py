@@ -95,12 +95,6 @@ def quadkey_center(qk: str) -> tuple[float, float]:
     return (min_lat + max_lat) / 2.0, (min_lon + max_lon) / 2.0
 
 
-def quadkey_to_wkt(qk: str) -> str:
-    """quadkey → WKT POLYGON of its bbox (ring closed, CCW)."""
-    w, s, e, n = quadkey_to_bbox(qk)
-    return f"POLYGON (({w} {s}, {e} {s}, {e} {n}, {w} {n}, {w} {s}))"
-
-
 def children(qk: str) -> list[str]:
     return [qk + d for d in "0123"]
 

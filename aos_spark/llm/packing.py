@@ -68,26 +68,6 @@ def pack_into_chunks(
     ).select(id_col, "n_tokens", "shard", "chunk_in_shard", "tok_start", "tok_end")
 
 
-def chunk_fill_stats(packed: DataFrame, capacity: int = 512) -> DataFrame:
-    """Per-shard packing efficiency: chunks used and mean fill fraction —
-    the metric that tells you whether the shard/capacity choice wastes
-    trailing space. Aggregate-only (no extra shuffle beyond groupBy)."""
-    per_shard = packed.groupBy("shard").agg(
-        F.max("tok_end").alias("shard_tokens"),
-        F.count(F.lit(1)).alias("n_docs"),
-    )
-    n_chunks = F.expr(f"(shard_tokens + {capacity - 1}) div {capacity}")
-    return per_shard.select(
-        "shard",
-        "n_docs",
-        "shard_tokens",
-        n_chunks.alias("n_chunks"),
-        F.round(
-            F.col("shard_tokens").cast("double") / (n_chunks * capacity), 6
-        ).alias("fill_frac"),
-    )
-
-
 def sliding_window_chunks(
     df: DataFrame,
     id_col: str = "doc_id",

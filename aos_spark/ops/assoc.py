@@ -23,16 +23,6 @@ from pyspark.sql import functions as F
 from aos_spark.ops.exact_round import round_ratio6
 
 
-def basket_items(
-    df: DataFrame, basket_col: str, item_col: str
-) -> DataFrame:
-    """Distinct (basket, item) pairs — one hash-aggregate shuffle keyed by
-    (basket, item); map-side combine collapses duplicate lines early."""
-    return df.select(
-        F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
-    ).distinct()
-
-
 def association_rules(
     df: DataFrame,
     basket_col: str,

@@ -24,12 +24,12 @@ def member_probability(
 
     ``hits`` must already be distinct per (zone, member) — the quadkey
     cover join guarantees that after a dropDuplicates (a member's envelope
-    may reach a tile through several cover prefixes). countDistinct keeps
-    the operator safe under raw inputs; Catalyst runs it as a two-stage
-    partial agg so it scales.
+    may reach a tile through several cover prefixes). So a plain count of
+    the non-NULL members is the member count: one exchange, where
+    countDistinct takes two.
     """
     return hits.groupBy(*zone_keys).agg(
-        (F.countDistinct(member_col) / F.lit(float(ensemble_size))).alias("probability")
+        (F.count(member_col) / F.lit(float(ensemble_size))).alias("probability")
     )
 
 

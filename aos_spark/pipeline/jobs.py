@@ -22,6 +22,14 @@ envelopes, facility probe, facility view, member aggregate); the first
 writer that needs a frame builds it and the others wait for that build,
 so no frame is built twice. The run log's terminal row is written only
 after every write has returned.
+
+The per-forecast views are built by public functions of this module:
+`member_hits`, `member_envelopes`, `facility_probe` and
+`facility_view`, with the tile probability going through
+`ops/probability`. The registry queries that mirror a view
+(`j2_facility_probability`, `flagship_storm_impact`,
+`a1_a2_probability_expected`) call the same code, so the DuckDB oracle
+gate checks what the update writes.
 """
 
 from __future__ import annotations
@@ -54,7 +62,7 @@ def _tile_points(tiles: DataFrame, key: str = "tile_id") -> DataFrame:
     )
 
 
-def _facilities(spark: SparkSession, sf_dir: str) -> DataFrame:
+def facilities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Facility point sets (schools / health centers / shelters / WASH)
     derived deterministically from the customer dim — the analog of the
     fetch_schools/fetch_health_centers/fetch_shelters/fetch_wash location
@@ -171,7 +179,7 @@ def _with_thresholds(df: DataFrame) -> DataFrame:
     )
 
 
-def _member_hits(ev: DataFrame) -> DataFrame:
+def member_hits(ev: DataFrame) -> DataFrame:
     """(tile_id, member, wind_threshold) hit triples — the J1 equivalent.
     One scan fans out to all thresholds via an array literal (no per-
     threshold loop, F1 collapsed into a grouping column)."""
@@ -185,6 +193,71 @@ def _member_hits(ev: DataFrame) -> DataFrame:
             ),
         )
         .distinct()
+    )
+
+
+def member_envelopes(hits: DataFrame) -> DataFrame:
+    """A12: a member's envelope at a threshold is the bbox union of the
+    100×100 boxes around its hit tiles — (member, wind_threshold, xmin,
+    xmax, ymin, ymax), at most members × thresholds rows."""
+    boxes = _tile_points(hits).select(
+        "member",
+        "wind_threshold",
+        (F.col("cx") - 50.0).alias("xmin"),
+        (F.col("cx") + 50.0).alias("xmax"),
+        (F.col("cy") - 50.0).alias("ymin"),
+        (F.col("cy") + 50.0).alias("ymax"),
+    )
+    return spatial_assign.bbox_union(boxes, ["member", "wind_threshold"])
+
+
+def facility_probe(fac: DataFrame, env: DataFrame) -> DataFrame:
+    """J2 probe (SURVEY §J2): each facility keeps the (member, threshold)
+    of every envelope its buffered point meets, as `hit_members`.
+
+    The buffer is a disc, as the reference's `buffer` is: a facility is
+    hit when its squared Euclidean distance to the box is at most
+    FACILITY_BUFFER² (exact on the integer-valued plane coordinates).
+    The envelopes are broadcast as one list, so the probe is a narrow
+    projection: facilities never shuffle."""
+    # a NULL member is no ensemble member: it counts toward no probability
+    env_list = env.filter(F.col("member").isNotNull()).agg(
+        F.collect_list(
+            F.struct("member", "wind_threshold", "xmin", "xmax", "ymin", "ymax")
+        ).alias("envs")
+    )
+
+    def in_env(e):
+        dx = F.greatest(e["xmin"] - F.col("fx"), F.col("fx") - e["xmax"], F.lit(0.0))
+        dy = F.greatest(e["ymin"] - F.col("fy"), F.col("fy") - e["ymax"], F.lit(0.0))
+        return dx * dx + dy * dy <= F.lit(FACILITY_BUFFER * FACILITY_BUFFER)
+
+    return fac.crossJoin(F.broadcast(env_list)).select(
+        "facility_id",
+        "kind",
+        F.transform(
+            F.filter("envs", in_env),
+            lambda e: F.struct(
+                e["member"].alias("member"), e["wind_threshold"].alias("wind_threshold")
+            ),
+        ).alias("hit_members"),
+    )
+
+
+def facility_view(probe: DataFrame) -> DataFrame:
+    """One row per facility per threshold: probability = hit members /
+    ENSEMBLE_SIZE, so a facility with no hit reads 0.0
+    (create_*_view_from_envelopes, impact_analysis.py:1620-1717).
+    Envelopes are distinct per (member, threshold), so a facility's hits
+    at a threshold count its hit members."""
+    at_threshold = F.filter(
+        "hit_members", lambda h: h["wind_threshold"] == F.col("wind_threshold")
+    )
+    return _with_thresholds(probe).select(
+        "facility_id",
+        "kind",
+        "wind_threshold",
+        (F.size(at_threshold) / F.lit(float(ENSEMBLE_SIZE))).alias("probability"),
     )
 
 
@@ -226,32 +299,24 @@ def update(
         # its own sink, the admin rollup, the CCI, and the report — cache
         # both for the storm job instead of recomputing per action
         # (the structural CSE the reference lacks, SURVEY §4.1)
-        hits = _member_hits(ev).persist()
+        hits = member_hits(ev).persist()
         cached.append(hits)
 
-        # A1: probability per (tile, threshold) — members / 8 (hits is
-        # distinct on (tile, member, threshold), so a plain count), tiles
-        # with no hits at a threshold get probability 0 via the left join
-        prob = hits.groupBy("tile_id", "wind_threshold").agg(
-            (F.count("member") / F.lit(float(ENSEMBLE_SIZE))).alias("probability")
-        )
-        tiles_x_th = _with_thresholds(base)
-        tile_view = tiles_x_th.join(prob, ["tile_id", "wind_threshold"], "left").fillna(
-            {"probability": 0.0}
-        )
+        # A1: probability per (tile, threshold) — members / 8 over the
+        # fixed denominator, tiles with no hits at a threshold at 0.0;
         # A2: expected impacts
-        for c in BASE_SUM_COLS + BASE_AVG_COLS:
-            tile_view = tile_view.withColumn(f"E_{c}", F.col(c) * F.col("probability"))
-        tile_view = tile_view.select(
-            "tile_id",
-            "admin_id",
-            "wind_threshold",
-            "probability",
-            *[f"E_{c}" for c in BASE_SUM_COLS + BASE_AVG_COLS],
-        ).withColumn("storm", F.lit(storm)).withColumn(
-            "forecast_compact", F.lit(forecast_time)
+        zone = ["tile_id", "wind_threshold"]
+        prob = probability.member_probability(hits, zone, "member", ENSEMBLE_SIZE)
+        tile_view = (
+            probability.expected_impact(
+                probability.attach_probability(_with_thresholds(base), prob, zone),
+                BASE_SUM_COLS + BASE_AVG_COLS,
+                keep=["tile_id", "admin_id", "wind_threshold"],
+            )
+            .withColumn("storm", F.lit(storm))
+            .withColumn("forecast_compact", F.lit(forecast_time))
+            .persist()
         )
-        tile_view = tile_view.persist()
         cached.append(tile_view)
 
         # A3: admin rollup of expected impacts (null contract: E_rwi optional);
@@ -310,75 +375,18 @@ def update(
         )
 
         # J2×4 + S11: per-facility probability views (schools / health
-        # centers / shelters / WASH) — one row per facility per threshold,
-        # probability = hit members / fixed ensemble size, zero-hit
-        # facilities kept at 0.0 (create_*_view_from_envelopes,
-        # impact_analysis.py:1620-1717, saved at :2809-2840). A member's
-        # "envelope" in the events domain is the bbox union (A12) of its hit
-        # tiles; facility hit = buffered point-in-bbox. The envelopes are
-        # members × thresholds ≤ 24 rows: they are broadcast as one list,
-        # and each facility keeps the (member, threshold) of every envelope
-        # it falls in (the SURVEY §J2 probe). That is a narrow projection:
-        # the facility view needs no exchange, and the track counts below
-        # shuffle only each task's partial (member, threshold) counts.
-        fac = _facilities(spark, sf_dir)
-        boxes = _tile_points(hits, "tile_id").select(
-            "member",
-            "wind_threshold",
-            (F.col("cx") - 50.0).alias("xmin"),
-            (F.col("cx") + 50.0).alias("xmax"),
-            (F.col("cy") - 50.0).alias("ymin"),
-            (F.col("cy") + 50.0).alias("ymax"),
-        )
-        # one envelope build shared by the facility probe and the track view
-        env = spatial_assign.bbox_union(boxes, ["member", "wind_threshold"]).persist()
+        # centers / shelters / WASH), saved at impact_analysis.py:2809-2840.
+        # One envelope build is shared by the facility probe and the track
+        # view; the probe is a narrow projection, so the facility view
+        # needs no exchange and the track counts below shuffle only each
+        # task's partial (member, threshold) counts. fac_view is cached:
+        # the write and the report's two facility passes share it.
+        env = member_envelopes(hits).persist()
         cached.append(env)
-        # a NULL member is no ensemble member: it counts toward no probability
-        env_list = env.filter(F.col("member").isNotNull()).agg(
-            F.collect_list(
-                F.struct("member", "wind_threshold", "xmin", "xmax", "ymin", "ymax")
-            ).alias("envs")
-        )
-        b = F.lit(FACILITY_BUFFER)
-
-        def in_env(e):
-            return (
-                (F.col("fx") + b >= e["xmin"])
-                & (F.col("fx") - b <= e["xmax"])
-                & (F.col("fy") + b >= e["ymin"])
-                & (F.col("fy") - b <= e["ymax"])
-            )
-
-        probe = (
-            fac.crossJoin(F.broadcast(env_list))
-            .select(
-                "facility_id",
-                "kind",
-                F.transform(
-                    F.filter("envs", in_env),
-                    lambda e: F.struct(
-                        e["member"].alias("member"),
-                        e["wind_threshold"].alias("wind_threshold"),
-                    ),
-                ).alias("hit_members"),
-            )
-            .persist()
-        )
+        probe = facility_probe(facilities(spark, sf_dir), env).persist()
         cached.append(probe)
-        # envelopes are distinct per (member, threshold), so a facility's
-        # hits at a threshold count its hit members; cached: the write and
-        # the report's two facility passes share it
-        at_threshold = F.filter(
-            "hit_members", lambda h: h["wind_threshold"] == F.col("wind_threshold")
-        )
         fac_view = (
-            _with_thresholds(probe)
-            .select(
-                "facility_id",
-                "kind",
-                "wind_threshold",
-                (F.size(at_threshold) / F.lit(float(ENSEMBLE_SIZE))).alias("probability"),
-            )
+            facility_view(probe)
             .withColumn("storm", F.lit(storm))
             .withColumn("forecast_compact", F.lit(forecast_time))
             .persist()

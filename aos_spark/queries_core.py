@@ -37,7 +37,8 @@ from aos_spark.ops import (
     vulnerability,
     windows,
 )
-from aos_spark.pipeline.jobs import FACILITY_KINDS, ZONES, zones_df
+from aos_spark.pipeline import jobs
+from aos_spark.pipeline.jobs import ENSEMBLE_SIZE, ZONES, zones_df
 from aos_spark.registry import register
 
 
@@ -64,15 +65,12 @@ def _dsum_sql(col: str, scale: int = 2) -> str:
 # impact → A3/J9 rollup with the null contract → A8 top-K.
 # --------------------------------------------------------------------------
 
-FLAGSHIP_ENSEMBLE = 8
-
-
 def q_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     ev = filters.recency_filter(ev, "ts", "2024-02-15", 40)
     hits = ev.select("user_id", "event_type").distinct()
     prob = probability.member_probability(
-        hits, ["user_id"], member_col="event_type", ensemble_size=FLAGSHIP_ENSEMBLE
+        hits, ["user_id"], member_col="event_type", ensemble_size=ENSEMBLE_SIZE
     )
     base = ev.groupBy("user_id").agg(dsum("value").alias("exposure"))
     tiles = probability.attach_probability(base, prob, ["user_id"])
@@ -97,7 +95,7 @@ WITH ev AS (
 ),
 prob AS (
   SELECT user_id,
-         COUNT(DISTINCT event_type) / {float(FLAGSHIP_ENSEMBLE)} AS probability
+         COUNT(DISTINCT event_type) / {float(ENSEMBLE_SIZE)} AS probability
   FROM ev GROUP BY user_id
 ),
 base AS (
@@ -525,7 +523,7 @@ def q_probability_expected(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     hits = ev.select("user_id", "event_type").distinct()
     prob = probability.member_probability(
-        hits, ["user_id"], member_col="event_type", ensemble_size=FLAGSHIP_ENSEMBLE
+        hits, ["user_id"], member_col="event_type", ensemble_size=ENSEMBLE_SIZE
     )
     base = ev.groupBy("user_id").agg(dsum("value").alias("total_value"))
     tiles = probability.attach_probability(base, prob, ["user_id"])
@@ -537,7 +535,7 @@ def q_probability_expected(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_PROB = f"""
 WITH prob AS (
-  SELECT user_id, COUNT(DISTINCT event_type) / {float(FLAGSHIP_ENSEMBLE)} AS probability
+  SELECT user_id, COUNT(DISTINCT event_type) / {float(ENSEMBLE_SIZE)} AS probability
   FROM events GROUP BY user_id
 ),
 base AS (
@@ -1543,64 +1541,15 @@ register("j3_j5_zone_assignment", q_zone_assignment, ORACLE_ZONE_ASSIGN)
 
 
 def q_facility_probability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2×4 + A12: the per-facility probability view family from the update
-    job as a standalone oracle-checked query — one row per facility per
-    threshold, probability = members whose envelope reaches the (buffered)
-    facility / fixed ensemble size, zero-hit facilities kept at 0.0
-    (create_school_view_from_envelopes, impact_analysis.py:1620-1717; the
-    member envelope is the A12 bbox union of the member's hit tiles).
-
-    All coordinates are integer-derived so Spark and DuckDB agree exactly.
-    Plan shape: the envelope dim is members × thresholds (≤ 24 rows) →
-    broadcast nested-loop on the range predicate; facilities never shuffle.
-    """
-    ev = _t(spark, sf_dir, "events")
-    thresholds = [50, 100, 150]
-    th_df = spark.createDataFrame([(t,) for t in thresholds], "wind_threshold INT")
-    th_arr = F.array(*[F.lit(t) for t in thresholds])
-    hits = ev.select(
-        F.col("user_id").alias("tile_id"),
-        F.col("event_type").alias("member"),
-        F.explode(F.filter(th_arr, lambda t: F.col("value") >= t)).alias(
-            "wind_threshold"
-        ),
-    ).distinct()
-    env = hits.groupBy("member", "wind_threshold").agg(
-        F.min((F.col("tile_id") * 7) % 6000 - 50).alias("xmin"),
-        F.max((F.col("tile_id") * 7) % 6000 + 50).alias("xmax"),
-        F.min((F.col("tile_id") % 97) * 10 - 50).alias("ymin"),
-        F.max((F.col("tile_id") % 97) * 10 + 50).alias("ymax"),
-    )
-    kinds = F.array(*[F.lit(k) for k in FACILITY_KINDS])
-    fac = _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("facility_id"),
-        F.element_at(kinds, (F.col("c_custkey") % 4 + 1).cast("int")).alias("kind"),
-        ((F.col("c_custkey") * 131) % 6000).alias("fx"),
-        ((F.col("c_custkey") * 17) % 970).alias("fy"),
-    )
-    # circular 2-unit facility buffer (r9): Euclidean point-to-box
-    # distance, squared — integer-exact in both engines; the reference's
-    # gpd .buffer() is a disc, not the Chebyshev square
-    fdx = F.greatest(F.col("xmin") - F.col("fx"), F.col("fx") - F.col("xmax"), F.lit(0))
-    fdy = F.greatest(F.col("ymin") - F.col("fy"), F.col("fy") - F.col("ymax"), F.lit(0))
-    in_env = fdx * fdx + fdy * fdy <= F.lit(4)
-    nhit = (
-        fac.join(F.broadcast(env), in_env)
-        .groupBy("facility_id", "wind_threshold")
-        .agg(F.countDistinct("member").alias("n_members"))
-    )
-    return (
-        fac.crossJoin(F.broadcast(th_df))
-        .join(nhit, ["facility_id", "wind_threshold"], "left")
-        .select(
-            "facility_id",
-            "kind",
-            "wind_threshold",
-            (F.coalesce(F.col("n_members"), F.lit(0)) / F.lit(8.0)).alias(
-                "probability"
-            ),
-        )
-    )
+    """J2×4 + A12: the forecast update's facility probability view as a
+    standalone oracle-checked query, built by the update's own builders
+    (`pipeline/jobs`): member envelopes probed by disc-buffered facility
+    points, probability = hit members / ENSEMBLE_SIZE, zero-hit facilities
+    at 0.0. All coordinates are integer-valued, so Spark and DuckDB agree
+    exactly."""
+    hits = jobs.member_hits(_t(spark, sf_dir, "events"))
+    probe = jobs.facility_probe(jobs.facilities(spark, sf_dir), jobs.member_envelopes(hits))
+    return jobs.facility_view(probe)
 
 
 ORACLE_FACILITY_PROB = """

@@ -5,8 +5,9 @@ views; DuckDB recomputes each from the input parquet files with the
 rules stated in `aos_spark/pipeline/jobs.py`, sharing no code with it:
 
 * a member's envelope at threshold t is the bounding box of the 100×100
-  boxes around its tiles with a value ≥ t; a facility is hit when its
-  point, buffered by FACILITY_BUFFER, meets the box;
+  boxes around its tiles with a value ≥ t; a facility is hit when the
+  disc of radius FACILITY_BUFFER around its point meets the box (squared
+  Euclidean point-to-box distance ≤ FACILITY_BUFFER²);
 * facility probability = hitting members / ENSEMBLE_SIZE, 0.0 without hits;
 * severity = Σ base-layer population over the member's hit tiles;
 * tracks = per (member, threshold) hit-facility counts per kind plus the
@@ -22,6 +23,7 @@ import duckdb
 import pytest
 
 from aos_spark.pipeline import jobs
+from aos_spark.queries import QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
 STORM = "TRUTHSTORM"
@@ -61,8 +63,9 @@ FROM '{SF_DIR}/customer.parquet';
 CREATE TABLE fac_hits AS
 SELECT f.facility_id, f.kind, v.member, v.wind_threshold
 FROM fac f JOIN env v
-  ON f.fx + {B} >= v.xmin AND f.fx - {B} <= v.xmax
- AND f.fy + {B} >= v.ymin AND f.fy - {B} <= v.ymax;
+  ON GREATEST(v.xmin - f.fx, f.fx - v.xmax, 0) * GREATEST(v.xmin - f.fx, f.fx - v.xmax, 0)
+     + GREATEST(v.ymin - f.fy, f.fy - v.ymax, 0) * GREATEST(v.ymin - f.fy, f.fy - v.ymax, 0)
+     <= {B * B};
 """
 
 KIND_COUNTS = ",\n".join(
@@ -157,3 +160,17 @@ def test_facility_truth_has_hits_and_misses(truth):
         "SELECT (SELECT COUNT(*) FROM fac), (SELECT COUNT(DISTINCT facility_id) FROM fac_hits)"
     ).fetchone()
     assert 0 < n_hit < n_fac
+
+
+def test_facilities_view_is_the_registry_query(spark, truth):
+    """The facilities view the update writes equals the oracle-checked
+    `j2_facility_probability` query row for row."""
+    _, wh = truth
+    view = spark.read.parquet(os.path.join(wh, "views", "facilities")).filter(
+        f"storm = '{STORM}' AND forecast_compact = '{FC}'"
+    )
+    got = view.selectExpr(
+        "facility_id", "kind", "CAST(wind_threshold AS INT) AS wind_threshold", "probability"
+    ).collect()
+    want = QUERIES["j2_facility_probability"](spark, SF_DIR).collect()
+    assert got and sorted(map(tuple, got)) == sorted(map(tuple, want))

@@ -102,6 +102,31 @@ def test_update_writes_facility_and_track_views(spark, warehouse):
     assert seg.filter(F.col("cx_next").isNull()).count() == 0
 
 
+def test_facility_probe_buffer_is_a_disc(spark):
+    """A facility is hit when the disc of radius FACILITY_BUFFER around it
+    meets the envelope, not the square around it: a point diagonal from a
+    box corner by (b, b) is outside the disc, one at (b/2, b/2) or b off
+    an edge is inside."""
+    b = jobs.FACILITY_BUFFER
+    env = spark.createDataFrame(
+        [(3, 100, 0.0, 10.0, 0.0, 10.0)],
+        "member INT, wind_threshold INT, xmin DOUBLE, xmax DOUBLE, ymin DOUBLE, ymax DOUBLE",
+    )
+    fac = spark.createDataFrame(
+        [
+            (1, "schools", 10.0 + b, 10.0 + b),
+            (2, "schools", 10.0 + b / 2, 10.0 + b / 2),
+            (3, "schools", 10.0 + b, 5.0),
+        ],
+        "facility_id BIGINT, kind STRING, fx DOUBLE, fy DOUBLE",
+    )
+    got = {
+        r["facility_id"]: [tuple(h) for h in r["hit_members"]]
+        for r in jobs.facility_probe(fac, env).collect()
+    }
+    assert got == {1: [], 2: [(3, 100)], 3: [(3, 100)]}
+
+
 def test_update_is_idempotent(spark, warehouse):
     res = jobs.update(spark, SF_DIR, warehouse, STORM, FC1)
     assert res["status"] == "SKIPPED"
