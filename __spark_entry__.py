@@ -2,7 +2,8 @@
 
 entry(spark)  — flagship storm-impact query at sf0.001 (smoke).
 queries()     — one entry per implemented operator from SURVEY.md §2 plus
-                the LLM-data-pipeline tier; see aos_spark/queries.py.
+                the LLM-data-pipeline tier, in QUERY_ORDER; see the domain
+                modules of aos_spark/queries/.
 oracle_sql()  — DuckDB-equivalent ANSI SQL per query (same parquet views).
 """
 

@@ -367,7 +367,7 @@ def shingle_intersection_counts(
     on_over_budget: str = "drop",
 ) -> DataFrame:
     """The shared candidate machinery behind every shingle-overlap metric
-    (Jaccard here, containment in queries_r5e): one capped, PERSISTED
+    (Jaccard here, containment in queries/dedup): one capped, PERSISTED
     exploded-shingle frame feeding the df statistics and ONE grouped
     posting-list build, then per-key LOCAL pair expansion and one
     count-keyed aggregation. Returns (id_a, id_b, n_a, n_b, n_common)

@@ -5,7 +5,7 @@ pure function of its id (+ a salt), so splits are reproducible across runs,
 engines, cluster sizes, and partitionings — the property that matters when
 a 100 TB corpus is re-materialized and the val set must not drift into
 train. Buckets come from the md5 prefix (cross-engine reproducible, see
-queries_core.py oracle rules); all expressions are pure Catalyst.
+aos_spark/queries oracle rules); all expressions are pure Catalyst.
 """
 
 from __future__ import annotations

@@ -30,7 +30,7 @@ values at scale 6 and ~4% for anything at scale 15. Because this module
 emits the rounded moment sums as OUTPUT columns, even one flipped unit
 is a visible result difference, not an absorbed intermediate. Build
 exact series instead (integral division → decimal multiply — see
-queries_r5b.q_order_autocorrelation) and keep
+queries/stats.q_order_autocorrelation) and keep
 tests/test_stats_cross_engine.py green.
 """
 

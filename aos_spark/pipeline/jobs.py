@@ -179,6 +179,14 @@ def _with_thresholds(df: DataFrame) -> DataFrame:
     )
 
 
+def _tagged(df: DataFrame, storm: str, forecast_time: str) -> DataFrame:
+    """df with the view partition literals `storm` and `forecast_compact`
+    appended in one projection (each withColumn re-analyses the plan)."""
+    return df.select(
+        "*", F.lit(storm).alias("storm"), F.lit(forecast_time).alias("forecast_compact")
+    )
+
+
 def member_hits(ev: DataFrame) -> DataFrame:
     """(tile_id, member, wind_threshold) hit triples — the J1 equivalent.
     One scan fans out to all thresholds via an array literal (no per-
@@ -307,16 +315,15 @@ def update(
         # A2: expected impacts
         zone = ["tile_id", "wind_threshold"]
         prob = probability.member_probability(hits, zone, "member", ENSEMBLE_SIZE)
-        tile_view = (
+        tile_view = _tagged(
             probability.expected_impact(
                 probability.attach_probability(_with_thresholds(base), prob, zone),
                 BASE_SUM_COLS + BASE_AVG_COLS,
                 keep=["tile_id", "admin_id", "wind_threshold"],
-            )
-            .withColumn("storm", F.lit(storm))
-            .withColumn("forecast_compact", F.lit(forecast_time))
-            .persist()
-        )
+            ),
+            storm,
+            forecast_time,
+        ).persist()
         cached.append(tile_view)
 
         # A3: admin rollup of expected impacts (null contract: E_rwi optional);
@@ -331,26 +338,26 @@ def update(
             avg_cols=[],
             optional_sum_cols=["E_rwi"],
         )
-        admin_view = (
+        admin_view = _tagged(
             admin_view.select(
                 "admin_id",
                 "wind_threshold",
                 *[F.col(f"E_{c}").cast("double").alias(f"E_{c}") for c in BASE_SUM_COLS],
                 "E_rwi",
-            )
-            .withColumn("storm", F.lit(storm))
-            .withColumn("forecast_compact", F.lit(forecast_time))
-            .persist()
-        )
+            ),
+            storm,
+            forecast_time,
+        ).persist()
         cached.append(admin_view)
 
         # W3/W4: CCI from the threshold-long tile view
         long_df = tile_view.select(
             "tile_id", "wind_threshold", (F.col("E_population")).alias("exposure")
         )
-        cci_view = cci.cci_from_long(long_df, ["tile_id"], "wind_threshold", ["exposure"])
-        cci_view = cci_view.withColumn("storm", F.lit(storm)).withColumn(
-            "forecast_compact", F.lit(forecast_time)
+        cci_view = _tagged(
+            cci.cci_from_long(long_df, ["tile_id"], "wind_threshold", ["exposure"]),
+            storm,
+            forecast_time,
         )
 
         # A5 + track sums: one (member, threshold) aggregate of the hit
@@ -366,12 +373,14 @@ def update(
             BASE_SUM_COLS,
         ).persist()
         cached.append(member_agg)
-        sev = member_agg.select(
-            "member",
-            F.col("wind_threshold").alias("threshold"),
-            F.col("total_population").cast("double").alias("total_exposure"),
-        ).withColumn("storm", F.lit(storm)).withColumn(
-            "forecast_compact", F.lit(forecast_time)
+        sev = _tagged(
+            member_agg.select(
+                "member",
+                F.col("wind_threshold").alias("threshold"),
+                F.col("total_population").cast("double").alias("total_exposure"),
+            ),
+            storm,
+            forecast_time,
         )
 
         # J2×4 + S11: per-facility probability views (schools / health
@@ -385,12 +394,7 @@ def update(
         cached.append(env)
         probe = facility_probe(facilities(spark, sf_dir), env).persist()
         cached.append(probe)
-        fac_view = (
-            facility_view(probe)
-            .withColumn("storm", F.lit(storm))
-            .withColumn("forecast_compact", F.lit(forecast_time))
-            .persist()
-        )
+        fac_view = _tagged(facility_view(probe), storm, forecast_time).persist()
         cached.append(fac_view)
 
         # track severity view: per (member, threshold) — facility counts per
@@ -414,13 +418,13 @@ def update(
                 for c in BASE_SUM_COLS
             ],
         )
-        track_view = (
+        track_view = _tagged(
             env.select("member", "wind_threshold")
             .join(kind_counts, ["member", "wind_threshold"], "left")
             .join(tile_sums, ["member", "wind_threshold"], "left")
-            .fillna({f"severity_{k}": 0 for k in FACILITY_KINDS})
-            .withColumn("storm", F.lit(storm))
-            .withColumn("forecast_compact", F.lit(forecast_time))
+            .fillna({f"severity_{k}": 0 for k in FACILITY_KINDS}),
+            storm,
+            forecast_time,
         )
 
         # W1: track-segment view — each member's event sequence paired with
@@ -447,9 +451,7 @@ def update(
             "cx_next",
             "cy_next",
         )
-        seg = seg.withColumn("storm", F.lit(storm)).withColumn(
-            "forecast_compact", F.lit(forecast_time)
-        )
+        seg = _tagged(seg, storm, forecast_time)
 
         # the seven views are independent: write them concurrently, each
         # listing the cached frames it reads, ancestors first

@@ -1,31 +1,33 @@
 """Query registry: each query module calls register() once per query, right
-after its oracle; the aggregator (aos_spark.queries) builds the ordered
-QUERIES/ORACLES from the modules it lists. Entries are kept per defining
-module, so the result does not depend on which module was imported first."""
+after its oracle; the package (aos_spark.queries) builds QUERIES/ORACLES in
+the order its QUERY_ORDER lists."""
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Callable
-from types import ModuleType
 
-_ENTRIES: dict[str, dict[str, tuple[Callable, str]]] = {}
+_ENTRIES: dict[str, tuple[Callable, str]] = {}
 
 
 def register(name: str, fn: Callable, oracle: str) -> None:
     """Register query `name` (fn(spark, sf_dir) -> DataFrame) and its
-    DuckDB oracle SQL under fn's module."""
-    if any(name in entries for entries in _ENTRIES.values()):
+    DuckDB oracle SQL."""
+    if name in _ENTRIES:
         raise ValueError(f"query {name!r} is already registered")
-    _ENTRIES.setdefault(fn.__module__, {})[name] = (fn, oracle)
+    _ENTRIES[name] = (fn, oracle)
 
 
-def build(modules: list[ModuleType], front: list[str]) -> tuple[dict, dict]:
-    """(QUERIES, ORACLES): `front` first, then every other entry of
-    `modules` in module order and, within a module, registration order."""
-    entries = {n: e for m in modules for n, e in _ENTRIES.get(m.__name__, {}).items()}
-    missing = [n for n in front if n not in entries]
+def build(order: list[str]) -> tuple[dict, dict]:
+    """(QUERIES, ORACLES) in `order`, which must list every registered
+    query exactly once."""
+    twice = sorted(n for n, k in Counter(order).items() if k > 1)
+    if twice:
+        raise ValueError(f"queries listed more than once: {twice}")
+    missing = [n for n in order if n not in _ENTRIES]
     if missing:
-        raise ValueError(f"gate-front names never registered: {missing}")
-    first = set(front)
-    order = [*front, *(n for n in entries if n not in first)]
-    return {n: entries[n][0] for n in order}, {n: entries[n][1] for n in order}
+        raise ValueError(f"listed queries never registered: {missing}")
+    unlisted = sorted(set(_ENTRIES) - set(order))
+    if unlisted:
+        raise ValueError(f"registered queries not listed: {unlisted}")
+    return {n: _ENTRIES[n][0] for n in order}, {n: _ENTRIES[n][1] for n in order}

@@ -35,8 +35,10 @@ from pyspark.sql import functions as F
 
 from aos_spark.fanout import run_all
 from aos_spark.ops.topk import topk_per_group
+from aos_spark.pipeline.jobs import ENSEMBLE_SIZE, FACILITY_KINDS, KEY_THRESHOLD
 
 TOP_K = 5  # reports.py:73
+PREVIOUS_FORECAST_HOURS = 6  # forecast runs are 6 h apart (load_json_report)
 COMPACT_FMT = "%Y%m%d%H%M%S"  # FILE_STRUCTURE.md:308-311
 
 
@@ -54,8 +56,8 @@ def human_time(compact: str) -> str:
     return dt.strftime("%B %-d, %Y %H:%M UTC")
 
 
-def previous_forecast(compact: str, hours: int = 6) -> str:
-    return dt_to_compact(compact_to_dt(compact) - timedelta(hours=hours))
+def previous_forecast(compact: str) -> str:
+    return dt_to_compact(compact_to_dt(compact) - timedelta(hours=PREVIOUS_FORECAST_HOURS))
 
 
 def _optional(v):
@@ -120,9 +122,7 @@ def build_report(
     tile_view: DataFrame,
     admin_view: DataFrame,
     events: DataFrame,
-    fac_view: DataFrame | None = None,
-    key_threshold: int = 100,
-    ensemble_size: int = 8,
+    fac_view: DataFrame,
 ) -> dict:
     """Assemble the flat report dict: per-threshold totals (A6), top-K tiles
     (A8), max active threshold (A9), landfall stats (A10/W2), per-admin rows,
@@ -148,7 +148,7 @@ def build_report(
     # A8 — top-K tiles by probability at the key threshold (deterministic
     # tie-break by tile_id)
     top_tiles_df = (
-        tile_view.filter(F.col("wind_threshold") == key_threshold)
+        tile_view.filter(F.col("wind_threshold") == KEY_THRESHOLD)
         .orderBy(F.col("probability").desc(), F.col("tile_id"))
         .limit(TOP_K)
     )
@@ -160,7 +160,7 @@ def build_report(
     # aggregate: exactly one row.
     ts = F.col("ts")
     landfall_df = (
-        events.filter(F.col("value") >= key_threshold)
+        events.filter(F.col("value") >= KEY_THRESHOLD)
         .groupBy("event_type")
         .agg(
             F.when(F.max(ts.isNull()), None).otherwise(F.min(ts)).alias("ts")
@@ -174,7 +174,7 @@ def build_report(
 
     # per-admin rows at the key threshold, keyed BY NAME (deliberate
     # deviation from reports.py:538-544's positional alignment — documented)
-    admin_df = admin_view.filter(F.col("wind_threshold") == key_threshold)
+    admin_df = admin_view.filter(F.col("wind_threshold") == KEY_THRESHOLD)
 
     # A7/F8 — vulnerability section at the key threshold. Poverty bands come
     # from actual RWI (E_rwi / probability, reports.py:440-462); the
@@ -187,7 +187,7 @@ def build_report(
     from aos_spark.ops.vulnerability import poverty_band, urban_rural_class
 
     key_tiles = tile_view.filter(
-        (F.col("wind_threshold") == key_threshold) & (F.col("probability") > 0)
+        (F.col("wind_threshold") == KEY_THRESHOLD) & (F.col("probability") > 0)
     ).withColumn("E_smod_class", F.col("E_built_surface"))
     sections = F.array(
         *[
@@ -224,19 +224,17 @@ def build_report(
     # threshold's rows (at most kinds × thresholds × TOP_K rows come
     # back). The row-number filter is planned as a window group limit, so
     # the shuffle stays bounded by TOP_K rows per group and partition.
-    frames = [totals_df, top_tiles_df, landfall_df, admin_df, bands_df]
-    if fac_view is not None:
-        sums_df = fac_view.groupBy("kind", "wind_threshold").agg(
-            F.sum("probability").alias("p")
-        )
-        top_fac_df = topk_per_group(
-            fac_view, ["kind", "wind_threshold"], "probability", "facility_id",
-            k=TOP_K, rank_col="__rn",
-        ).select("kind", "wind_threshold", "facility_id", "probability", "__rn")
-        frames += [sums_df, top_fac_df]
+    sums_df = fac_view.groupBy("kind", "wind_threshold").agg(
+        F.sum("probability").alias("p")
+    )
+    top_fac_df = topk_per_group(
+        fac_view, ["kind", "wind_threshold"], "probability", "facility_id",
+        k=TOP_K, rank_col="__rn",
+    ).select("kind", "wind_threshold", "facility_id", "probability", "__rn")
+    frames = [totals_df, top_tiles_df, landfall_df, admin_df, bands_df, sums_df, top_fac_df]
 
     collected = run_all(spark, [df.collect for df in frames])
-    totals_rows, top_tile_rows, (lf,), admin_rows_raw, band_rows = collected[:5]
+    totals_rows, top_tile_rows, (lf,), admin_rows_raw, band_rows, sums, top_rows = collected
 
     totals = {int(r["wind_threshold"]): r.asDict() for r in totals_rows}
     max_active_threshold = max(
@@ -248,7 +246,7 @@ def build_report(
     ]
     landfall = {
         "n_members_making_landfall": int(lf["n"]),
-        "landfall_fraction": round(lf["n"] / ensemble_size, 6),
+        "landfall_fraction": round(lf["n"] / ENSEMBLE_SIZE, 6),
         "earliest": lf["earliest"],
         "latest": lf["latest"],
     }
@@ -284,35 +282,31 @@ def build_report(
 
     top_facilities: dict = {}
     expected_facilities: dict = {}
-    if fac_view is not None:
-        from aos_spark.pipeline.jobs import FACILITY_KINDS
-
-        sums, top_rows = collected[5:]
-        ths = sorted({r["wind_threshold"] for r in sums})
-        key_th = key_threshold if key_threshold in ths else (ths[0] if ths else None)
-        if key_th is not None:
-            expected = {
-                r["kind"]: r["p"] for r in sums if r["wind_threshold"] == key_th
-            }
-            for kind in FACILITY_KINDS:
-                rows = sorted(
-                    (
-                        r
-                        for r in top_rows
-                        if r["kind"] == kind and r["wind_threshold"] == key_th
-                    ),
-                    key=lambda r: r["__rn"],
-                )
-                top_facilities[kind] = [
-                    {
-                        "facility_id": int(r["facility_id"]),
-                        "probability": r["probability"],
-                    }
-                    for r in rows
-                ]
-                expected_facilities[f"expected_{kind}"] = (
-                    _optional_ceil(expected[kind]) if kind in expected else None
-                )
+    ths = sorted({r["wind_threshold"] for r in sums})
+    key_th = KEY_THRESHOLD if KEY_THRESHOLD in ths else (ths[0] if ths else None)
+    if key_th is not None:
+        expected = {
+            r["kind"]: r["p"] for r in sums if r["wind_threshold"] == key_th
+        }
+        for kind in FACILITY_KINDS:
+            rows = sorted(
+                (
+                    r
+                    for r in top_rows
+                    if r["kind"] == kind and r["wind_threshold"] == key_th
+                ),
+                key=lambda r: r["__rn"],
+            )
+            top_facilities[kind] = [
+                {
+                    "facility_id": int(r["facility_id"]),
+                    "probability": r["probability"],
+                }
+                for r in rows
+            ]
+            expected_facilities[f"expected_{kind}"] = (
+                _optional_ceil(expected[kind]) if kind in expected else None
+            )
 
     report = {
         "storm": storm,

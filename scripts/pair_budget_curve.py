@@ -119,9 +119,9 @@ def main() -> None:
         # kept-vs-uncapped Σ C(df,2) verification already recorded in the
         # ngram section (kept 149,965,625 <= 150M at sf3) applies to the
         # candidate stage of every one of them verbatim.
-        from aos_spark.queries_r4 import q_dedup_resolution
-        from aos_spark.queries_r5e import q_containment_near_dup
-        from aos_spark.queries_r6 import (
+        from aos_spark.queries.dedup import (
+            q_containment_near_dup,
+            q_dedup_resolution,
             q_dedup_threshold_curve,
             q_split_leakage_check,
         )

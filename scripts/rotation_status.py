@@ -3,10 +3,10 @@ driver-green CORRECTNESS row, which were sampled but red, and which have
 never been driver-sampled at all.
 
 The driver verifies only the FIRST 50 registry entries per round, so
-iteration order decides what gets external verification (the
-`_GATE_FRONT` list in aos_spark/queries.py). Every round the front-load list had to
-be recomputed by hand from the CORRECTNESS_r*.json artifacts; this
-script does it mechanically and prints a ready-to-paste front list.
+iteration order decides what gets external verification (`_GATE_FRONT`,
+the first 50 names of `QUERY_ORDER` in aos_spark/queries/__init__.py).
+This script computes the front from the CORRECTNESS_r*.json artifacts
+and prints it; move those names to the head of `QUERY_ORDER`.
 
 Priority order (VERDICT r7 "Next round" #4, extended r9):
 1. reds — fixed bugs need a fresh green row first;

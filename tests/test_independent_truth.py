@@ -411,9 +411,9 @@ def test_triangle_count_matches_adjacency_sets(spark, sf_dir):
     count over the SAME edge list (the edge generator is verified
     elsewhere; this isolates the counting algorithm)."""
     from aos_spark.llm import dedup as D
-    from aos_spark.queries_core import _t
+    from aos_spark.io.readers import read_sf_table
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = read_sf_table(spark, sf_dir, "embeddings")
     pairs = [
         (r["id_a"], r["id_b"])
         for r in D.embedding_near_dups(e, threshold=0.2, n_planes=4).collect()

@@ -79,7 +79,7 @@ def lineitem(sf_dir):
 
 @pytest.fixture(scope="module")
 def scored_docs(docs):
-    """Python replica of queries_r5._scored_docs: (doc_id, lang, source,
+    """Python replica of queries/sampling._scored_docs: (doc_id, lang, source,
     n_tokens, quality) rows via the wave-1 quality replica."""
     rows = []
     for r in docs.itertuples():
@@ -192,7 +192,7 @@ def _morton(x: int, y: int, bits: int) -> int:
 def test_zorder_skipping_census_matches_pure_python(spark, sf_dir, lineitem):
     """Chunk min/max census for both layouts recomputed with dicts and a
     string-built Morton key — all-integer, exact."""
-    from aos_spark.queries_r6 import _ZBITS
+    from aos_spark.queries.relational import _ZBITS
 
     pts = [(int(pk) % 64, int(sk) % 64)
            for pk, sk in zip(lineitem["l_partkey"], lineitem["l_suppkey"])]
@@ -231,7 +231,7 @@ def test_zorder_skipping_census_matches_pure_python(spark, sf_dir, lineitem):
 
 
 def test_key_skew_profile_matches_counter_replica(spark, sf_dir, lineitem):
-    from aos_spark.queries_r5b import _SKEW_COLS
+    from aos_spark.queries.relational import _SKEW_COLS
 
     got = {
         r["key_col"]: r.asDict()

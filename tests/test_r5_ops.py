@@ -203,7 +203,7 @@ def test_mixture_plan_missing_domain_gets_zero(spark):
 
 # ------------------------------------------------------- curation policies
 def test_per_source_cap_bounds_kept(spark, sf_dir):
-    from aos_spark.queries_r5 import q_per_source_cap
+    from aos_spark.queries.sampling import q_per_source_cap
 
     rows = q_per_source_cap(spark, sf_dir).collect()
     assert rows, "expected at least one source"
@@ -213,7 +213,7 @@ def test_per_source_cap_bounds_kept(spark, sf_dir):
 
 
 def test_token_budget_selection_within_budget(spark, sf_dir):
-    from aos_spark.queries_r5 import q_token_budget_selection
+    from aos_spark.queries.sampling import q_token_budget_selection
 
     for r in q_token_budget_selection(spark, sf_dir).collect():
         assert r["selected_tokens"] <= 2000
@@ -221,7 +221,7 @@ def test_token_budget_selection_within_budget(spark, sf_dir):
 
 
 def test_quality_decile_shards_ordered(spark, sf_dir):
-    from aos_spark.queries_r5 import q_quality_decile_shards
+    from aos_spark.queries.sampling import q_quality_decile_shards
 
     rows = q_quality_decile_shards(spark, sf_dir).collect()
     by_lang: dict = {}

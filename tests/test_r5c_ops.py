@@ -354,7 +354,7 @@ def test_cusum_detects_level_shift(spark):
         for i in range(cnt):
             rows.append((d * 1000 + i, base + dt.timedelta(days=d)))
     o = spark.createDataFrame(rows, ["o_orderkey", "o_orderdate"])
-    from aos_spark.queries_r5c import q_cusum_change_point
+    from aos_spark.queries.stats import q_cusum_change_point
 
     # run the query body against a temp view shim: easiest is direct logic
     daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(

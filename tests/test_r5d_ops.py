@@ -8,15 +8,11 @@ import math
 
 from pyspark.sql import functions as F
 
-from aos_spark.queries_r5d import (
-    q_above_nation_avg_customers,
-    q_benford_first_digit,
-    q_ewma_monthly_revenue,
-    q_markov_two_step,
-    q_ngram_novelty_rate,
-    q_source_minhash_similarity,
-    q_type_token_ratio,
-)
+from aos_spark.queries.dedup import q_source_minhash_similarity
+from aos_spark.queries.relational import q_above_nation_avg_customers
+from aos_spark.queries.stats import q_benford_first_digit, q_ewma_monthly_revenue
+from aos_spark.queries.text import q_ngram_novelty_rate, q_type_token_ratio
+from aos_spark.queries.windows import q_markov_two_step
 
 SF = "/root/testdata/sf0.001"
 

@@ -8,13 +8,10 @@ import math
 from pyspark.sql import functions as F
 
 from aos_spark.ops import sketches
-from aos_spark.queries_r5e import (
-    q_containment_near_dup,
-    q_customer_skyline,
-    q_dau_moving_average,
-    q_hll_merge_weekly,
-    q_lsh_band_stats,
-)
+from aos_spark.queries.dedup import q_containment_near_dup, q_lsh_band_stats
+from aos_spark.queries.relational import q_customer_skyline
+from aos_spark.queries.sketches import q_hll_merge_weekly
+from aos_spark.queries.windows import q_dau_moving_average
 
 SF = "/root/testdata/sf0.001"
 

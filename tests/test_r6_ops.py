@@ -123,7 +123,7 @@ def test_language_kappa_degenerate_corpus_is_null_in_both_engines(
     not a crash — and therefore still hash-match."""
     import duckdb
 
-    from aos_spark.queries_r6 import _language_kappa_oracle, q_language_kappa
+    from aos_spark.queries.text import _language_kappa_oracle, q_language_kappa
 
     # every doc labeled 'en' AND detected 'en' (texts are pure English
     # stopword markers, so the heuristic can't say anything else)

@@ -232,7 +232,7 @@ def test_array_agg_sorted_string_is_sorted_distinct(spark, sf_dir):
 def test_trimmed_mean_is_outlier_robust(spark, tmp_path):
     import os
 
-    from aos_spark.queries_r5b import q_trimmed_mean_prices
+    from aos_spark.queries.stats import q_trimmed_mean_prices
 
     d = str(tmp_path / "sf")
     os.makedirs(d)

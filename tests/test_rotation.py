@@ -58,7 +58,7 @@ def test_reds_suspects_and_never_sampled_sit_inside_driver_window():
         f"{len(out_of_window)} queries needing driver verification sit at "
         f"registry positions >= {DRIVER_WINDOW} (outside the driver's "
         f"per-round sample). Re-run scripts/rotation_status.py and paste "
-        f"its suggested front-load into aos_spark/queries.py: "
+        f"its suggested front to the head of QUERY_ORDER: "
         f"{out_of_window}"
     )
 

@@ -84,7 +84,7 @@ def test_autocorrelation_engines_agree_on_boundary_fixture(
     boundary fixture, every output value compared as float hex (the
     driver's canonicalization). Regressing the series to a double (the
     round-8 shape) makes this fail."""
-    from aos_spark.queries_r5b import ORACLE_AUTOCORR, q_order_autocorrelation
+    from aos_spark.queries.stats import ORACLE_AUTOCORR, q_order_autocorrelation
 
     sf_dir = knife_edge_orders.rsplit("/", 1)[0]
     # the fixture file is <dir>/orders.parquet, matching _t()'s layout
@@ -123,7 +123,7 @@ def test_autocorrelation_degenerate_years_agree(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from aos_spark.queries_r5b import ORACLE_AUTOCORR, q_order_autocorrelation
+    from aos_spark.queries.stats import ORACLE_AUTOCORR, q_order_autocorrelation
 
     rows = [
         (dt.date(2019, 1, 1), 100.01), (dt.date(2019, 1, 2), 250.37),
@@ -172,7 +172,7 @@ def test_autocorr_series_feeds_decimal_not_double(spark, sf_dir):
     must not cast a DOUBLE-typed mean into the moment decimals. The
     exact-micro construction leaves only decimal intermediates, so no
     `cast(avg_price#… as decimal(18,6))` over a double child appears."""
-    from aos_spark.queries_r5b import q_order_autocorrelation
+    from aos_spark.queries.stats import q_order_autocorrelation
 
     plan = (
         q_order_autocorrelation(spark, sf_dir)

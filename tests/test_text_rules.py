@@ -127,7 +127,7 @@ def test_cooccurrence_counts_doc_once_despite_repeats(spark):
 
 
 def test_language_confusion_shares_sum_to_one(spark, sf_dir):
-    from aos_spark.queries_r5b import q_language_confusion
+    from aos_spark.queries.text import q_language_confusion
     import pyspark.sql.functions as F
 
     out = q_language_confusion(spark, sf_dir)
@@ -140,7 +140,7 @@ def test_bpe_merge_candidates_counts(spark, tmp_path):
     and 1x in ab -> weighted count 3*2 + 2*1 = 8; 'ba' only inside abab."""
     import os
 
-    from aos_spark.queries_r5b import q_bpe_merge_candidates
+    from aos_spark.queries.text import q_bpe_merge_candidates
 
     d = str(tmp_path / "sf")
     os.makedirs(d)
