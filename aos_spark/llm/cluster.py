@@ -22,6 +22,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aos_spark.llm.dedup import ensure_min_partitions
+from aos_spark.llm.similarity import cosine_from_norms, norm_expr
+from aos_spark.ops.fixpoint import iterate
+
 
 def explode_vectors(
     df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
@@ -60,19 +64,18 @@ def kmeans_fit(
 ) -> DataFrame:
     """Run ``n_iter`` Lloyd iterations (deterministic lowest-id seeding)
     and return the final centroids as (id, vector) rows. Each round is
-    the two-shuffle step above; localCheckpoint truncates lineage so the
-    plan does not grow with iterations (same discipline as
-    dup_clusters). Lloyd monotonically lowers inertia (tested), so a
-    fixed small n_iter is the standard trade at corpus scale. The input
-    is spread (kmeans_lloyd_step's guard) and materialized ONCE per fit,
-    not once per round."""
-    from aos_spark.llm.dedup import ensure_min_partitions
-
+    the two-shuffle step above, run as fixed rounds on
+    ops/fixpoint.iterate (a local checkpoint per round, so the plan does
+    not grow with iterations). Lloyd monotonically lowers inertia
+    (tested), so a fixed small n_iter is the standard trade at corpus
+    scale. The input is spread (kmeans_lloyd_step's guard) and
+    materialized ONCE per fit, not once per round."""
     spread = ensure_min_partitions(df).localCheckpoint()
-    cents = None
-    for _ in range(n_iter):
-        step = _lloyd_step(spread, df, k, id_col, vec_col, cents)
-        cents = centroids_to_vectors(step, id_col, vec_col).localCheckpoint()
+    cents, _ = iterate(
+        _seeds(df, k, id_col),
+        lambda c: centroids_to_vectors(_lloyd_step(spread, c, id_col, vec_col), id_col, vec_col),
+        n_iter,
+    )
     return cents
 
 
@@ -92,26 +95,26 @@ def kmeans_lloyd_step(
     ``centroids`` defaults to the k lowest-id vectors (deterministic
     seed); pass the previous step's output (pivoted back to vectors) to
     iterate."""
-    from aos_spark.llm.dedup import ensure_min_partitions
-
+    if centroids is None:
+        centroids = _seeds(df, k, id_col)
     # the |corpus|·dim·k distance map side runs at the SCAN's parallelism
     # (no exchange below it) — a single-row-group parquet corpus is 1
     # task however many splits are requested (r16, guide §2.5)
-    return _lloyd_step(
-        ensure_min_partitions(df), df, k, id_col, vec_col, centroids
-    )
+    return _lloyd_step(ensure_min_partitions(df), centroids, id_col, vec_col)
 
 
-def _lloyd_step(spread, df, k, id_col, vec_col, centroids) -> DataFrame:
-    """kmeans_lloyd_step over ``spread``, an already-spread copy of
-    ``df`` (seeding still reads ``df``)."""
+def _seeds(df: DataFrame, k: int, id_col: str) -> DataFrame:
+    """The k LOWEST-ID vectors, as documented — not filter(id < k), which
+    silently under-seeds (possibly to zero) when ids are non-contiguous or
+    non-zero-based (ADVICE r4). orderBy+limit is equally deterministic and
+    runs once on the dim-sized frame."""
+    return df.orderBy(F.col(id_col).asc()).limit(k)
+
+
+def _lloyd_step(spread, centroids, id_col, vec_col) -> DataFrame:
+    """kmeans_lloyd_step over ``spread``, an already-spread copy of the
+    vectors, against the (id, vector) ``centroids``."""
     ve = explode_vectors(spread, id_col, vec_col)
-    if centroids is None:
-        # the k LOWEST-ID vectors, as documented — not filter(id < k),
-        # which silently under-seeds (possibly to zero) when ids are
-        # non-contiguous or non-zero-based (ADVICE r4). orderBy+limit is
-        # equally deterministic and runs once on the dim-sized frame.
-        centroids = df.orderBy(F.col(id_col).asc()).limit(k)
     ce = explode_vectors(centroids, id_col, vec_col).select(
         F.col(id_col).alias("cid"), "dim", F.col("__v").alias("__c")
     )
@@ -161,8 +164,6 @@ def label_centroid_similarity(
     per-label ordered re-collect (|dims| rows per label) → tiny centroid
     self-join. One data-sized shuffle total.
     """
-    from aos_spark.llm.similarity import cosine_from_norms, norm_expr
-
     x = df.select(
         F.col(label_col).alias("lbl"),
         F.posexplode(F.col(vec_col)).alias("dim", "val"),

@@ -10,16 +10,28 @@ them; SimHash uses a vectorized Arrow pandas UDF (bit-level ops).
 
 from __future__ import annotations
 
+import hashlib
 import math
+import random
+import re
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import LongType
 
 from aos_spark.cache import persist_tracked
+from aos_spark.llm.similarity import (
+    cosine_from_norms,
+    deterministic_centroids,
+    hyperplane_bucket,
+    ivf_assign,
+    norm_expr,
+)
 from aos_spark.ops.exact_round import round_ratio6
+from aos_spark.ops.fixpoint import NotConverged, iterate, observed_checkpoint
 
 
 # The tokenization rule of every text, dedup and packing operator:
@@ -101,7 +113,7 @@ def shingles_from_tokens(tokens: Column, n: int = 3) -> Column:
     )
 
 
-def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def ensure_min_partitions(df: DataFrame) -> DataFrame:
     """Round-robin repartition ONLY when the input is under-partitioned
     (e.g. a single small parquet file, which cannot split below one row
     group). At warehouse scale inputs already carry enough partitions and
@@ -115,8 +127,7 @@ def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFr
     it measured a net loss (tfidf, cooccurrence, vocab-encode: 0.79–0.85×
     — light tokenize, persisted frames, where the round-robin shuffle and
     extra stage outweigh the spread)."""
-    if min_parts is None:
-        min_parts = df.sparkSession.sparkContext.defaultParallelism
+    min_parts = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < min_parts:
         return df.repartition(min_parts)
     return df
@@ -432,8 +443,6 @@ def shingle_intersection_counts(
         # map-side — acceptable because the rows of a hot key all landed
         # on one task under the old SMJ probe too, and the df-cap filter
         # bounds everything downstream.
-        from pyspark.sql import Window
-
         posting = (
             exploded.filter(F.col("shingle").isNotNull())
             .withColumn(
@@ -559,8 +568,6 @@ MINHASH_PRIME = 4_294_967_311  # smallest prime > 2^32
 def minhash_params(num_hashes: int, seed: int = 1) -> list[tuple[int, int]]:
     """Deterministic affine-permutation parameters (a, b), a odd, a,b < 2^20
     so a*h + b stays well inside int64 for 32-bit h."""
-    import random
-
     rng = random.Random(seed)
     return [
         (rng.randrange(1, 1 << 20) | 1, rng.randrange(0, 1 << 20))
@@ -836,11 +843,6 @@ def simhash64(texts: pd.Series) -> pd.Series:
     across runs/platforms. Tokenization is the same rule as tokens(), so
     external engines (and the DuckDB oracle) can reproduce the signature
     exactly."""
-    import hashlib
-    import re
-
-    import numpy as np
-
     out = np.zeros(len(texts), dtype=np.int64)
     shifts = np.arange(64, dtype=np.uint64)
     # per-batch token→±1-bit-vector cache: corpora repeat tokens heavily, so
@@ -928,8 +930,6 @@ def embedding_near_dups(
     hyperplane sign bucket (deterministic seed): vectors with cosine ≥ t
     almost always share the bucket key for small n_planes; verification is
     exact cosine in Catalyst (zip_with + aggregate)."""
-    from aos_spark.llm.similarity import cosine_from_norms, hyperplane_bucket, norm_expr
-
     bucketed = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
@@ -952,6 +952,14 @@ def embedding_near_dups(
             F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"), "cosine"
         )
     )
+
+
+# Round bounds and the broadcast threshold of dup_clusters. Propagation
+# runs first; a graph it cannot settle in PROPAGATE_ROUNDS (a long chain)
+# is resolved by the star rounds, whose count is O(log n).
+PROPAGATE_ROUNDS = 20
+STAR_ROUNDS = 40
+BROADCAST_MAX_NODES = 4_000_000
 
 
 def _star_large(edges: DataFrame) -> DataFrame:
@@ -988,103 +996,48 @@ def _star_small(edges: DataFrame) -> DataFrame:
     return to_min.union(m.select("src", F.col("__m").alias("dst"))).distinct()
 
 
-def _star_components(
-    edges: DataFrame, max_iter: int = 40
-) -> tuple[DataFrame, int]:
-    """Alternating large-star/small-star until the edge set is a forest of
-    stars (no node is both a parent and a child). O(log n) rounds on ANY
-    graph shape — including the path/chain graphs (boilerplate chains)
-    where plain min-label propagation needs O(diameter) rounds. Returns
-    (star edges child→root, rounds used). Raises if ``max_iter`` rounds
-    pass without reaching the star state — a partially-converged edge set
-    would silently yield WRONG cluster ids (ADVICE r4), and the propagate
-    path already fails loud in the same situation."""
+def _star_round(edges: DataFrame) -> DataFrame:
+    """One large-star + small-star round, with ``__tag`` = 1 on each edge
+    whose dst (parent) is also some edge's src (child). The edge set is a
+    forest of stars (parent set ∩ child set = ∅) exactly when the tag
+    sums to 0, so the convergence test rides on the round's checkpoint
+    job. The tag is one window over nodes (each edge keyed by its dst, a
+    NULL marker row by its src): one shuffle, two jobs fewer per round
+    than a join against the distinct child set."""
+    out = _star_small(_star_large(edges.select("src", "dst")))
+    rows = out.select("src", "dst", F.col("dst").alias("__n")).union(
+        out.select(F.lit(None).alias("src"), F.lit(None).alias("dst"), F.col("src").alias("__n"))
+    )
+    is_child = F.max(F.col("src").isNull().cast("long")).over(Window.partitionBy("__n"))
+    return rows.select("src", "dst", is_child.alias("__tag")).filter(F.col("src").isNotNull())
+
+
+def _star_components(edges: DataFrame) -> tuple[DataFrame, list[int]]:
+    """Alternating large-star/small-star rounds until the edge set is a
+    forest of stars: O(log n) rounds on ANY graph shape, chains included.
+    Returns (star edges child→root, per-round counts of edges whose
+    parent is still a child); raises NotConverged after STAR_ROUNDS."""
     edges = edges.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint()
-    rounds = 0
-    converged = False
-    for _ in range(max_iter):
-        edges = _star_small(_star_large(edges)).localCheckpoint()
-        rounds += 1
-        # star state: the parent set and the child set are disjoint
-        parents = edges.select(F.col("dst").alias("n")).distinct()
-        children = edges.select(F.col("src").alias("n")).distinct()
-        if parents.join(children, "n").limit(1).count() == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"star components did not reach star state in {rounds} rounds "
-            f"(max_iter={max_iter}); raise max_iter — emitting the partial "
-            "edge set would produce wrong cluster ids"
-        )
-    return edges, rounds
+    stars, changes = iterate(edges, _star_round, STAR_ROUNDS, changed=F.sum("__tag"))
+    return stars.select("src", "dst"), changes
 
 
-def _observed_checkpoint(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
-    """Eagerly local-checkpoint DF and return it with the values of AGGS
-    (name -> aggregate Column) observed on the job that materializes it,
-    so a count needs no action of its own."""
-    obs = Observation()
-    out = df.observe(obs, *(c.alias(name) for name, c in aggs.items())).localCheckpoint()
-    return out, obs.get
-
-
-def dup_clusters(
-    pairs: DataFrame,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iter: int = 20,
-    broadcast_max_nodes: int = 4_000_000,
-    algorithm: str = "propagate",
-) -> DataFrame:
-    """Resolve near-dup PAIRS into connected-component CLUSTERS —
-    (doc_id, cluster_id = smallest reachable id) — the step that turns any
-    pair generator above into "keep one doc per duplicate group".
-
-    Min-label propagation: each round every node takes the min of its own
-    label and its neighbors' labels, converging in O(component diameter)
-    rounds. Near-dup components are dense and tiny (near-cliques), so
-    diameter is small; for adversarial chain-shaped graphs pass
-    ``algorithm="star"`` to use the alternating large-star/small-star
-    variant (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — O(log n) rounds regardless of diameter, two shuffles per
-    round instead of one.
+def _propagate(e: DataFrame, n_pairs: int) -> DataFrame:
+    """Min-label propagation over the checkpointed (src, dst) pairs E:
+    (doc_id, cluster_id = smallest reachable id). Raises NotConverged
+    after PROPAGATE_ROUNDS rounds.
 
     Round shape: (edges ⋈ labels on dst) ∪ labels, then one min-groupBy —
     a SINGLE shuffle per round. When the node set is small enough
-    (≤ ``broadcast_max_nodes``) the labels side is broadcast, so the edge
+    (≤ BROADCAST_MAX_NODES) the labels side is broadcast, so the edge
     table never shuffles for the join; above that, edges are
     pre-partitioned by dst once and the checkpointed partitioning is
-    reused every round. Lineage is truncated per round with
-    localCheckpoint so the plan does not grow with iterations.
-    Convergence is type-safe for ANY id type (bigint, string, ...): the
-    previous label rides along through the min-groupBy as a second
-    aggregate (each id contributes exactly one non-null ``__prev`` row,
-    so ``max`` recovers it), and the round stops when the count of rows
-    with ``label != __prev`` is 0 — no numeric cast of the label, so
-    string ids cannot silently break the convergence test."""
-    e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    if algorithm == "star":
-        nodes = (
-            e.select(F.col("src").alias("id"))
-            .union(e.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-        stars, _ = _star_components(e, max_iter=max_iter)
-        return (
-            nodes.join(stars, nodes["id"] == stars["src"], "left")
-            .select(
-                F.col("id").alias("doc_id"),
-                F.coalesce(F.col("dst"), F.col("id")).alias("cluster_id"),
-            )
-        )
-    # Every count the loop needs is OBSERVED on the job that materializes
-    # the frame (eager localCheckpoint), never a separate action. The pair
-    # frame is checkpointed before doubling: ReuseExchange does not fire
-    # across the two aliased branches of the union, so checkpointing the
-    # doubled view would evaluate the pair pipeline twice.
-    e, e_obs = _observed_checkpoint(e, n=F.count(F.lit(1)))
-    n_pairs = e_obs["n"]
+    reused every round. Convergence is type-safe for ANY id type (bigint,
+    string, ...): the previous label rides along through the min-groupBy
+    as a second aggregate (each id contributes exactly one non-null
+    ``__prev`` row, so ``max`` recovers it), and the round stops when the
+    count of rows with ``label != __prev`` is 0 — no numeric cast of the
+    label, so string ids cannot silently break the convergence test."""
     edges = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     # Smart init: label = min(own id, min neighbor id) — the first
     # propagation step fused into the init aggregation (same single
@@ -1093,14 +1046,14 @@ def dup_clusters(
     # dedup produces, this IS the fixpoint, so the loop ends after one
     # confirming round instead of two — measured 1.14 s -> 0.83 s on the
     # sf0.1 resolution graph.
-    labels, labels_obs = _observed_checkpoint(
+    labels, labels_obs = observed_checkpoint(
         edges.groupBy(F.col("src").alias("id"))
         .agg(F.min("dst").alias("__mn"))
         .select("id", F.least("id", "__mn").alias("label")),
         n=F.count(F.lit(1)),
     )
     n_nodes = labels_obs["n"]
-    small = n_nodes <= broadcast_max_nodes
+    small = n_nodes <= BROADCAST_MAX_NODES
     if small:
         # Right-size the per-round task width from the materialized
         # counts. In the small path the labels side broadcasts, so the
@@ -1110,48 +1063,74 @@ def dup_clusters(
         # (r6 review): dense near-clique dup graphs have edges ~
         # Σclique², so a node-count divisor could collapse billions of
         # doubled edge rows onto a handful of tasks.
-        k = max(1, -(-(2 * n_pairs) // 250_000))
-        edges = edges.coalesce(k)
+        edges = edges.coalesce(max(1, -(-(2 * n_pairs) // 250_000)))
         label_width = max(1, -(-n_nodes // 250_000))
-        labels = labels.coalesce(label_width)
     else:
         # large path: pre-partition the doubled edges by dst ONCE and
         # checkpoint, so every round's sort-merge join reuses the
         # partitioning instead of re-shuffling the edge table
         edges = edges.repartition("dst").localCheckpoint()
     label_t = dict(labels.dtypes)["label"]
-    n_changed: int | None = None  # None = no round ever ran (max_iter=0)
-    for _ in range(max_iter):
+
+    def current(state: DataFrame) -> DataFrame:
+        # the node-sized width is re-applied EVERY round (ADVICE r6): a
+        # round's groupBy resets labels to the default shuffle width.
+        # Narrow coalesce on the checkpointed frame — recompute-free.
+        labels = state.select("id", "label")
+        return labels.coalesce(label_width) if small else labels
+
+    def step(state: DataFrame) -> DataFrame:
+        labels = current(state)
         rhs = F.broadcast(labels) if small else labels
         nbr = (
             edges.join(rhs, edges["dst"] == rhs["id"])
             .select(F.col("src").alias("id"), "label")
             .withColumn("__prev", F.lit(None).cast(label_t))
         )
-        updated, round_obs = _observed_checkpoint(
+        return (
             nbr.union(labels.withColumn("__prev", F.col("label")))
             .groupBy("id")
-            .agg(F.min("label").alias("label"), F.max("__prev").alias("__prev")),
-            c=F.sum((F.col("label") != F.col("__prev")).cast("long")),
+            .agg(F.min("label").alias("label"), F.max("__prev").alias("__prev"))
         )
-        n_changed = round_obs["c"] or 0  # SUM over no rows is NULL
-        labels = updated.drop("__prev")
-        if small:
-            # Re-apply the node-sized width EVERY round (ADVICE r6): the
-            # groupBy above reset labels to default shuffle width, so
-            # without this only round 1 ran narrow. Narrow coalesce on
-            # the checkpointed frame — recompute-free, like the init.
-            labels = labels.coalesce(label_width)
-        if n_changed == 0:
-            break
-    else:  # loop exhausted without the zero-change round
-        raise RuntimeError(
-            f"min-label propagation still changing after max_iter={max_iter} "
-            f"rounds ({n_changed} labels moved last round); raise max_iter or "
-            "use algorithm='star' (O(log n) on chain-shaped graphs) — "
-            "partial labels would be wrong cluster ids"
-        )
-    return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
+
+    changed = F.sum((F.col("label") != F.col("__prev")).cast("long"))
+    labels, _ = iterate(labels, step, PROPAGATE_ROUNDS, changed=changed)
+    return current(labels).select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
+
+
+def dup_clusters(pairs: DataFrame) -> DataFrame:
+    """Resolve near-dup PAIRS (id_a, id_b) into connected-component
+    CLUSTERS — (doc_id, cluster_id = smallest reachable id) — the step
+    that turns any pair generator above into "keep one doc per duplicate
+    group".
+
+    Min-label propagation runs first: O(component diameter) rounds, and
+    near-dup components are dense near-cliques. When PROPAGATE_ROUNDS
+    pass without a zero-change round (an adversarial chain), the same
+    checkpointed pairs go to the large-star/small-star rounds (Kiveris et
+    al., "Connected Components in MapReduce and Beyond"), O(log n) rounds
+    regardless of diameter. So the observed change count, not a flag,
+    picks the algorithm. Both loops run on ops/fixpoint.iterate."""
+    # The pair frame is checkpointed before doubling: ReuseExchange does
+    # not fire across the two aliased branches of the union, so
+    # checkpointing the doubled view would run the pair pipeline twice.
+    e, e_obs = observed_checkpoint(
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+        n=F.count(F.lit(1)),
+    )
+    try:
+        return _propagate(e, e_obs["n"])
+    except NotConverged:
+        stars, _ = _star_components(e)
+    nodes = (
+        e.select(F.col("src").alias("id"))
+        .union(e.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+    return nodes.join(stars, nodes["id"] == stars["src"], "left").select(
+        F.col("id").alias("doc_id"),
+        F.coalesce(F.col("dst"), F.col("id")).alias("cluster_id"),
+    )
 
 
 def exact_ngram_contamination(
@@ -1216,8 +1195,6 @@ def span_dedup_retention(
     Both keys are high-cardinality and unskewed (md5 digests; doc ids),
     so the plan is two well-balanced exchanges regardless of corpus size.
     """
-    from pyspark.sql import Window
-
     toks = ensure_min_partitions(df).select(
         F.col(id_col), tokens(text_col).alias("__tokens")
     )
@@ -1326,12 +1303,6 @@ def semantic_dedup(
     wall for 10x data vs 10.76x under sqrt(N) (BENCH_SF1_DIAG.json);
     pass an explicit int only for unit fixtures or an offline-trained
     codebook of known size."""
-    from aos_spark.llm.similarity import (
-        cosine_from_norms,
-        deterministic_centroids,
-        ivf_assign,
-    )
-
     if n_clusters is None:
         # EAGER: this count() runs a Spark job at DataFrame-BUILD time
         # (plan-fingerprint sweeps included). Cheap only when df is a

@@ -15,6 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aos_spark.cache import persist_tracked
+from aos_spark.ops.fixpoint import iterate
+
 # edge-list rows per partition for count-adaptive coalesce: small enough
 # that a partition's joins stay in memory, large enough that a tiny graph
 # collapses to one task instead of 32 near-empty ones
@@ -30,6 +33,20 @@ def _sized(e: DataFrame, n: int) -> DataFrame:
     Runtime-count-driven, so correct at both extremes."""
     parts = max(1, -(-n // _EDGE_ROWS_PER_PART))
     return e.coalesce(parts)
+
+
+def _canonical_edges(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """The undirected edge list (a < b; self-loops dropped, duplicates
+    merged), persisted, materialized by a count and ``_sized`` by it."""
+    e = persist_tracked(
+        pairs.select(
+            F.least(F.col(a_col), F.col(b_col)).alias("a"),
+            F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
+        )
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+    return _sized(e, e.count())
 
 
 def triangle_count(
@@ -50,27 +67,8 @@ def triangle_count(
     broadcast-sized edge list broadcasts (measured 5.3 s -> 2.2 s warm
     at sf0.1), while an edge list past the broadcast threshold keeps
     sort-merge — the right call either way, decided by stats instead of
-    guesswork.
-
-    The count also right-sizes the edge list's partitioning: the pair
-    pipeline inherits the corpus's partition count (32+), but the edge
-    list it collapses to is often tiny, and every downstream stage then
-    pays full-width task-scheduling overhead for a few hundred rows per
-    task — measured 2.1 s -> 0.5 s on the orient step alone at sf0.1
-    (12.5k edges x 6 joins). ``_sized`` coalesces to ceil(n/100k)
-    partitions — a no-op on genuinely large edge lists, so the decision
-    is driven by the runtime count, never a guess."""
-    from aos_spark.cache import persist_tracked
-
-    e = persist_tracked(
-        pairs.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("a"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    e = _sized(e, e.count())
+    guesswork. The count also right-sizes the edge list (``_sized``)."""
+    e = _canonical_edges(pairs, a_col, b_col)
     deg = (
         e.select(F.col("a").alias("n")).union(e.select("b"))
         .groupBy("n")
@@ -114,10 +112,9 @@ def pagerank_step(
 
     Every node must have outdeg ≥ 1 (no dangling handling here — feed a
     bidirectional edge list, as the gate query does with the
-    buyer-supplier graph, or add self-loops). The full algorithm is this
-    step in a driver loop with localCheckpoint lineage cuts, exactly the
-    dup_clusters pattern; one step is the gate-verified unit (the
-    kmeans_lloyd_step precedent).
+    buyer-supplier graph, or add self-loops). The full algorithm is
+    ``pagerank`` below, fixed rounds on ops/fixpoint.iterate; one step is
+    the gate-verified unit (the kmeans_lloyd_step precedent).
 
     Physical shape: outdeg agg (src-keyed X) → contribution join on the
     SAME src partitioning → dst-keyed rank agg (map-side combined) → a
@@ -166,8 +163,8 @@ def pagerank(
     """Full PageRank power iteration: ``iterations`` rounds of the
     micro-unit step with ranks carried as BIGINT micro-units end to end,
     so every iteration is partitioning-independent and the composition is
-    too (no float accumulation ever crosses a shuffle). Driver-loop +
-    localCheckpoint per round — the dup_clusters pattern; each round is
+    too (no float accumulation ever crosses a shuffle). The rounds run on
+    ops/fixpoint.iterate (a local checkpoint per round); each round is
     one src-keyed contribution join + one dst-keyed aggregate.
 
     rank_{t+1}(v) = (1−d)·10¹² + d-weighted Σ round(rank_t(u)/outdeg(u))
@@ -178,47 +175,26 @@ def pagerank(
     per node, the unnormalized convention of pagerank_step). Requires
     outdeg ≥ 1 for every node (bidirectional edge lists).
     """
-    from aos_spark.cache import persist_tracked
-
     e = persist_tracked(edges.select(F.col(src).alias("s"), F.col(dst).alias("d")))
-    outdeg = persist_tracked(
-        e.groupBy("s").agg(F.count(F.lit(1)).alias("od"))
-    )
-    ranks = outdeg.select("s", F.lit(10**12).alias("r"))  # nodes = sources
-    for _ in range(iterations):
-        contrib = (
-            e.join(ranks, "s")
-            .join(outdeg, "s")
-            .select(
-                F.col("d"),
-                F.round(
-                    F.lit(damping)
-                    * F.round(F.col("r") / F.col("od"), 0),
-                    0,
-                )
-                .cast("long")
-                .alias("c"),
-            )
-        )
+    outdeg = persist_tracked(e.groupBy("s").agg(F.count(F.lit(1)).alias("od")))
+    teleport = F.lit(int(round((1.0 - damping) * 10**12)))
+    c = F.round(F.lit(damping) * F.round(F.col("r") / F.col("od"), 0), 0).cast("long")
+
+    def step(ranks: DataFrame) -> DataFrame:
+        contrib = e.join(ranks, "s").join(outdeg, "s").select(F.col("d"), c.alias("c"))
         # LEFT from the node universe: a node nobody links to keeps the
         # teleport mass and keeps CONTRIBUTING on its out-edges next round
         # — the inner-join form silently dropped it after round 1 and
         # lost its recurring contributions (review catch)
-        incoming = contrib.groupBy(F.col("d").alias("s")).agg(
-            F.sum("c").alias("__in")
-        )
-        ranks = (
+        incoming = contrib.groupBy(F.col("d").alias("s")).agg(F.sum("c").alias("__in"))
+        return (
             outdeg.select("s")
             .join(incoming, "s", "left")
-            .select(
-                "s",
-                (
-                    F.lit(int(round((1.0 - damping) * 10**12)))
-                    + F.coalesce(F.col("__in"), F.lit(0))
-                ).alias("r"),
-            )
-            .localCheckpoint(eager=True)
+            .select("s", (teleport + F.coalesce(F.col("__in"), F.lit(0))).alias("r"))
         )
+
+    # nodes = sources, each starting at rank 1 (10¹² micro-units)
+    ranks, _ = iterate(outdeg.select("s", F.lit(10**12).alias("r")), step, iterations)
     return ranks.select(
         F.col("s").alias("node"),
         F.round(F.col("r") / F.lit(1e12), 6).alias("rank"),
@@ -253,20 +229,9 @@ def common_neighbor_scores(
     since sharing a celebrity neighbor is weak evidence); the Jaccard
     denominator still uses FULL degrees, so admitted scores are never
     inflated. None disables (exact)."""
-    from aos_spark.cache import persist_tracked
-
-    e = persist_tracked(
-        pairs.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("a"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    # materialize + right-size (same rationale as triangle_count: the
-    # cached edge list is often tiny relative to the pair pipeline's
-    # partitioning, and this operator chains SIX joins over it)
-    e = _sized(e, e.count())
+    # materialized + right-sized as in triangle_count: this operator
+    # chains SIX joins over the cached edge list
+    e = _canonical_edges(pairs, a_col, b_col)
     und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     centers = und

@@ -561,8 +561,8 @@ def q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     the VOCAB frame) → frequency-weighted pair counts → top-20 merge
     candidates via the window-free global top-k. The full trainer is
     this step in a driver loop re-tokenizing against the merged symbol
-    (the dup_clusters/pagerank loop pattern); one step is the
-    gate-verified unit (the kmeans_lloyd_step precedent)."""
+    (fixed rounds on ops/fixpoint.iterate, as graph.pagerank runs); one
+    step is the gate-verified unit (the kmeans_lloyd_step precedent)."""
     d = read_sf_table(spark, sf_dir, "documents")
     words = (
         d.select(F.explode(tokens()).alias("word"))

@@ -21,8 +21,9 @@ Usage: python scripts/scale_smoke.py <suite> [size]
   megadoc   doc tokens, millions (3)  PPJoin at the default heap with one
                                       giant document among 50k ordinary ones
                                       (the per-doc shingle cap must hold)
-  doubling  docs, millions (1)        PPJoin and star dup_clusters on a
-                                      parquet-materialized corpus
+  doubling  docs, millions (1)        PPJoin and dup_clusters forced onto the
+                                      star rounds, on a parquet-materialized
+                                      corpus
 
 The last stdout line is {"suite", "size", "timings": {name: seconds}}.
 """
@@ -449,7 +450,7 @@ def suite_megadoc(spark, size, results):
 
 
 def suite_doubling(spark, size, results):
-    from aos_spark.llm.dedup import dup_clusters
+    from aos_spark.llm import dedup
     from aos_spark.llm.setjoin import ppjoin_pairs
 
     n_docs = int(size * 1_000_000)
@@ -464,6 +465,7 @@ def suite_doubling(spark, size, results):
     # ~8 plus random cross links that glue chains into high-diameter
     # components — exactly the shape where O(diameter) propagation is the
     # wrong tool and the O(log n) star algorithm is the scale path.
+    # PROPAGATE_ROUNDS = 0 sends the pairs straight to the star rounds.
     pairs = (
         spark.range(n_docs)
         .select(
@@ -474,11 +476,8 @@ def suite_doubling(spark, size, results):
         )
         .filter(F.col("id_a") != F.col("id_b"))
     )
-    timed(
-        f"dup_clusters_{n_docs}nodes_star",
-        lambda: dup_clusters(pairs, algorithm="star"),
-        results,
-    )
+    dedup.PROPAGATE_ROUNDS = 0
+    timed(f"dup_clusters_{n_docs}nodes_star", lambda: dedup.dup_clusters(pairs), results)
 
 
 SUITES = {

@@ -96,15 +96,14 @@ def test_kmeans_fit_centroid_shape_and_determinism(spark, monkeypatch):
     per-round ensure_min_partitions re-ran a plan-to-RDD conversion and
     the round-robin shuffle), and its centroids equal the per-round loop
     of the public step exactly."""
-    from aos_spark.llm import dedup
     from aos_spark.llm.cluster import kmeans_fit
 
     rows = [(i, [float((i * 7) % 11), float((i * 5) % 13)]) for i in range(60)]
     df = _vecs(spark, rows)
     calls = []
-    real = dedup.ensure_min_partitions
+    real = C.ensure_min_partitions
     monkeypatch.setattr(
-        dedup, "ensure_min_partitions", lambda f, *a: calls.append(f) or real(f, *a)
+        C, "ensure_min_partitions", lambda f, *a: calls.append(f) or real(f, *a)
     )
     c1 = kmeans_fit(df, k=3, n_iter=3)
     assert len(calls) == 1

@@ -143,27 +143,57 @@ def test_star_components_path_graph_logarithmic_rounds(spark):
     edges = spark.range(n - 1).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )
-    stars, rounds = _star_components(edges)
-    assert rounds <= 20  # O(log n); a propagation pass would need ~n rounds
+    stars, changes = _star_components(edges)
+    # one change count per round, the last one 0
+    assert changes[-1] == 0 and all(c > 0 for c in changes[:-1])
+    assert len(changes) <= 20  # O(log n); a propagation pass would need ~n rounds
     got = stars.select("src", "dst").collect()
     assert {r["dst"] for r in got} == {0}  # every node points at the root
     assert {r["src"] for r in got} == set(range(1, n))
 
 
-def test_dup_clusters_star_matches_propagate(spark):
-    """Both algorithms must produce identical (doc_id, cluster_id) labels
-    on a mixed graph: chain + clique + isolated pair + string-free ints."""
-    from aos_spark.llm.dedup import dup_clusters
+MIXED_GRAPH = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (10, 12), (11, 12), (20, 21)]
 
-    raw = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (10, 12), (11, 12), (20, 21)]
-    pairs = spark.createDataFrame(raw, ["id_a", "id_b"])
-    prop = {r["doc_id"]: r["cluster_id"] for r in dup_clusters(pairs).collect()}
-    star = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dup_clusters(pairs, algorithm="star").collect()
-    }
+
+def test_dup_clusters_star_matches_propagate(spark, monkeypatch):
+    """Both algorithms must produce identical (doc_id, cluster_id) labels
+    on a mixed graph: chain + clique + isolated pair + string-free ints.
+    PROPAGATE_ROUNDS = 0 leaves propagation unconverged, which hands the
+    pairs to the star rounds."""
+    from aos_spark.llm import dedup
+
+    pairs = spark.createDataFrame(MIXED_GRAPH, ["id_a", "id_b"])
+    prop = {r["doc_id"]: r["cluster_id"] for r in dedup.dup_clusters(pairs).collect()}
+    monkeypatch.setattr(dedup, "PROPAGATE_ROUNDS", 0)
+    star = {r["doc_id"]: r["cluster_id"] for r in dedup.dup_clusters(pairs).collect()}
     assert prop == star
     assert star == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+
+
+def test_dup_clusters_large_path_matches_broadcast_path(spark, monkeypatch):
+    """Above BROADCAST_MAX_NODES the labels are not broadcast: the doubled
+    edges are partitioned by dst once and every round sort-merge joins.
+    Both paths give the same labels on the chain, string-id and mixed
+    graphs."""
+    from aos_spark.llm import dedup
+
+    graphs = [
+        spark.createDataFrame([(1, 2), (2, 3), (3, 4), (10, 11)], ["id_a", "id_b"]),
+        spark.createDataFrame(
+            [("doc-a", "doc-b"), ("doc-b", "doc-c"), ("doc-c", "doc-d"), ("x", "y")],
+            ["id_a", "id_b"],
+        ),
+        spark.createDataFrame(MIXED_GRAPH, ["id_a", "id_b"]),
+    ]
+
+    def labels(pairs):
+        return {r["doc_id"]: r["cluster_id"] for r in dedup.dup_clusters(pairs).collect()}
+
+    small = [labels(g) for g in graphs]
+    monkeypatch.setattr(dedup, "BROADCAST_MAX_NODES", 0)
+    large = [labels(g) for g in graphs]
+    assert large == small
+    assert large[0] == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
 def test_cross_contamination_finds_planted_leak(spark):
@@ -243,21 +273,26 @@ def test_sliding_window_chunks_spans(spark):
     assert [(r["tok_len"], r["chunk_text"]) for r in by_doc[3]] == [(0, "")]
 
 
-def test_components_raise_on_max_iter_exhaustion(spark):
+def test_components_raise_on_max_iter_exhaustion(spark, monkeypatch):
     """ADVICE r4: a partially-converged component run must fail loud, not
-    silently emit wrong cluster ids — both algorithms."""
+    silently emit wrong cluster ids. Propagation that runs out of rounds
+    hands the pairs to the star rounds, which give the right labels; star
+    running out of its own rounds raises NotConverged."""
     import pytest
 
-    from aos_spark.llm.dedup import dup_clusters
+    from aos_spark.llm import dedup
+    from aos_spark.ops.fixpoint import NotConverged
 
-    # a 12-node path needs ~diameter rounds to propagate; 1 round cannot
+    # a 13-node path needs ~diameter rounds to propagate; 1 round cannot
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], ["id_a", "id_b"]
     )
-    with pytest.raises(RuntimeError, match="max_iter"):
-        dup_clusters(pairs, max_iter=1, algorithm="propagate").collect()
-    with pytest.raises(RuntimeError, match="max_iter"):
-        dup_clusters(pairs, max_iter=1, algorithm="star").collect()
+    monkeypatch.setattr(dedup, "PROPAGATE_ROUNDS", 1)
+    got = {r["doc_id"]: r["cluster_id"] for r in dedup.dup_clusters(pairs).collect()}
+    assert got == {i: 0 for i in range(13)}
+    monkeypatch.setattr(dedup, "STAR_ROUNDS", 1)
+    with pytest.raises(NotConverged):
+        dedup.dup_clusters(pairs)
 
 
 def test_incremental_dedup_classifies_batch(spark):

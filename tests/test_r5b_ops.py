@@ -195,6 +195,30 @@ def test_mad_groups_are_independent(spark):
     assert out["a"]["n_outliers"] == out["b"]["n_outliers"] == 0
 
 
+def test_mad_ranged_shape_equals_window_shape(spark):
+    """The range-partitioned shape (bucket_width set) gives the same rows
+    as the window shape, bit for bit: tied values, an odd-sized group
+    (median = one value) and an even-sized group (median interpolated),
+    under a fine and a coarse bucket width (many values per bucket)."""
+    odd = [4.0, 4.0, 4.0, 7.5, 2.0, 4.0, 90.0]
+    even = [1.25, 3.0, 3.0, 4.5, 8.0, 8.0, -40.0, 9.0]
+    df = spark.createDataFrame(
+        [("odd", i, v) for i, v in enumerate(odd)]
+        + [("even", i, v) for i, v in enumerate(even)],
+        ["grp", "id", "v"],
+    )
+
+    def rows(**kw):
+        return sorted(tuple(r) for r in mad_outliers(df, ["grp"], "v", ["id"], **kw).collect())
+
+    window = rows()
+    assert rows(bucket_width=0.5) == window
+    assert rows(bucket_width=100.0) == window
+    by_grp = {r[0]: r for r in window}
+    assert by_grp["odd"][1:5] == (7, 4.0, 0.0, 3)  # n_rows, median, MAD, outliers
+    assert by_grp["even"][1:5] == (8, 3.75, 3.375, 1)
+
+
 # ------------------------------------------------------------ session paths
 def test_session_paths_counts_and_rank(spark):
     from aos_spark.ops.sequences import session_paths
